@@ -1,5 +1,6 @@
-"""HTTP control surface (SURVEY.md §2 B3) — the reference's actix-web
-endpoints re-expressed over the library primitives.
+"""HTTP control and read surface (SURVEY.md §2 B3) — the reference's
+actix-web endpoints re-expressed over the library primitives, plus the
+Prometheus HTTP read API over the metric engine.
 
 The reference server (server/src/main.rs:59-80) exposes exactly three
 endpoints on the storage node: ``GET /`` (hello), ``GET /toggle`` (pause /
@@ -9,22 +10,85 @@ a driver-side control plane, NOT a data path: queries stay in Spark, and at
 cluster scale this runs next to the driver the way the reference's actix
 app runs next to its storage (main.rs:82-116).
 
-Extra read-only endpoints: ``GET /manifest`` surfaces the SST list the CLI
-prints, and ``GET /scan?predicate=...&limit=N`` serves a BOUNDED
-merge-on-read peek as JSON (limit capped at 1000) — debugging/observability
-hooks a real deployment needs. Analytical queries stay in Spark; the scan
-endpoint is a row-bounded driver-side read, never a data path.
+Every request goes through one route table (``ControlServer._routes``)
+keyed on the parsed URL path; the one parameterised path,
+``/api/v1/label/<name>/values``, has its own entry. The dispatcher does the
+shared plumbing once: it parses the query string — and the form body of a
+POST — into one params dict, refuses engine-backed routes while no metric
+engine is attached, and maps what a route raises to a reply: input errors
+to 400 ``bad_data``, anything else to 422 ``execution`` plus one log line.
+
+- Control: ``/``, ``/toggle``, ``/compact``, ``/manifest``, and
+  ``/scan?predicate=...&limit=N``, a BOUNDED merge-on-read peek (limit
+  capped at 1000, at most four at once) — a debugging hook, never a data
+  path.
+- PromQL (the read RFC's contract,
+  docs/rfcs/20220702-prometheus-read-extension.md): ``/api/v1/query`` and
+  ``/api/v1/query_range`` share one request path and differ only in the
+  evaluation window and the result shape (vector vs matrix).
+- Prometheus metadata and operations: labels, label values, series,
+  fields, metadata, exemplars, rules, alerts, ``/federate``, TSDB status
+  and build info.
+- ``POST /api/v1/write``: the remote-write receiver.
 """
 
 from __future__ import annotations
 
+import collections
+import functools
 import json
+import logging
+import math
+import re
 import threading
+from dataclasses import dataclass
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from typing import Callable
+from urllib.parse import parse_qs, unquote, urlparse
 
+from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
+
+from horaedb_spark.metric.engine import MetricEngine, matches_labels
+from horaedb_spark.metric.ingest import (
+    decode_exemplars,
+    decode_metadata,
+    decode_write_request,
+)
+from horaedb_spark.metric.promql import (
+    PromQLCompiler,
+    Selector,
+    _duration_ms,
+    parse_promql,
+)
+from horaedb_spark.metric.rules import AlertingRule, evaluate_alert_states
 from horaedb_spark.storage.compaction import Compactor
+from horaedb_spark.storage.table import ScanRequest
+
+log = logging.getLogger(__name__)
 
 _FIVE_MIN_MS = 300_000
+_MAX_BODY = 8 * 1024 * 1024
+_LABEL_VALUES = re.compile(r"/api/v1/label/([^/]+)/values")
+# What a request's own input causes: a bad or missing parameter, PromQL
+# that does not parse (PromQLError is a ValueError), a malformed
+# remote-write payload, a /scan predicate Spark cannot analyse. Everything
+# else a route raises is an execution error (Prometheus's 422).
+_BAD_INPUT = (ValueError, AnalysisException)
+# Grafana probes this when validating a Prometheus datasource; serve the
+# minimal envelope it checks.
+_BUILDINFO = {
+    "status": "success",
+    "data": {"application": "horaedb-spark", "version": "0.1.0", "features": {}},
+}
+
+
+def _seconds_ms(raw: str) -> int:
+    """A Prometheus duration parameter in ms: a bare or float number is
+    seconds (``60``, ``1.5``), anything else a duration string (``1m``)."""
+    if raw.replace(".", "", 1).isdigit():
+        return int(float(raw) * 1000)
+    return _duration_ms(raw)
 
 
 def _lookback_ms(lb_raw: str | None, step_ms: int) -> int | None:
@@ -39,18 +103,81 @@ def _lookback_ms(lb_raw: str | None, step_ms: int) -> int | None:
     sparse data yields empty vectors, the documented reason the engine
     diverges there."""
     if lb_raw is not None:
-        return (
-            int(float(lb_raw) * 1000)
-            if lb_raw.replace(".", "", 1).isdigit()
-            else _srv_duration_ms(lb_raw)
-        )
+        return _seconds_ms(lb_raw)
     return _FIVE_MIN_MS if step_ms < _FIVE_MIN_MS else None
 
 
-def _srv_duration_ms(raw: str) -> int:
-    from horaedb_spark.metric.promql import _duration_ms
+def _labels(series_key: str) -> dict[str, str]:
+    """The label dict of a ``k=v,k=v`` series key."""
+    return dict(kv.split("=", 1) for kv in series_key.split(",") if "=" in kv)
 
-    return _duration_ms(raw)
+
+def _selector(text: str, param: str) -> Selector:
+    sel = parse_promql(text)
+    if not isinstance(sel, Selector):
+        raise ValueError(f"{param} must be a series selector")
+    return sel
+
+
+class _HTTPError(Exception):
+    """A reply with a status of its own (404, 413, 415, 429)."""
+
+    def __init__(self, status: int, error: str, error_type: str = "bad_data"):
+        super().__init__(error)
+        self.status = status
+        self.error_type = error_type
+
+
+_REQUIRED = object()
+
+
+class _Request:
+    """One request as a route sees it: the params (query string, plus the
+    form body of a POST), the headers and the raw body."""
+
+    def __init__(self, params: dict[str, list[str]], headers, body: bytes):
+        self.params = params
+        self.headers = headers
+        self.body = body
+
+    def get(self, name: str, default=_REQUIRED):
+        vals = self.params.get(name)
+        if vals:
+            return vals[0]
+        if default is _REQUIRED:
+            raise ValueError(f"missing {name} parameter")
+        return default
+
+    def capped_int(self, name: str, default: int, cap: int) -> int:
+        """A non-negative integer parameter (a row limit), clamped to cap."""
+        n = int(self.get(name, default))
+        if n < 0:
+            raise ValueError(f"{name} must not be negative")
+        return min(n, cap)
+
+    def unix_ms(self, name: str) -> int | None:
+        """A unix-SECONDS parameter (float accepted) in ms, like the
+        Prometheus API, so a response timestamp round-trips as a request
+        bound unchanged. None when absent."""
+        raw = self.get(name, None)
+        if raw is None:
+            return None
+        s = float(raw)
+        if not math.isfinite(s):
+            raise ValueError(f"{name} must be a finite number")
+        return int(s * 1000)
+
+
+@dataclass(frozen=True)
+class _Route:
+    # returns a dict (sent as JSON) or a str (sent as text exposition)
+    fn: Callable[[_Request], dict | str]
+    # reply 400 unless a metric engine or a write table is attached
+    engine: bool = False
+    # A route taking GET and POST reads a POST's form-encoded body as more
+    # params (Prometheus clients, Grafana included, POST long queries); a
+    # POST-only route gets the raw body.
+    methods: tuple[str, ...] = ("GET",)
 
 
 class WriteToggle:
@@ -77,7 +204,10 @@ class WriteToggle:
 
 
 class ControlServer:
-    """Thin HTTP wrapper: hello / toggle / compact (+ manifest)."""
+    """The HTTP server: the reference's control endpoints plus the
+    Prometheus read and remote-write API, all dispatched through one route
+    table (see the module docstring). ``start`` serves on a daemon thread;
+    ``port`` is the bound port (pass ``port=0`` for an ephemeral one)."""
 
     def __init__(
         self,
@@ -103,8 +233,6 @@ class ControlServer:
         # bounded in-memory circular buffer (storage/exemplar), so a deque
         # with maxlen is the faithful model — operational state, never a
         # data path.
-        import collections
-
         self.metadata: dict[str, dict] = {}
         self.exemplars: collections.deque = collections.deque(maxlen=100_000)
         # /scan is a debug peek with a per-REQUEST row cap; without a
@@ -143,927 +271,48 @@ class ControlServer:
         # paths — release is a with-statement.
         self._qr_gates = [threading.Lock() for _ in range(64)]
         self.query_cache_stats = {"hits": 0, "misses": 0, "computes": 0}
+
+        form = ("GET", "POST")
+        self._routes: dict[str, _Route] = {
+            # main.rs:59-61: hello
+            "/": _Route(lambda req: {"hello": "horaedb-spark"}),
+            # main.rs:63-73: flip the synthetic writer
+            "/toggle": _Route(lambda req: {"writing": self.toggle.toggle()}),
+            "/compact": _Route(self._compact),
+            "/manifest": _Route(self._manifest),
+            "/scan": _Route(self._scan),
+            "/api/v1/query": _Route(
+                functools.partial(self._promql, instant=True),
+                engine=True, methods=form,
+            ),
+            "/api/v1/query_range": _Route(
+                functools.partial(self._promql, instant=False),
+                engine=True, methods=form,
+            ),
+            "/api/v1/labels": _Route(self._label_names, engine=True, methods=form),
+            "/api/v1/label/<name>/values": _Route(self._label_values, engine=True),
+            "/api/v1/series": _Route(self._series, engine=True, methods=form),
+            "/api/v1/fields": _Route(self._fields, engine=True),
+            "/api/v1/metadata": _Route(self._list_metadata),
+            "/api/v1/query_exemplars": _Route(self._query_exemplars, methods=form),
+            "/api/v1/rules": _Route(self._list_rules),
+            "/api/v1/alerts": _Route(self._list_alerts, engine=True),
+            "/federate": _Route(self._federate, engine=True),
+            "/api/v1/status/tsdb": _Route(self._tsdb_status, engine=True),
+            "/api/v1/status/buildinfo": _Route(lambda req: _BUILDINFO),
+            "/api/v1/write": _Route(self._remote_write, methods=("POST",)),
+        }
         outer = self
 
         class Handler(BaseHTTPRequestHandler):
             def log_message(self, *args) -> None:  # quiet
                 pass
 
-            def _reply(self, payload: dict, status: int = 200) -> None:
-                body = json.dumps(payload).encode()
-                self.send_response(status)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
-                self.end_headers()
-                self.wfile.write(body)
-
             def do_GET(self) -> None:  # noqa: N802 (http.server API)
-                if self.path == "/":
-                    # main.rs:59-61: hello
-                    self._reply({"hello": "horaedb-spark"})
-                elif self.path == "/toggle":
-                    # main.rs:63-73: flip the synthetic writer
-                    self._reply({"writing": outer.toggle.toggle()})
-                elif self.path == "/compact":
-                    # main.rs:75-80: manual compaction trigger; run_once keeps
-                    # the handler synchronous like the reference's await
-                    sst = outer.compactor.run_once()
-                    self._reply({"compacted": sst is not None,
-                                 "new_sst": sst.file_id if sst else None})
-                elif self.path.startswith("/scan"):
-                    from urllib.parse import parse_qs, urlparse
+                outer._dispatch(self)
 
-                    from horaedb_spark.storage.table import ScanRequest
-
-                    q = parse_qs(urlparse(self.path).query)
-                    pred = q.get("predicate", [None])[0]
-                    if not outer._scan_gate.acquire(blocking=False):
-                        self._reply(
-                            {"error": "too many concurrent /scan requests"},
-                            status=429,
-                        )
-                        return
-                    try:
-                        limit = min(int(q.get("limit", ["100"])[0]), 1000)
-                        df = outer.compactor.table.scan(
-                            ScanRequest(predicate=pred, ordered=True)
-                        ).limit(limit)
-                        rows = [r.asDict() for r in df.collect()]
-                    except Exception as e:  # bad predicate -> client error
-                        self._reply({"error": str(e)[:500]}, status=400)
-                        return
-                    finally:
-                        outer._scan_gate.release()
-                    self._reply({"n": len(rows), "rows": rows})
-                elif self.path.startswith("/api/v1/query?") or self.path == "/api/v1/query":
-                    # Prometheus INSTANT query: ?query=<promql>[&time=<s>]
-                    # [&step=<dur>] — evaluates at the single aligned step
-                    # containing `time` (default: the latest step with
-                    # data). resultType "vector", one [ts, "v"] per series
-                    # — the other half of the Prometheus read API
-                    # (docs/rfcs/20220702-prometheus-read-extension.md).
-                    # The step-grid engine needs a resolution, so `step`
-                    # is accepted like query_range (default 1d).
-                    from urllib.parse import parse_qs, urlparse
-
-                    if outer.metric_engine is None and outer.write_table is None:
-                        self._reply(
-                            {"status": "error",
-                             "error": "no metric engine attached"},
-                            status=400,
-                        )
-                        return
-                    from horaedb_spark.metric.promql import (
-                        PromQLCompiler,
-                        PromQLError,
-                        _duration_ms,
-                    )
-
-                    q = parse_qs(urlparse(self.path).query)
-                    try:
-                        query = q["query"][0]
-                        step_raw = q.get("step", ["1d"])[0]
-                        step_ms = (
-                            int(step_raw)
-                            if step_raw.isdigit()
-                            else _duration_ms(step_raw)
-                        )
-                        # Prometheus's per-request lookback_delta; absent,
-                        # sub-5m grids default to Prometheus's 5m staleness
-                        # window (DIVERGENCES #24a)
-                        lookback_ms = _lookback_ms(
-                            q.get("lookback_delta", [None])[0], step_ms
-                        )
-                        cap = min(int(q.get("limit", ["10000"])[0]), 100_000)
-                        # same repeated-query cache as query_range, keyed on
-                        # the STEP-ALIGNED evaluation instant (computable
-                        # from the raw param without the engine): time=100,
-                        # 100.0 and 100.4 at step 1s all evaluate the same
-                        # aligned step, so they share one entry instead of
-                        # each paying a full compute (ADVICE r13; raw-string
-                        # keying before). When `time` is absent the default
-                        # latest-step lookup is itself a Spark job, and with
-                        # an unchanged store version its result is
-                        # deterministic — a hit skips that job too.
-                        if "time" in q:
-                            t_ms = int(float(q["time"][0]) * 1000)
-                            aligned_ms = t_ms - t_ms % step_ms
-                        else:
-                            aligned_ms = None
-                        cache_key = (
-                            "instant", query, step_ms,
-                            aligned_ms, lookback_ms, cap,
-                            outer._serving_version(),
-                        )
-                        def _compute() -> dict:
-                            eng = outer._query_engine()
-                            if aligned_ms is not None:
-                                at_ms = aligned_ms
-                            else:  # default: latest aligned step with data
-                                at_ms = PromQLCompiler(
-                                    eng, step_ms
-                                )._bounds()[1]
-                            df = PromQLCompiler(
-                                eng,
-                                step_ms,
-                                lookback_ms,
-                                start_ms=at_ms,
-                                end_ms=at_ms,
-                            ).compile(query)
-                            from pyspark.sql import functions as F
-
-                            rows = (
-                                df.filter(F.col("ts_ms") == at_ms)
-                                .orderBy("series_key")
-                                .limit(cap)
-                                .collect()
-                            )
-                            result = [
-                                {
-                                    "metric": dict(
-                                        kv.split("=", 1)
-                                        for kv in r["series_key"].split(",")
-                                        if "=" in kv
-                                    ),
-                                    "value": [
-                                        r["ts_ms"] / 1000.0, str(r["value"])
-                                    ],
-                                }
-                                for r in rows
-                            ]
-                            return {
-                                "status": "success",
-                                "data": {
-                                    "resultType": "vector", "result": result
-                                },
-                            }
-
-                        payload = outer._qr_cached(cache_key, _compute)
-                    except (PromQLError, KeyError, ValueError) as e:
-                        self._reply(
-                            {"status": "error", "error": str(e)[:500]},
-                            status=400,
-                        )
-                        return
-                    self._reply(payload)
-                elif self.path.startswith("/api/v1/query_range"):
-                    # Prometheus HTTP API shape: ?query=<promql>&step=<dur>
-                    # [&start=<s>&end=<s>] — start/end are unix SECONDS
-                    # (float accepted), matching the Prometheus API, so a
-                    # response timestamp round-trips as a request bound
-                    # unchanged; response is the standard
-                    # {"status","data":{"resultType":"matrix","result":[...]}}
-                    # envelope. Row-bounded like /scan — a dashboard query
-                    # surface, not a bulk-export path.
-                    from urllib.parse import parse_qs, urlparse
-
-                    if outer.metric_engine is None and outer.write_table is None:
-                        self._reply(
-                            {"status": "error",
-                             "error": "no metric engine attached"},
-                            status=400,
-                        )
-                        return
-                    from horaedb_spark.metric.promql import (
-                        PromQLCompiler,
-                        PromQLError,
-                        _duration_ms,
-                    )
-
-                    q = parse_qs(urlparse(self.path).query)
-                    try:
-                        query = q["query"][0]
-                        step_raw = q.get("step", ["1d"])[0]
-                        step_ms = (
-                            int(step_raw)
-                            if step_raw.isdigit()
-                            else _duration_ms(step_raw)
-                        )
-                        # start/end define the evaluation range for
-                        # time()/vector()/absent*() — the Prometheus API
-                        # contract; absent they fall back to the data range
-                        start_ms = (
-                            int(float(q["start"][0]) * 1000)
-                            if "start" in q
-                            else None
-                        )
-                        end_ms = (
-                            int(float(q["end"][0]) * 1000)
-                            if "end" in q
-                            else None
-                        )
-                        # absent lookback_delta: sub-5m grids default to
-                        # Prometheus's 5m staleness window (DIVERGENCES #24a)
-                        lookback_ms = _lookback_ms(
-                            q.get("lookback_delta", [None])[0], step_ms
-                        )
-                        cap = min(int(q.get("limit", ["10000"])[0]), 100_000)
-                        # repeated-dashboard-query fast path: same request
-                        # against the same store version skips compile AND
-                        # collect (see query_cache comment in __init__)
-                        cache_key = (
-                            "range", query, step_ms, start_ms, end_ms,
-                            lookback_ms, cap, outer._serving_version(),
-                        )
-                        def _compute() -> dict:
-                            eng = outer._query_engine()
-                            df = PromQLCompiler(
-                                eng,
-                                step_ms,
-                                lookback_ms,
-                                start_ms=start_ms,
-                                end_ms=end_ms,
-                            ).compile(query)
-                            from pyspark.sql import functions as F
-
-                            if start_ms is not None:
-                                df = df.filter(F.col("ts_ms") >= start_ms)
-                            if end_ms is not None:
-                                # Prometheus treats `end` as INCLUSIVE: a
-                                # response timestamp fed back as `end` must
-                                # still return that sample (round-trip safe).
-                                df = df.filter(F.col("ts_ms") <= end_ms)
-                            rows = (
-                                df.orderBy("series_key", "ts_ms")
-                                .limit(cap)
-                                .collect()
-                            )
-                            series: dict[str, list] = {}
-                            for r in rows:
-                                series.setdefault(r["series_key"], []).append(
-                                    [r["ts_ms"] / 1000.0, str(r["value"])]
-                                )
-                            result = [
-                                {
-                                    "metric": dict(
-                                        kv.split("=", 1)
-                                        for kv in skey.split(",")
-                                        if "=" in kv
-                                    ),
-                                    "values": vals,
-                                }
-                                for skey, vals in sorted(series.items())
-                            ]
-                            return {
-                                "status": "success",
-                                "data": {
-                                    "resultType": "matrix", "result": result
-                                },
-                            }
-
-                        payload = outer._qr_cached(cache_key, _compute)
-                    except (PromQLError, KeyError, ValueError) as e:
-                        self._reply(
-                            {"status": "error", "error": str(e)[:500]},
-                            status=400,
-                        )
-                        return
-                    self._reply(payload)
-                elif self.path.startswith("/api/v1/fields"):
-                    # Multi-field catalog listing (RFC 20240827:106-113):
-                    # the (field_name, field_type) rows of one metric — the
-                    # HTTP counterpart of MetricEngine.fields(), selectable
-                    # in queries via the __field__ matcher. Catalog-bounded
-                    # (rows per metric = its field count); ids stay
-                    # engine-internal.
-                    from urllib.parse import parse_qs, urlparse
-
-                    eng = outer._query_engine()
-                    if eng is None:
-                        self._reply(
-                            {"status": "error",
-                             "error": "no metric engine attached"},
-                            status=400,
-                        )
-                        return
-                    q = parse_qs(urlparse(self.path).query)
-                    metric = q.get("metric", [""])[0]
-                    if not metric:
-                        self._reply(
-                            {"status": "error",
-                             "error": "missing metric parameter"},
-                            status=400,
-                        )
-                        return
-                    rows = sorted(
-                        {
-                            (r["field_name"], r["field_type"])
-                            for r in eng.fields(metric).collect()
-                        }
-                    )
-                    self._reply(
-                        {
-                            "status": "success",
-                            "data": [
-                                {"name": n, "type": t} for n, t in rows
-                            ],
-                        }
-                    )
-                elif self.path.startswith("/api/v1/labels") or self.path.startswith(
-                    "/api/v1/label/"
-                ) or self.path.startswith("/api/v1/series"):
-                    # Prometheus metadata API: label names, label values,
-                    # and series listing by match[] selector — backed by the
-                    # engine's inverted index (RFC D4), all driver-bounded.
-                    from urllib.parse import parse_qs, unquote, urlparse
-
-                    eng = outer._query_engine()
-                    if eng is None:
-                        self._reply(
-                            {"status": "error",
-                             "error": "no metric engine attached"},
-                            status=400,
-                        )
-                        return
-                    from pyspark.sql import functions as F
-
-                    parsed = urlparse(self.path)
-                    q = parse_qs(parsed.query)
-                    try:
-                        if parsed.path == "/api/v1/labels":
-                            names = sorted(
-                                r["tag_key"]
-                                for r in eng.index.select("tag_key")
-                                .distinct()
-                                .collect()
-                            )
-                            self._reply(
-                                {"status": "success",
-                                 "data": ["__name__", *names]}
-                            )
-                        elif parsed.path.startswith("/api/v1/label/"):
-                            name = unquote(
-                                parsed.path[len("/api/v1/label/"):].removesuffix(
-                                    "/values"
-                                )
-                            )
-                            if name == "__name__":
-                                vals = sorted(
-                                    r["metric_name"]
-                                    for r in eng.metrics.select("metric_name")
-                                    .distinct()
-                                    .collect()
-                                )
-                            else:
-                                vals = sorted(
-                                    r["tag_value"]
-                                    for r in eng.index.filter(
-                                        F.col("tag_key") == name
-                                    )
-                                    .select("tag_value")
-                                    .distinct()
-                                    .collect()
-                                )
-                            self._reply({"status": "success", "data": vals})
-                        else:  # /api/v1/series?match[]=selector
-                            from horaedb_spark.metric.promql import (
-                                Selector,
-                                parse_promql,
-                            )
-
-                            sel = parse_promql(q["match[]"][0])
-                            if not isinstance(sel, Selector):
-                                raise ValueError("match[] must be a selector")
-                            tsids = eng.resolve_tsids(
-                                sel.name, list(sel.matchers)
-                            )
-                            cap = min(int(q.get("limit", ["1000"])[0]), 10_000)
-                            keys = (
-                                eng.series.join(tsids, "tsid", "left_semi")
-                                .select("series_key")
-                                .distinct()
-                                .orderBy("series_key")
-                                .limit(cap)
-                                .collect()
-                            )
-                            data = [
-                                {
-                                    "__name__": sel.name,
-                                    **dict(
-                                        kv.split("=", 1)
-                                        for kv in r["series_key"].split(",")
-                                        if "=" in kv
-                                    ),
-                                }
-                                for r in keys
-                            ]
-                            self._reply({"status": "success", "data": data})
-                    except Exception as e:
-                        self._reply(
-                            {"status": "error", "error": str(e)[:500]},
-                            status=400,
-                        )
-                elif self.path == "/api/v1/rules":
-                    # Prometheus rules API: the configured recording +
-                    # alerting rule DEFINITIONS in the standard envelope
-                    # (one group; the reference deployment model is a
-                    # single rule file). No evaluation happens here.
-                    from horaedb_spark.metric.rules import AlertingRule
-
-                    rules_out = []
-                    for r in outer.rules:
-                        if isinstance(r, AlertingRule):
-                            rules_out.append(
-                                {
-                                    "type": "alerting",
-                                    "name": r.name,
-                                    "query": r.expr,
-                                    "duration": r.for_steps
-                                    * r.step_ms
-                                    / 1000.0,
-                                    "state": "unknown",
-                                    "health": "ok",
-                                    "labels": {},
-                                }
-                            )
-                        else:
-                            rules_out.append(
-                                {
-                                    "type": "recording",
-                                    "name": r.name,
-                                    "query": r.expr,
-                                    "health": "ok",
-                                    "labels": {},
-                                }
-                            )
-                    self._reply(
-                        {
-                            "status": "success",
-                            "data": {
-                                "groups": [
-                                    {
-                                        "name": "default",
-                                        "file": "attached",
-                                        "interval": 0,
-                                        "rules": rules_out,
-                                    }
-                                ]
-                            },
-                        }
-                    )
-                elif self.path == "/api/v1/alerts":
-                    # Prometheus alerts API: ACTIVE alerts — every alerting
-                    # rule evaluated over the engine's step grid, reporting
-                    # series whose state at the LATEST evaluated step is
-                    # pending or firing (a series that fired earlier but
-                    # recovered is not active). activeAt is the run start —
-                    # the step the alert entered pending. Driver-bounded
-                    # like the other read endpoints (alert cardinality is
-                    # operational, not data-sized).
-                    eng = outer._query_engine()
-                    if eng is None:
-                        self._reply(
-                            {"status": "error",
-                             "error": "no metric engine attached"},
-                            status=400,
-                        )
-                        return
-                    from pyspark.sql import functions as F
-
-                    from horaedb_spark.metric.promql import PromQLError
-                    from horaedb_spark.metric.rules import (
-                        AlertingRule,
-                        evaluate_alert_states,
-                    )
-
-                    alerts = []
-                    try:
-                        for r in outer.rules:
-                            if not isinstance(r, AlertingRule):
-                                continue
-                            states = evaluate_alert_states(eng, r)
-                            # "now" is the expression's own latest grid
-                            # point (range functions label buckets at the
-                            # bucket start, so the compiler's raw data
-                            # bound overshoots it). One extra metadata-
-                            # sized job per rule — an ops endpoint, not a
-                            # data path.
-                            now_ms = states.agg(F.max("ts_ms")).first()[0]
-                            if now_ms is None:
-                                continue
-                            rows = (
-                                states.filter(F.col("ts_ms") == now_ms)
-                                .orderBy("series_key")
-                                .limit(10_000)
-                                .collect()
-                            )
-                            for row in rows:
-                                alerts.append(
-                                    {
-                                        "labels": {
-                                            "alertname": row["alertname"],
-                                            **dict(
-                                                kv.split("=", 1)
-                                                for kv in row[
-                                                    "series_key"
-                                                ].split(",")
-                                                if "=" in kv
-                                            ),
-                                        },
-                                        "state": row["state"],
-                                        "activeAt": row["active_since_ms"]
-                                        / 1000.0,
-                                        "value": str(row["value"]),
-                                    }
-                                )
-                    except (PromQLError, ValueError) as e:
-                        self._reply(
-                            {"status": "error", "error": str(e)[:500]},
-                            status=400,
-                        )
-                        return
-                    self._reply(
-                        {"status": "success", "data": {"alerts": alerts}}
-                    )
-                elif self.path.startswith("/api/v1/metadata"):
-                    # Prometheus metadata API: metric family -> type/help/
-                    # unit, fed by the MetricMetadata records received on
-                    # /api/v1/write (remote_write.proto; the reference's
-                    # pb_reader parses them on the ingest path). Types are
-                    # lowercased like Prometheus's API.
-                    from urllib.parse import parse_qs, urlparse
-
-                    q = parse_qs(urlparse(self.path).query)
-                    want = q.get("metric", [None])[0]
-                    cap = min(int(q.get("limit", ["1000"])[0]), 10_000)
-                    data: dict[str, list] = {}
-                    for fam, md in sorted(outer.metadata.items()):
-                        if want is not None and fam != want:
-                            continue
-                        if len(data) >= cap:
-                            break
-                        data[fam] = [
-                            {
-                                "type": md["type"].lower(),
-                                "help": md["help"],
-                                "unit": md["unit"],
-                            }
-                        ]
-                    self._reply({"status": "success", "data": data})
-                elif self.path.startswith("/api/v1/query_exemplars"):
-                    # Prometheus exemplars API: ?query=<selector>[&start=
-                    # <s>&end=<s>] over the bounded in-memory exemplar
-                    # buffer — series selected by name + label matchers
-                    # (driver-side evaluation; the buffer is operational-
-                    # sized by construction), grouped by series identity.
-                    from urllib.parse import parse_qs, urlparse
-
-                    from horaedb_spark.metric.engine import matches_labels
-                    from horaedb_spark.metric.promql import (
-                        PromQLError,
-                        Selector,
-                        parse_promql,
-                    )
-
-                    q = parse_qs(urlparse(self.path).query)
-                    try:
-                        sel = parse_promql(q["query"][0])
-                        if not isinstance(sel, Selector):
-                            raise ValueError(
-                                "query must be a series selector"
-                            )
-                        start_ms = (
-                            int(float(q["start"][0]) * 1000)
-                            if "start" in q
-                            else None
-                        )
-                        end_ms = (
-                            int(float(q["end"][0]) * 1000)
-                            if "end" in q
-                            else None
-                        )
-                    except (PromQLError, KeyError, ValueError) as e:
-                        self._reply(
-                            {"status": "error", "error": str(e)[:500]},
-                            status=400,
-                        )
-                        return
-                    matchers = list(sel.matchers)
-                    by_series: dict[tuple, dict] = {}
-                    for ex in outer.exemplars:
-                        if ex["name"] != sel.name:
-                            continue
-                        if not matches_labels(ex["series_labels"], matchers):
-                            continue
-                        if start_ms is not None and ex["ts_ms"] < start_ms:
-                            continue
-                        # end is INCLUSIVE, matching /api/v1/query_range
-                        if end_ms is not None and ex["ts_ms"] > end_ms:
-                            continue
-                        ident = tuple(sorted(ex["series_labels"].items()))
-                        ent = by_series.setdefault(
-                            ident,
-                            {
-                                "seriesLabels": {
-                                    "__name__": sel.name,
-                                    **ex["series_labels"],
-                                },
-                                "exemplars": [],
-                            },
-                        )
-                        ent["exemplars"].append(
-                            {
-                                "labels": ex["labels"],
-                                "value": str(ex["value"]),
-                                "timestamp": ex["ts_ms"] / 1000.0,
-                            }
-                        )
-                    out = [by_series[k] for k in sorted(by_series)]
-                    for ent in out:
-                        ent["exemplars"].sort(key=lambda e: e["timestamp"])
-                    self._reply({"status": "success", "data": out})
-                elif self.path.startswith("/federate"):
-                    # Prometheus federation: current samples for the
-                    # match[] selectors in the text exposition format —
-                    # `name{labels} value timestamp_ms` — so another
-                    # Prometheus can scrape this engine. Serves each
-                    # series' LATEST sample (with its own timestamp, as
-                    # /federate does). Driver-bounded text endpoint.
-                    from urllib.parse import parse_qs, urlparse
-
-                    eng = outer._query_engine()
-                    if eng is None:
-                        self._reply(
-                            {"status": "error",
-                             "error": "no metric engine attached"},
-                            status=400,
-                        )
-                        return
-                    from pyspark.sql import functions as F
-
-                    from horaedb_spark.metric.promql import (
-                        PromQLError,
-                        Selector,
-                        parse_promql,
-                    )
-
-                    q = parse_qs(urlparse(self.path).query)
-                    try:
-                        sels = [parse_promql(m) for m in q.get("match[]", [])]
-                        if not sels or not all(
-                            isinstance(s, Selector) for s in sels
-                        ):
-                            raise ValueError(
-                                "match[] must be one or more selectors"
-                            )
-                        cap = min(int(q.get("limit", ["10000"])[0]), 100_000)
-                        lines = []
-                        for sel in sels:
-                            df = eng.select_series(
-                                sel.name, list(sel.matchers) or None
-                            )
-                            latest = (
-                                df.groupBy("series_key")
-                                .agg(
-                                    F.max_by("value", "ts_ms").alias("value"),
-                                    F.max("ts_ms").alias("ts_ms"),
-                                )
-                                .orderBy("series_key")
-                                .limit(cap)
-                                .collect()
-                            )
-                            for r in latest:
-                                labels = ",".join(
-                                    f'{kv.split("=", 1)[0]}='
-                                    f'"{kv.split("=", 1)[1]}"'
-                                    for kv in r["series_key"].split(",")
-                                    if "=" in kv
-                                )
-                                lines.append(
-                                    f"{sel.name}{{{labels}}} "
-                                    f"{r['value']} {r['ts_ms']}"
-                                )
-                    except (PromQLError, ValueError) as e:
-                        self._reply(
-                            {"status": "error", "error": str(e)[:500]},
-                            status=400,
-                        )
-                        return
-                    body = ("\n".join(lines) + "\n").encode()
-                    self.send_response(200)
-                    self.send_header(
-                        "Content-Type",
-                        "text/plain; version=0.0.4; charset=utf-8",
-                    )
-                    self.send_header("Content-Length", str(len(body)))
-                    self.end_headers()
-                    self.wfile.write(body)
-                elif self.path == "/api/v1/status/tsdb":
-                    # Prometheus TSDB stats: series/label-pair counts and
-                    # the top-10 cardinality offenders — THE debugging
-                    # surface for series explosions. All metadata-grain
-                    # aggregates over the engine's catalog tables (rows ~
-                    # #series, never #samples).
-                    eng = outer._query_engine()
-                    if eng is None:
-                        self._reply(
-                            {"status": "error",
-                             "error": "no metric engine attached"},
-                            status=400,
-                        )
-                        return
-                    from pyspark.sql import functions as F
-
-                    n_series = eng.series.select("tsid").distinct().count()
-                    label_pairs = (
-                        eng.index.select("tag_key", "tag_value")
-                        .distinct()
-                        .count()
-                    )
-                    by_metric = (
-                        eng.series.join(
-                            F.broadcast(
-                                eng.metrics.select(
-                                    "metric_id", "metric_name"
-                                )
-                            ),
-                            "metric_id",
-                        )
-                        .groupBy("metric_name")
-                        .agg(F.countDistinct("tsid").alias("n"))
-                        .orderBy(F.desc("n"), "metric_name")
-                        .limit(10)
-                        .collect()
-                    )
-                    by_label = (
-                        eng.index.groupBy("tag_key")
-                        .agg(F.countDistinct("tag_value").alias("n"))
-                        .orderBy(F.desc("n"), "tag_key")
-                        .limit(10)
-                        .collect()
-                    )
-                    pairs_by_label = (
-                        eng.index.groupBy("tag_key")
-                        .agg(
-                            F.countDistinct("tag_key", "tag_value").alias(
-                                "n"
-                            )
-                        )
-                        .orderBy(F.desc("n"), "tag_key")
-                        .limit(10)
-                        .collect()
-                    )
-                    self._reply(
-                        {
-                            "status": "success",
-                            "data": {
-                                "headStats": {
-                                    "numSeries": n_series,
-                                    "numLabelPairs": label_pairs,
-                                },
-                                "seriesCountByMetricName": [
-                                    {"name": r["metric_name"],
-                                     "value": r["n"]}
-                                    for r in by_metric
-                                ],
-                                "labelValueCountByLabelName": [
-                                    {"name": r["tag_key"], "value": r["n"]}
-                                    for r in by_label
-                                ],
-                                "seriesCountByLabelValuePair": [
-                                    {"name": r["tag_key"], "value": r["n"]}
-                                    for r in pairs_by_label
-                                ],
-                            },
-                        }
-                    )
-                elif self.path == "/api/v1/status/buildinfo":
-                    # Grafana probes this when validating a Prometheus
-                    # datasource; serve the minimal envelope it checks.
-                    self._reply(
-                        {
-                            "status": "success",
-                            "data": {
-                                "application": "horaedb-spark",
-                                "version": "0.1.0",
-                                "features": {},
-                            },
-                        }
-                    )
-                elif self.path == "/manifest":
-                    ssts = outer.compactor.table.manifest.all_ssts()
-                    self._reply({
-                        "n_ssts": len(ssts),
-                        "total_rows": sum(s.num_rows for s in ssts),
-                        "ssts": [s.file_id for s in ssts],
-                    })
-                else:
-                    self._reply({"error": "not found"}, status=404)
-
-            def do_POST(self) -> None:  # noqa: N802 (http.server API)
-                base = self.path.split("?", 1)[0]
-                if base in (
-                    "/api/v1/query",
-                    "/api/v1/query_range",
-                    "/api/v1/series",
-                    "/api/v1/labels",
-                    "/api/v1/query_exemplars",
-                ):
-                    # Prometheus clients (Grafana included) POST these with
-                    # a form-encoded body when the query string is long;
-                    # parameters merge with any URL query string. Delegate
-                    # to the GET handler with the merged path.
-                    try:
-                        n = int(self.headers.get("Content-Length", "0"))
-                        body = self.rfile.read(n).decode() if n else ""
-                    except (ValueError, UnicodeDecodeError):
-                        self._reply(
-                            {"status": "error", "error": "bad form body"},
-                            status=400,
-                        )
-                        return
-                    qs = self.path.split("?", 1)[1] if "?" in self.path else ""
-                    merged = "&".join(p for p in (qs, body) if p)
-                    self.path = base + (f"?{merged}" if merged else "")
-                    self.do_GET()
-                    return
-                if self.path != "/api/v1/write":
-                    self._reply({"error": "not found"}, status=404)
-                    return
-                # Prometheus remote-write receive: a WriteRequest protobuf
-                # in the body (metric/ingest.py wire codec), landed into
-                # the attached ColumnarTable keyed (name, series_key,
-                # ts_ms) — re-sent samples overwrite, never duplicate
-                # (the reference's remote-write ingest contract,
-                # metric_engine/src/types.rs:27-36). This endpoint is the
-                # driver-mediated single-request path; BULK payload decode
-                # is the distributed decode_payloads mapInPandas route.
-                # Divergence: bodies are RAW protobuf — Prometheus's
-                # snappy framing needs a codec this container doesn't
-                # ship (415 tells the client).
-                if outer.write_table is None:
-                    self._reply(
-                        {"error": "no write table attached"}, status=400
-                    )
-                    return
-                if self.headers.get("Content-Encoding", "") == "snappy":
-                    self._reply(
-                        {"error": "snappy framing not supported; "
-                                  "send raw protobuf"},
-                        status=415,
-                    )
-                    return
-                try:
-                    n = int(self.headers.get("Content-Length", "0"))
-                    if not 0 < n <= 8 * 1024 * 1024:
-                        self._reply(
-                            {"error": "body size out of bounds"}, status=413
-                        )
-                        return
-                    body = self.rfile.read(n)
-                    from horaedb_spark.metric.ingest import (
-                        decode_exemplars,
-                        decode_metadata,
-                        decode_write_request,
-                    )
-
-                    # metadata and exemplars ride the same WriteRequest
-                    # (Prometheus sends metadata-only requests too — they
-                    # must land even when no samples are present)
-                    n_md = 0
-                    for md in decode_metadata(body):
-                        if md.get("family_name"):
-                            outer.metadata[md["family_name"]] = md
-                            n_md += 1
-                    exs = decode_exemplars(body)
-                    outer.exemplars.extend(exs)
-
-                    samples = decode_write_request(body)
-                    if not samples:
-                        self._reply(
-                            {"written": 0, "metadata": n_md,
-                             "exemplars": len(exs)}
-                        )
-                        return
-                    rows = [
-                        (
-                            s["name"],
-                            ",".join(
-                                f"{k}={v}"
-                                for k, v in sorted(s["labels"].items())
-                            ),
-                            int(s["ts_ms"]),
-                            float(s["value"]),
-                        )
-                        for s in samples
-                    ]
-                    spark = outer.write_table.spark
-                    df = spark.createDataFrame(
-                        rows,
-                        "name string, series_key string, "
-                        "ts_ms long, value double",
-                    )
-                    ssts = outer.write_table.bulk_ingest(df, "ts_ms")
-                    self._reply(
-                        {
-                            "written": len(rows),
-                            "ssts": [s.file_id for s in ssts],
-                            "metadata": n_md,
-                            "exemplars": len(exs),
-                        }
-                    )
-                except Exception as e:  # malformed payload -> client error
-                    self._reply({"error": str(e)[:500]}, status=400)
+            # one dispatcher: the route says which methods it takes
+            do_POST = do_GET  # noqa: N815
 
         self._httpd = ThreadingHTTPServer((host, port), Handler)
         self._thread: threading.Thread | None = None
@@ -1071,6 +320,497 @@ class ControlServer:
     @property
     def port(self) -> int:
         return self._httpd.server_address[1]
+
+    # ------------------------------------------------------------ dispatch
+
+    def _route(self, path: str, params: dict) -> _Route | None:
+        m = _LABEL_VALUES.fullmatch(path)
+        if m:
+            params["name"] = [unquote(m.group(1))]
+            path = "/api/v1/label/<name>/values"
+        return self._routes.get(path)
+
+    def _dispatch(self, h: BaseHTTPRequestHandler) -> None:
+        url = urlparse(h.path)
+        params = parse_qs(url.query)
+        try:
+            route = self._route(url.path, params)
+            if route is None or h.command not in route.methods:
+                raise _HTTPError(404, "not found", "not_found")
+            body = b""
+            if h.command == "POST":
+                n = int(h.headers.get("Content-Length", "0"))
+                if not 0 <= n <= _MAX_BODY:
+                    raise _HTTPError(413, "body size out of bounds")
+                body = h.rfile.read(n)
+                if "GET" in route.methods:  # form body: params merge
+                    for k, v in parse_qs(body.decode()).items():
+                        params.setdefault(k, []).extend(v)
+            if route.engine and self.metric_engine is None and self.write_table is None:
+                raise _HTTPError(400, "no metric engine attached")
+            out = route.fn(_Request(params, h.headers, body))
+            status = 200
+            if isinstance(out, str):
+                ctype = "text/plain; version=0.0.4; charset=utf-8"
+                data = out.encode()
+            else:
+                ctype = "application/json"
+                data = json.dumps(out).encode()
+        except Exception as e:
+            error = str(e)[:500]
+            if isinstance(e, _HTTPError):
+                status, error_type = e.status, e.error_type
+            elif isinstance(e, _BAD_INPUT):
+                status, error_type = 400, "bad_data"
+            else:
+                status, error_type = 422, "execution"
+                log.exception("%s %s failed", h.command, url.path)
+            ctype = "application/json"
+            data = json.dumps(
+                {"status": "error", "errorType": error_type, "error": error}
+            ).encode()
+        h.send_response(status)
+        h.send_header("Content-Type", ctype)
+        h.send_header("Content-Length", str(len(data)))
+        h.end_headers()
+        h.wfile.write(data)
+
+    # ------------------------------------------------------------ control
+
+    def _compact(self, req: _Request) -> dict:
+        # main.rs:75-80: manual compaction trigger; run_once keeps the
+        # handler synchronous like the reference's await
+        sst = self.compactor.run_once()
+        return {"compacted": sst is not None,
+                "new_sst": sst.file_id if sst else None}
+
+    def _manifest(self, req: _Request) -> dict:
+        ssts = self.compactor.table.manifest.all_ssts()
+        return {
+            "n_ssts": len(ssts),
+            "total_rows": sum(s.num_rows for s in ssts),
+            "ssts": [s.file_id for s in ssts],
+        }
+
+    def _scan(self, req: _Request) -> dict:
+        limit = req.capped_int("limit", 100, 1000)
+        if not self._scan_gate.acquire(blocking=False):
+            raise _HTTPError(
+                429, "too many concurrent /scan requests", "unavailable"
+            )
+        try:
+            df = self.compactor.table.scan(
+                ScanRequest(predicate=req.get("predicate", None), ordered=True)
+            ).limit(limit)
+            rows = [r.asDict() for r in df.collect()]
+        finally:
+            self._scan_gate.release()
+        return {"n": len(rows), "rows": rows}
+
+    # ------------------------------------------------------------- PromQL
+
+    def _promql(self, req: _Request, instant: bool) -> dict:
+        """``/api/v1/query`` (instant) and ``/api/v1/query_range``.
+
+        Params follow the Prometheus HTTP API: ``query``; ``step`` and
+        ``lookback_delta`` in seconds or as a duration string (the step-grid
+        engine needs a resolution even for an instant query, so ``step``
+        defaults to 1d); ``limit`` on rows (default 10000, capped at
+        100000 — a dashboard surface, not a bulk-export path).
+
+        The endpoints differ in the evaluation window and the result shape
+        only. An instant query evaluates at the single aligned step
+        containing ``time`` (default: the latest step with data) and
+        returns a ``vector``, one [ts, "v"] per series. A range query
+        evaluates over ``start``..``end`` (absent: the data range) and
+        returns a ``matrix``."""
+        query = req.get("query")
+        step_ms = _seconds_ms(req.get("step", "1d"))
+        if step_ms <= 0:
+            raise ValueError("step must be positive")
+        # Prometheus's per-request lookback_delta; absent, sub-5m grids
+        # default to Prometheus's 5m staleness window (DIVERGENCES #24a)
+        lookback_ms = _lookback_ms(req.get("lookback_delta", None), step_ms)
+        cap = req.capped_int("limit", 10_000, 100_000)
+        # The cache key is the full parsed request plus the store version
+        # (see the query cache comment in __init__).
+        if instant:
+            # Keyed on the STEP-ALIGNED evaluation instant (computable from
+            # the raw param without the engine): time=100, 100.0 and 100.4
+            # at step 1s all evaluate the same aligned step, so they share
+            # one entry instead of each paying a full compute (ADVICE r13).
+            # When `time` is absent the default latest-step lookup is itself
+            # a Spark job, and with an unchanged store version its result
+            # is deterministic — a hit skips that job too.
+            t_ms = req.unix_ms("time")
+            start_ms = end_ms = None if t_ms is None else t_ms - t_ms % step_ms
+            key = ("instant", query, step_ms, start_ms, lookback_ms, cap)
+        else:
+            # start/end define the evaluation range for time()/vector()/
+            # absent*() — the Prometheus API contract; absent they fall
+            # back to the data range
+            start_ms, end_ms = req.unix_ms("start"), req.unix_ms("end")
+            key = ("range", query, step_ms, start_ms, end_ms, lookback_ms, cap)
+
+        def compute() -> dict:
+            eng = self._query_engine()
+            lo, hi = start_ms, end_ms
+            if instant and lo is None:  # the latest aligned step with data
+                lo = hi = PromQLCompiler(eng, step_ms)._bounds()[1]
+            df = PromQLCompiler(
+                eng, step_ms, lookback_ms, start_ms=lo, end_ms=hi
+            ).compile(query)
+            if instant:
+                df = df.filter(F.col("ts_ms") == lo).orderBy("series_key")
+            else:
+                if lo is not None:
+                    df = df.filter(F.col("ts_ms") >= lo)
+                if hi is not None:
+                    # Prometheus treats `end` as INCLUSIVE: a response
+                    # timestamp fed back as `end` must still return that
+                    # sample (round-trip safe).
+                    df = df.filter(F.col("ts_ms") <= hi)
+                df = df.orderBy("series_key", "ts_ms")
+            rows = df.limit(cap).collect()
+            series: dict[str, list] = {}
+            for r in rows:
+                series.setdefault(r["series_key"], []).append(
+                    [r["ts_ms"] / 1000.0, str(r["value"])]
+                )
+            result = [
+                {"metric": _labels(k), "value": pts[0]} if instant
+                else {"metric": _labels(k), "values": pts}
+                for k, pts in sorted(series.items())
+            ]
+            return {
+                "status": "success",
+                "data": {
+                    "resultType": "vector" if instant else "matrix",
+                    "result": result,
+                },
+            }
+
+        return self._qr_cached(key + (self._serving_version(),), compute)
+
+    # ------------------------------------------- Prometheus metadata API
+    # Label names, label values and series by match[] selector, backed by
+    # the engine's inverted index (RFC D4); all driver-bounded.
+
+    def _label_names(self, req: _Request) -> dict:
+        eng = self._query_engine()
+        names = sorted(
+            r["tag_key"] for r in eng.index.select("tag_key").distinct().collect()
+        )
+        return {"status": "success", "data": ["__name__", *names]}
+
+    def _label_values(self, req: _Request) -> dict:
+        eng = self._query_engine()
+        name = req.get("name")
+        if name == "__name__":
+            frame, col = eng.metrics, "metric_name"
+        else:
+            frame, col = eng.index.filter(F.col("tag_key") == name), "tag_value"
+        vals = sorted(r[col] for r in frame.select(col).distinct().collect())
+        return {"status": "success", "data": vals}
+
+    def _series(self, req: _Request) -> dict:
+        eng = self._query_engine()
+        sel = _selector(req.get("match[]"), "match[]")
+        tsids = eng.resolve_tsids(sel.name, list(sel.matchers))
+        keys = (
+            eng.series.join(tsids, "tsid", "left_semi")
+            .select("series_key")
+            .distinct()
+            .orderBy("series_key")
+            .limit(req.capped_int("limit", 1000, 10_000))
+            .collect()
+        )
+        data = [{"__name__": sel.name, **_labels(r["series_key"])} for r in keys]
+        return {"status": "success", "data": data}
+
+    def _fields(self, req: _Request) -> dict:
+        # Multi-field catalog listing (RFC 20240827:106-113): the
+        # (field_name, field_type) rows of one metric — the HTTP counterpart
+        # of MetricEngine.fields(), selectable in queries via the __field__
+        # matcher. Catalog-bounded (rows per metric = its field count); ids
+        # stay engine-internal.
+        eng = self._query_engine()
+        rows = sorted(
+            {
+                (r["field_name"], r["field_type"])
+                for r in eng.fields(req.get("metric")).collect()
+            }
+        )
+        return {
+            "status": "success",
+            "data": [{"name": n, "type": t} for n, t in rows],
+        }
+
+    def _list_metadata(self, req: _Request) -> dict:
+        # Prometheus metadata API: metric family -> type/help/unit, fed by
+        # the MetricMetadata records received on /api/v1/write
+        # (remote_write.proto; the reference's pb_reader parses them on the
+        # ingest path). Types are lowercased like Prometheus's API.
+        want = req.get("metric", None)
+        cap = req.capped_int("limit", 1000, 10_000)
+        data: dict[str, list] = {}
+        for fam, md in sorted(self.metadata.items()):
+            if want is not None and fam != want:
+                continue
+            if len(data) >= cap:
+                break
+            data[fam] = [
+                {"type": md["type"].lower(), "help": md["help"], "unit": md["unit"]}
+            ]
+        return {"status": "success", "data": data}
+
+    def _query_exemplars(self, req: _Request) -> dict:
+        # Prometheus exemplars API: ?query=<selector>[&start=<s>&end=<s>]
+        # over the bounded in-memory exemplar buffer — series selected by
+        # name + label matchers (driver-side evaluation; the buffer is
+        # operational-sized by construction), grouped by series identity.
+        sel = _selector(req.get("query"), "query")
+        start_ms, end_ms = req.unix_ms("start"), req.unix_ms("end")
+        matchers = list(sel.matchers)
+        by_series: dict[tuple, dict] = {}
+        for ex in self.exemplars:
+            if ex["name"] != sel.name:
+                continue
+            if not matches_labels(ex["series_labels"], matchers):
+                continue
+            if start_ms is not None and ex["ts_ms"] < start_ms:
+                continue
+            # end is INCLUSIVE, matching /api/v1/query_range
+            if end_ms is not None and ex["ts_ms"] > end_ms:
+                continue
+            ident = tuple(sorted(ex["series_labels"].items()))
+            ent = by_series.setdefault(
+                ident,
+                {
+                    "seriesLabels": {"__name__": sel.name, **ex["series_labels"]},
+                    "exemplars": [],
+                },
+            )
+            ent["exemplars"].append(
+                {
+                    "labels": ex["labels"],
+                    "value": str(ex["value"]),
+                    "timestamp": ex["ts_ms"] / 1000.0,
+                }
+            )
+        out = [by_series[k] for k in sorted(by_series)]
+        for ent in out:
+            ent["exemplars"].sort(key=lambda e: e["timestamp"])
+        return {"status": "success", "data": out}
+
+    # ------------------------------------------------------ rules and ops
+
+    def _list_rules(self, req: _Request) -> dict:
+        # Prometheus rules API: the configured recording + alerting rule
+        # DEFINITIONS in the standard envelope (one group; the reference
+        # deployment model is a single rule file). No evaluation happens
+        # here.
+        rules_out = []
+        for r in self.rules:
+            if isinstance(r, AlertingRule):
+                rules_out.append(
+                    {
+                        "type": "alerting",
+                        "name": r.name,
+                        "query": r.expr,
+                        "duration": r.for_steps * r.step_ms / 1000.0,
+                        "state": "unknown",
+                        "health": "ok",
+                        "labels": {},
+                    }
+                )
+            else:
+                rules_out.append(
+                    {
+                        "type": "recording",
+                        "name": r.name,
+                        "query": r.expr,
+                        "health": "ok",
+                        "labels": {},
+                    }
+                )
+        group = {"name": "default", "file": "attached", "interval": 0,
+                 "rules": rules_out}
+        return {"status": "success", "data": {"groups": [group]}}
+
+    def _list_alerts(self, req: _Request) -> dict:
+        # Prometheus alerts API: ACTIVE alerts — every alerting rule
+        # evaluated over the engine's step grid, reporting series whose
+        # state at the LATEST evaluated step is pending or firing (a series
+        # that fired earlier but recovered is not active). activeAt is the
+        # run start — the step the alert entered pending. Driver-bounded
+        # like the other read endpoints (alert cardinality is operational,
+        # not data-sized).
+        eng = self._query_engine()
+        alerts = []
+        for r in self.rules:
+            if not isinstance(r, AlertingRule):
+                continue
+            states = evaluate_alert_states(eng, r)
+            # "now" is the expression's own latest grid point (range
+            # functions label buckets at the bucket start, so the compiler's
+            # raw data bound overshoots it). One extra metadata-sized job
+            # per rule — an ops endpoint, not a data path.
+            now_ms = states.agg(F.max("ts_ms")).first()[0]
+            if now_ms is None:
+                continue
+            rows = (
+                states.filter(F.col("ts_ms") == now_ms)
+                .orderBy("series_key")
+                .limit(10_000)
+                .collect()
+            )
+            alerts.extend(
+                {
+                    "labels": {
+                        "alertname": row["alertname"],
+                        **_labels(row["series_key"]),
+                    },
+                    "state": row["state"],
+                    "activeAt": row["active_since_ms"] / 1000.0,
+                    "value": str(row["value"]),
+                }
+                for row in rows
+            )
+        return {"status": "success", "data": {"alerts": alerts}}
+
+    def _federate(self, req: _Request) -> str:
+        # Prometheus federation: current samples for the match[] selectors
+        # in the text exposition format — `name{labels} value timestamp_ms`
+        # — so another Prometheus can scrape this engine. Serves each
+        # series' LATEST sample (with its own timestamp, as /federate does).
+        # Driver-bounded text endpoint.
+        eng = self._query_engine()
+        sels = [_selector(m, "match[]") for m in req.params.get("match[]", [])]
+        if not sels:
+            raise ValueError("match[] must be one or more selectors")
+        cap = req.capped_int("limit", 10_000, 100_000)
+        lines = []
+        for sel in sels:
+            latest = (
+                eng.select_series(sel.name, list(sel.matchers) or None)
+                .groupBy("series_key")
+                .agg(
+                    F.max_by("value", "ts_ms").alias("value"),
+                    F.max("ts_ms").alias("ts_ms"),
+                )
+                .orderBy("series_key")
+                .limit(cap)
+                .collect()
+            )
+            for r in latest:
+                labels = ",".join(
+                    f'{k}="{v}"' for k, v in _labels(r["series_key"]).items()
+                )
+                lines.append(f"{sel.name}{{{labels}}} {r['value']} {r['ts_ms']}")
+        return "\n".join(lines) + "\n"
+
+    def _tsdb_status(self, req: _Request) -> dict:
+        # Prometheus TSDB stats: series/label-pair counts and the top-10
+        # cardinality offenders — THE debugging surface for series
+        # explosions. All metadata-grain aggregates over the engine's
+        # catalog tables (rows ~ #series, never #samples).
+        eng = self._query_engine()
+        n_series = eng.series.select("tsid").distinct().count()
+        label_pairs = eng.index.select("tag_key", "tag_value").distinct().count()
+        by_metric = (
+            eng.series.join(
+                F.broadcast(eng.metrics.select("metric_id", "metric_name")),
+                "metric_id",
+            )
+            .groupBy("metric_name")
+            .agg(F.countDistinct("tsid").alias("n"))
+            .orderBy(F.desc("n"), "metric_name")
+            .limit(10)
+            .collect()
+        )
+        by_label = (
+            eng.index.groupBy("tag_key")
+            .agg(F.countDistinct("tag_value").alias("n"))
+            .orderBy(F.desc("n"), "tag_key")
+            .limit(10)
+            .collect()
+        )
+        pairs_by_label = (
+            eng.index.groupBy("tag_key")
+            .agg(F.countDistinct("tag_key", "tag_value").alias("n"))
+            .orderBy(F.desc("n"), "tag_key")
+            .limit(10)
+            .collect()
+        )
+        return {
+            "status": "success",
+            "data": {
+                "headStats": {"numSeries": n_series, "numLabelPairs": label_pairs},
+                "seriesCountByMetricName": [
+                    {"name": r["metric_name"], "value": r["n"]} for r in by_metric
+                ],
+                "labelValueCountByLabelName": [
+                    {"name": r["tag_key"], "value": r["n"]} for r in by_label
+                ],
+                "seriesCountByLabelValuePair": [
+                    {"name": r["tag_key"], "value": r["n"]} for r in pairs_by_label
+                ],
+            },
+        }
+
+    def _remote_write(self, req: _Request) -> dict:
+        # Prometheus remote-write receive: a WriteRequest protobuf in the
+        # body (metric/ingest.py wire codec), landed into the attached
+        # ColumnarTable keyed (name, series_key, ts_ms) — re-sent samples
+        # overwrite, never duplicate (the reference's remote-write ingest
+        # contract, metric_engine/src/types.rs:27-36). This endpoint is the
+        # driver-mediated single-request path; BULK payload decode is the
+        # distributed decode_payloads mapInPandas route. Divergence: bodies
+        # are RAW protobuf — Prometheus's snappy framing needs a codec this
+        # package does not ship (415 tells the client).
+        if self.write_table is None:
+            raise ValueError("no write table attached")
+        if req.headers.get("Content-Encoding", "") == "snappy":
+            raise _HTTPError(415, "snappy framing not supported; send raw protobuf")
+        if not req.body:
+            raise _HTTPError(413, "body size out of bounds")
+        # metadata and exemplars ride the same WriteRequest (Prometheus
+        # sends metadata-only requests too — they must land even when no
+        # samples are present). The codec raises ValueError on a malformed
+        # payload: a 400, like any other bad input.
+        mds = decode_metadata(req.body)
+        exs = decode_exemplars(req.body)
+        samples = decode_write_request(req.body)
+        n_md = 0
+        for md in mds:
+            if md.get("family_name"):
+                self.metadata[md["family_name"]] = md
+                n_md += 1
+        self.exemplars.extend(exs)
+        if not samples:
+            return {"written": 0, "metadata": n_md, "exemplars": len(exs)}
+        rows = [
+            (
+                s["name"],
+                ",".join(f"{k}={v}" for k, v in sorted(s["labels"].items())),
+                int(s["ts_ms"]),
+                float(s["value"]),
+            )
+            for s in samples
+        ]
+        df = self.write_table.spark.createDataFrame(
+            rows, "name string, series_key string, ts_ms long, value double"
+        )
+        ssts = self.write_table.bulk_ingest(df, "ts_ms")
+        return {
+            "written": len(rows),
+            "ssts": [s.file_id for s in ssts],
+            "metadata": n_md,
+            "exemplars": len(exs),
+        }
+
+    # --------------------------------------------------- serving and cache
 
     def _serving_version(self):
         """Cache-key component identifying WHAT data the read API would
@@ -1153,10 +893,6 @@ class ControlServer:
             return self.metric_engine
         if self.write_table is None:
             return None
-        from pyspark.sql import functions as F
-
-        from horaedb_spark.metric.engine import MetricEngine
-
         # Serve the DURABLE state, not this handle's memoized view: another
         # instance over the same sink root may have written since our last
         # sync (the cross-instance case the cache's durable token detects —
@@ -1165,7 +901,7 @@ class ControlServer:
         # trigger it (they advance the local view as they land), so the
         # mutation counter — part of the cache key — only moves when state
         # actually changed. Runs only on cache misses (engines are built
-        # inside _compute); metadata-sized.
+        # inside the cached compute); metadata-sized.
         self.write_table.manifest.sync_if_behind()
         samples = self.write_table.scan().select(
             "name",

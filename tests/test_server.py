@@ -4,6 +4,8 @@ against a live ColumnarTable — mirrors server/src/main.rs:59-80."""
 import json
 import urllib.request
 
+import pytest
+
 from horaedb_spark.core.timeutil import TimeRange
 from horaedb_spark.server import ControlServer, WriteToggle
 from horaedb_spark.storage.compaction import Compactor, SchedulerConfig
@@ -1054,5 +1056,78 @@ def test_query_cache_invalidates_on_cross_instance_ingest(spark, tmp_path):
             for _ts, v in s["values"]
         }
         assert vals == {101.0}, vals
+    finally:
+        srv.stop()
+
+
+@pytest.mark.parametrize("method", ["GET", "POST"])
+@pytest.mark.parametrize("path", ["/api/v1/query", "/api/v1/query_range"])
+def test_query_endpoints_bad_params_and_step_seconds(spark, tmp_path, path, method):
+    """Both PromQL endpoints, over GET and over a POST form body, share one
+    request path: bad parameters get a 400 JSON error and an execution
+    failure (the group_left cardinality guard) a 422 with errorType
+    "execution" — never a dropped connection. A bare or float step is
+    seconds, as in Prometheus."""
+    import urllib.error
+    import urllib.parse
+
+    from horaedb_spark.metric.engine import MetricEngine
+
+    samples = spark.createDataFrame(
+        [("a", {"host": "x"}, 60_000, 1.0, 1),
+         ("a", {"host": "x"}, 120_000, 2.0, 2),
+         # two `b` series share host=x: a duplicate match group on the
+         # one side of `a / on(host) group_left b`
+         ("b", {"host": "x", "cpu": "0"}, 60_000, 4.0, 3),
+         ("b", {"host": "x", "cpu": "0"}, 120_000, 4.0, 4),
+         ("b", {"host": "x", "cpu": "1"}, 60_000, 8.0, 5),
+         ("b", {"host": "x", "cpu": "1"}, 120_000, 8.0, 6)],
+        "name string, labels map<string,string>, ts_ms long, "
+        "value double, seq long",
+    )
+    t = ColumnarTable(spark, str(tmp_path / "bp"), kv_schema(), TWO_HOURS)
+    # cache off: every request below computes, so equal payloads come from
+    # equal parses, not from one cache entry
+    srv = ControlServer(
+        Compactor(t, SchedulerConfig()),
+        metric_engine=MetricEngine(samples),
+        query_cache_size=0,
+    )
+    srv.start()
+
+    def call(**params):
+        if path == "/api/v1/query":
+            params.setdefault("time", "150")  # mid-step at a 1m step
+        form = urllib.parse.urlencode(params)
+        url = f"http://127.0.0.1:{srv.port}{path}"
+        if method == "GET":
+            req = urllib.request.Request(f"{url}?{form}")
+        else:
+            req = urllib.request.Request(url, data=form.encode(), method="POST")
+        try:
+            with urllib.request.urlopen(req, timeout=120) as r:
+                return r.status, r.read()
+        except urllib.error.HTTPError as e:
+            return e.code, e.read()
+
+    try:
+        for params, status, error_type in [
+            ({"query": "a", "step": "0"}, 400, "bad_data"),
+            ({"query": "a", "step": "-1s"}, 400, "bad_data"),
+            ({"query": "a", "step": "1m", "limit": "-1"}, 400, "bad_data"),
+            ({"step": "1m"}, 400, "bad_data"),
+            ({"query": "a / on(host) group_left b", "step": "1m"}, 422,
+             "execution"),
+        ]:
+            code, body = call(**params)
+            assert code == status, (params, code, body[:300])
+            out = json.loads(body)
+            assert out["status"] == "error", out
+            assert out["errorType"] == error_type, out
+        code, by_seconds = call(query="a", step="60")
+        assert code == 200
+        assert by_seconds == call(query="a", step="1m")[1]
+        assert json.loads(by_seconds)["data"]["result"]
+        assert call(query="a", step="1.5")[1] == call(query="a", step="1500ms")[1]
     finally:
         srv.stop()
