@@ -363,11 +363,16 @@ def decode_payloads(payloads: DataFrame, payload_col: str = "payload", seq_col: 
     runs on 2-3 cores while the rest idle. Repartition up to
     defaultParallelism first — one cheap shuffle of opaque bytes buys a
     fully parallel CPU-bound stage (round 15; measured 10M samples:
-    327 s on 3 input splits -> see SCALE100.json ingest row)."""
+    327 s on 3 input splits -> see SCALE100.json ingest row). A streaming
+    frame is decoded as it arrives: it has no partition count to read
+    before the query starts, so it is never repartitioned here."""
     import pandas as pd
 
     sc = payloads.sparkSession.sparkContext
-    if payloads.rdd.getNumPartitions() < sc.defaultParallelism:
+    if (
+        not payloads.isStreaming
+        and payloads.rdd.getNumPartitions() < sc.defaultParallelism
+    ):
         payloads = payloads.repartition(sc.defaultParallelism)
 
     def decode_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

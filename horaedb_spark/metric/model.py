@@ -81,7 +81,7 @@ _FIELD_TYPE_NAMES = {
 }
 
 
-def _field_type(samples: DataFrame) -> str:
+def field_type_name(samples: DataFrame) -> str:
     """FieldType derived from the value column's Spark type (the RFC's
     uint8 type enum, spelled as a name)."""
     dt = samples.schema["value"].dataType.simpleString()
@@ -105,7 +105,7 @@ def build_metrics_table(samples: DataFrame) -> DataFrame:
     (the RFC example, RFC:150-153); multi-field samples (``field`` column,
     e.g. a remote-write family grouped by ``ingest.group_metric_families``)
     emit one catalog row per field with the stable hash field_id."""
-    ftype = _field_type(samples)
+    ftype = field_type_name(samples)
     return (
         normalized_fields(samples)
         .select("name", "field")

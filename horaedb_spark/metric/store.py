@@ -10,13 +10,18 @@ merge-on-read), and ingest appends to all of them in one call — the
 reference stubs out (metric_engine/src/metric/mod.rs:35-40,
 index/mod.rs:35-41, data/mod.rs:36-40).
 
-Catalog tables (metrics/series/index) are keyed so re-ingesting the same
-series is a no-op under overwrite merge — the idempotent upsert the RFC
-wants. The data table's PK is (metric_id, tsid, ts_ms) with ``__seq__``
-carrying the ingest sequence: duplicate samples resolve to max seq (D10).
+Catalog tables (metrics/series/index) are upsert-on-demand, as the RFC's
+``populate_*_ids`` are: an ingest writes catalog rows only for the keys the
+store does not hold yet (``MetricStore.ingest``), and re-writing a known key
+would be a no-op under overwrite merge anyway. The data table's PK is
+(metric_id, tsid, ts_ms) with ``__seq__`` carrying the ingest sequence:
+duplicate samples resolve to max seq (D10).
 """
 
 from __future__ import annotations
+
+import logging
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,6 +35,8 @@ from horaedb_spark.metric.engine import MetricEngine
 from horaedb_spark.storage.table import ColumnarTable, ScanRequest, WriteRequest
 
 CATALOG_SEGMENT = 1 << 60  # catalogs are not time-partitioned: one segment
+
+log = logging.getLogger(__name__)
 
 
 def _schema(
@@ -169,6 +176,13 @@ class MetricStore:
         # series-label-join broadcast decision, shared by all engines over
         # this store (see engine()); cleared when ingest() grows the series
         self._series_bcast_memo: dict = {}
+        # The catalog keys this handle knows are stored (see ingest()):
+        # ({(metric_id, tsid)}, {(metric_id, field_id, field_type)}), valid
+        # only while _catalog_identity() still equals _known_at; concurrent
+        # ingests on this handle take turns through the catalog step
+        self._known: tuple[set, set] | None = None
+        self._known_at: tuple | None = None
+        self._known_lock = threading.Lock()
 
     # -------------------------------------------------------------- migration
 
@@ -241,19 +255,34 @@ class MetricStore:
     # ------------------------------------------------------------------ write
 
     def ingest(self, samples: DataFrame) -> None:
-        """One ingest batch: derive ids, append catalogs (idempotent under
-        overwrite merge), write data — ONE Spark job regardless of how many
-        segments the batch spans. ``samples`` columns: name, labels, ts_ms,
+        """One ingest batch: derive ids, write the catalog rows the store is
+        missing, write data. ``samples`` columns: name, labels, ts_ms,
         value, seq.
+
+        Catalogs are upsert-on-demand (the RFC's ``populate_metric_ids`` /
+        ``populate_series_ids`` insert misses only): series and index rows
+        are written for each ``(metric_id, tsid)`` the store does not hold,
+        a metrics row for each new ``(metric_id, field_id, field_type)``.
+        The handle keeps the key set its catalogs hold, learned from its
+        own writes or read back from the series and metrics tables in one
+        collect. The set is valid only while the catalogs' manifest
+        identity (``mutations`` plus ``durable_token()``) is the one it was
+        recorded at: a compaction, delete, restore or another writer on
+        the same root makes the next ingest re-read it. A steady batch of
+        known series therefore reads its input twice: a distinct-keys
+        collect, then the data write. A store with no series rows yet
+        writes every catalog row for the batch with no collect at all.
+
+        Write order is metrics, index, then series, then data. The key set
+        is read from series and metrics, so an ingest that fails after its
+        index write leaves those series unknown and the next batch writes
+        their rows again.
 
         The data write goes through ``ColumnarTable.bulk_ingest``
         (partitionBy(__segment__): every executor writes its slice of every
         segment, one SST per segment registered afterwards from the staging
-        listing). The previous shape — enumerate segments, then one
-        filter+write job per segment — was correct but driver-serialized: a
-        multi-year backfill through MetricStore ran hundreds of sequential
-        jobs over the same input. Streaming micro-batches (1-2 segments)
-        lose nothing: bulk_ingest is also one pass there."""
+        listing) — ONE Spark job regardless of how many segments the batch
+        spans."""
         # D10 within-batch: duplicate (metric_id, tsid, field_id, ts_ms)
         # rows must resolve by max ingest seq BEFORE the write stamps one
         # __seq__ per file — matching model.build_data_table (remote-write
@@ -261,30 +290,126 @@ class MetricStore:
         # row position). Samples without a `field` column normalize to the
         # default 'value' field (RFC example row, RFC:150-153); the field
         # id is the stable hash — a projection, never a catalog join.
-        fielded = model.normalized_fields(samples)
-        ided = dedup_samples(
-            model.with_ids(fielded).withColumn(
-                "field_id", model.field_id(F.col("field"))
-            ),
-            ["metric_id", "tsid", "field_id"],
-            "seq",
+        keyed = model.with_ids(model.normalized_fields(samples)).withColumn(
+            "field_id", model.field_id(F.col("field"))
         )
-        self.metrics.write(
-            WriteRequest(model.build_metrics_table(samples), TimeRange(0, 1))
-        )
-        self.series.write(
-            WriteRequest(model.build_series_table(samples), TimeRange(0, 1))
-        )
-        self.index.write(
-            WriteRequest(model.build_index_table(samples), TimeRange(0, 1))
-        )
+        ided = dedup_samples(keyed, ["metric_id", "tsid", "field_id"], "seq")
+        with self._known_lock:
+            if not self.series.manifest.all_ssts():
+                # no series rows yet (a one-shot or first ingest): every key
+                # is new, so write them all without collecting the batch's keys
+                self._write_catalogs(samples, samples, samples)
+                self._known = None
+                stats = {"batch_keys": None, "new_keys": None, "new_series": None,
+                         "catalogs": "written in full", "key_set": "not read"}
+            else:
+                stats = self._write_missing_catalogs(keyed, samples)
         self.data.bulk_ingest(
             ided.select("metric_id", "tsid", "field_id", "ts_ms", "value"),
             "ts_ms",
         )
-        # the series table grew: engines must re-decide the label-join
-        # broadcast against fresh plan stats (memo shared via engine())
-        self._series_bcast_memo.clear()
+        if stats["new_series"] != 0:
+            # the series table grew: engines must re-decide the label-join
+            # broadcast against fresh plan stats (memo shared via engine())
+            self._series_bcast_memo.clear()
+        log.debug(
+            "MetricStore.ingest %s: %s batch keys, %s new, catalogs %s, key set %s",
+            self.root, stats["batch_keys"], stats["new_keys"], stats["catalogs"],
+            stats["key_set"], extra={"metric_ingest": stats},
+        )
+
+    def _catalog_identity(self) -> tuple:
+        return tuple(
+            (t.manifest.mutations, t.manifest.durable_token(max_age_s=0))
+            for t in (self.metrics, self.index, self.series)
+        )
+
+    def _read_known(self) -> tuple[set, set]:
+        """The catalogs' key set, read back in one job; records the
+        identity it is valid at (taken after catching up with other
+        writers and before the read, so a concurrent change re-reads)."""
+        for t in (self.metrics, self.index, self.series):
+            t.manifest.sync_if_behind()
+        self._known_at = self._catalog_identity()
+        null_l, null_s = F.lit(None).cast("long"), F.lit(None).cast("string")
+        series = self.series.scan(ScanRequest(ordered=False)).select(
+            "metric_id", "tsid", null_l.alias("field_id"), null_s.alias("field_type")
+        )
+        metrics = self.metrics.scan(ScanRequest(ordered=False)).select(
+            "metric_id", null_l.alias("tsid"), "field_id", "field_type"
+        )
+        series_keys, metric_keys = set(), set()
+        for m, t, f, ft in series.unionByName(metrics).collect():
+            if t is not None:
+                series_keys.add((m, t))
+            else:
+                metric_keys.add((m, f, ft))
+        self._known = (series_keys, metric_keys)
+        return self._known
+
+    def _write_missing_catalogs(self, keyed: DataFrame, samples: DataFrame) -> dict:
+        """Write catalog rows for the batch keys the store does not hold.
+        Returns what it did, for ingest()'s log record."""
+        reread = self._known is None or self._known_at != self._catalog_identity()
+        known_series, known_metrics = self._read_known() if reread else self._known
+        before = self._known_at
+        ftype = model.field_type_name(samples)
+        keys = keyed.select("metric_id", "tsid", "field_id").distinct().collect()
+        batch_series = {(m, t) for m, t, _f in keys}
+        batch_metrics = {(m, f, ftype) for m, _t, f in keys}
+        new_series = batch_series - known_series
+        new_metrics = batch_metrics - known_metrics
+        metric_rows = series_rows = None
+        if new_metrics:
+            metric_rows = self._rows_for(
+                keyed, ("metric_id", "field_id"), {(m, f) for m, f, _ft in new_metrics}
+            )
+        if new_series:
+            series_rows = self._rows_for(keyed, ("metric_id", "tsid"), new_series)
+        self._write_catalogs(metric_rows, series_rows, series_rows)
+        # Learn the new keys from this write only if it was the sole change
+        # since the key set was last valid: one manifest mutation per table
+        # written, none on the others. Anything else (another writer, a
+        # lost commit race, a fold) makes the next ingest re-read.
+        after = self._catalog_identity()
+        wrote = (metric_rows is not None, series_rows is not None,
+                 series_rows is not None)
+        if all(
+            (a[0] == b[0] + 1) if w else a == b
+            for a, b, w in zip(after, before, wrote)
+        ):
+            known_series |= new_series
+            known_metrics |= new_metrics
+            self._known_at = after
+        else:
+            self._known = None
+        return {
+            "batch_keys": len(batch_series) + len(batch_metrics),
+            "new_keys": len(new_series) + len(new_metrics),
+            "new_series": len(new_series),
+            "catalogs": "written" if new_series or new_metrics else "skipped",
+            "key_set": "re-read" if reread else "reused",
+        }
+
+    def _rows_for(self, keyed: DataFrame, cols: tuple[str, str], new: set) -> DataFrame:
+        """The batch rows whose ``cols`` key is in ``new``."""
+        wanted = self.spark.createDataFrame(sorted(new), f"{cols[0]} long, {cols[1]} long")
+        return keyed.join(F.broadcast(wanted), list(cols), "left_semi")
+
+    def _write_catalogs(
+        self,
+        metric_rows: DataFrame | None,
+        index_rows: DataFrame | None,
+        series_rows: DataFrame | None,
+    ) -> None:
+        """Catalog rows from batch rows, series last (see ingest())."""
+        for table, rows, build in (
+            (self.metrics, metric_rows, model.build_metrics_table),
+            (self.index, index_rows, model.build_index_table),
+            (self.series, series_rows, model.build_series_table),
+        ):
+            if rows is not None:
+                table.write(WriteRequest(build(rows), TimeRange(0, 1)))
 
     # --------------------------------------------------- packed data (RFC:218)
 

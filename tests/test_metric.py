@@ -61,6 +61,19 @@ def test_distributed_decode(spark):
     assert labels["http_requests_total"] == {"job": "proxy", "instance": "host-1"}
 
 
+def test_distributed_decode_of_streaming_frame(spark):
+    """A streaming payload frame has no partition count before its query
+    starts: decode_payloads must build the decode without asking."""
+    buf = encode_write_request(FIXTURE[:1])
+    stream = (
+        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+        .select(F.unhex(F.lit(buf.hex())).alias("payload"), F.col("value").alias("seq"))
+    )
+    df = decode_payloads(stream)
+    assert df.isStreaming
+    assert [f.name for f in df.schema] == ["name", "labels", "ts_ms", "value", "seq"]
+
+
 @pytest.fixture(scope="module")
 def engine(spark):
     buf = encode_write_request(

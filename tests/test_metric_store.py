@@ -1,11 +1,15 @@
 """MetricStore: the metric layer persisted on ColumnarTables (RFC:102-138 —
 each metric table is an instance of the generic columnar storage)."""
 
+import logging
+
+import pytest
 from pyspark.sql import functions as F
 
 from horaedb_spark.core.timeutil import TimeRange
 from horaedb_spark.metric.engine import Matcher
 from horaedb_spark.metric.store import MetricStore
+from horaedb_spark.storage.table import ScanRequest
 
 HOUR = 3600 * 1000
 
@@ -15,6 +19,24 @@ def _samples(spark, rows):
     return spark.createDataFrame(
         rows, "name string, labels map<string,string>, ts_ms long, value double, seq long"
     )
+
+
+def _catalog_ssts(store):
+    return {
+        "metrics": len(store.metrics.manifest.all_ssts()),
+        "index": len(store.index.manifest.all_ssts()),
+        "series": len(store.series.manifest.all_ssts()),
+    }
+
+
+def _ingest_logged(store, frame, caplog):
+    """Ingest and return the store's one log record for it."""
+    caplog.clear()
+    with caplog.at_level(logging.DEBUG, logger="horaedb_spark.metric.store"):
+        store.ingest(frame)
+    recs = [r for r in caplog.records if hasattr(r, "metric_ingest")]
+    assert len(recs) == 1, caplog.records
+    return recs[0].metric_ingest
 
 
 def test_ingest_and_query_round_trip(spark, tmp_path):
@@ -44,10 +66,12 @@ def test_reingest_is_idempotent_and_d10_dedup(spark, tmp_path):
     eng = store.engine()
     rows = eng.select_series("cpu", with_labels=False).collect()
     assert [(r.ts_ms, r.value) for r in rows] == [(1000, 9.0)]
-    # catalogs did not duplicate
+    # catalogs did not duplicate, and the known series wrote no catalog SST
     assert eng.series.count() == 1
     assert eng.index.count() == 1
     assert eng.metrics.count() == 1
+    assert _catalog_ssts(store) == {"metrics": 1, "index": 1, "series": 1}
+    assert len(store.data.manifest.all_ssts()) == 2
 
 
 def test_time_partitioned_data_prunes(spark, tmp_path):
@@ -736,3 +760,181 @@ def test_store_engine_threshold_override_not_poisoned_by_shared_memo(spark, tmp_
         plan_b[:1500]
     )
     assert rows_b == rows_a and len(rows_a) == 5
+
+
+def _hosts(spark, hosts, ts, value=1.0, seq=1):
+    return _samples(spark, [("cpu", {"host": h}, ts, value, seq) for h in hosts])
+
+
+def test_known_series_ingest_adds_no_catalog_sst(spark, tmp_path, caplog):
+    """Catalog rows are written only for keys the store lacks: batches of
+    known series add an SST to the data table alone."""
+    store = MetricStore(spark, str(tmp_path / "known"), HOUR)
+    first = _ingest_logged(store, _hosts(spark, "abc", 1000), caplog)
+    assert first["catalogs"] == "written in full" and first["key_set"] == "not read"
+    assert _catalog_ssts(store) == {"metrics": 1, "index": 1, "series": 1}
+    # the first later batch reads the key set back; the next reuses it
+    second = _ingest_logged(store, _hosts(spark, "abc", 2000, 2.0, 2), caplog)
+    assert second == {"batch_keys": 4, "new_keys": 0, "new_series": 0,
+                      "catalogs": "skipped", "key_set": "re-read"}
+    third = _ingest_logged(store, _hosts(spark, "ab", 3000, 3.0, 3), caplog)
+    assert third == {"batch_keys": 3, "new_keys": 0, "new_series": 0,
+                     "catalogs": "skipped", "key_set": "reused"}
+    assert _catalog_ssts(store) == {"metrics": 1, "index": 1, "series": 1}
+    eng = store.engine()
+    assert {r.tag_value for r in eng.label_values("cpu", "host").collect()} == set("abc")
+    out = eng.select_series("cpu", [Matcher("host", "=", "a")])
+    assert sorted((r.ts_ms, r.value) for r in out.collect()) == [
+        (1000, 1.0), (2000, 2.0), (3000, 3.0)
+    ]
+
+
+def test_one_new_series_writes_catalog_rows_for_it_only(spark, tmp_path, caplog):
+    store = MetricStore(spark, str(tmp_path / "onenew"), HOUR)
+    store.ingest(_hosts(spark, "abc", 1000))
+    before = {t: {s.file_id for s in getattr(store, t).manifest.all_ssts()}
+              for t in ("metrics", "index", "series")}
+    info = _ingest_logged(store, _hosts(spark, "abcd", 2000), caplog)
+    assert info["new_series"] == 1 and info["new_keys"] == 1
+    assert info["catalogs"] == "written"
+    assert _catalog_ssts(store) == {"metrics": 1, "index": 2, "series": 2}
+    for t in ("index", "series"):
+        new = [s for s in getattr(store, t).manifest.all_ssts()
+               if s.file_id not in before[t]]
+        assert [s.num_rows for s in new] == [1], t  # host=d's one label
+    series = store.series.scan(ScanRequest(ordered=False))
+    assert series.count() == 4
+    eng = store.engine()
+    out = eng.select_series("cpu", [Matcher("host", "=", "d")])
+    assert [(r.ts_ms, r.value) for r in out.collect()] == [(2000, 1.0)]
+
+
+def test_known_field_with_new_type_updates_metrics_row(spark, tmp_path):
+    store = MetricStore(spark, str(tmp_path / "ftype"), HOUR)
+    store.ingest(_hosts(spark, "a", 1000))
+    store.ingest(_hosts(spark, "a", 2000))  # known: reads the key set back
+    as_long = spark.createDataFrame(
+        [("cpu", {"host": "a"}, 3000, 7, 3)],
+        "name string, labels map<string,string>, ts_ms long, value long, seq long",
+    )
+    store.ingest(as_long)
+    assert _catalog_ssts(store) == {"metrics": 2, "index": 1, "series": 1}
+    rows = store.metrics.scan(ScanRequest(ordered=False)).collect()
+    assert [(r.metric_name, r.field_name, r.field_type) for r in rows] == [
+        ("cpu", "value", "i64")
+    ]
+
+
+def test_key_set_is_reread_after_delete_restore_or_another_writer(
+    spark, tmp_path, caplog
+):
+    """The known key set is only valid at the catalog state it was recorded
+    at: series rows removed under it, through this handle or another one
+    on the same root, come back with the next batch."""
+    root = str(tmp_path / "reread")
+    store = MetricStore(spark, root, HOUR)
+
+    def series_keys(handle):
+        return {r.series_key for r in handle.series.scan(ScanRequest(ordered=False))
+                .collect()}
+
+    store.ingest(_hosts(spark, "ab", 1000))
+    store.ingest(_hosts(spark, "ab", 2000))  # reads the key set back
+    store.series.delete(F.col("series_key") == "host=b")
+    assert series_keys(store) == {"host=a"}
+    info = _ingest_logged(store, _hosts(spark, "ab", 3000), caplog)
+    assert info["key_set"] == "re-read" and info["new_series"] == 1
+    assert series_keys(store) == {"host=a", "host=b"}
+    keep = max(s.file_id for s in store.series.manifest.all_ssts())
+    store.ingest(_hosts(spark, "abc", 4000))
+    info = _ingest_logged(store, _hosts(spark, "abc", 5000), caplog)
+    assert info["key_set"] == "reused" and info["new_keys"] == 0
+    # another handle on the same root rolls the series table back to before
+    # host=c; this handle's manifests do not see it until it re-reads
+    other = MetricStore(spark, root, HOUR)
+    other.series.restore(keep)
+    assert series_keys(other) == {"host=a", "host=b"}
+    info = _ingest_logged(store, _hosts(spark, "abc", 6000), caplog)
+    assert info["key_set"] == "re-read" and info["new_series"] == 1
+    reopened = MetricStore(spark, root, HOUR)
+    assert series_keys(reopened) == {"host=a", "host=b", "host=c"}
+    out = reopened.engine().select_series("cpu", [Matcher("host", "=", "c")])
+    assert sorted(r.ts_ms for r in out.collect()) == [4000, 5000, 6000]
+
+
+@pytest.mark.parametrize("failing", ["index", "series"])
+def test_ingest_failing_before_series_write_is_retried(
+    spark, tmp_path, monkeypatch, failing
+):
+    """Series rows are written last: a batch that fails at its index or
+    series write leaves its new series unknown, so re-ingesting it writes
+    them."""
+    store = MetricStore(spark, str(tmp_path / "crash"), HOUR)
+    store.ingest(_hosts(spark, "a", 1000))
+    store.ingest(_hosts(spark, "a", 2000))
+    table = getattr(store, failing)
+    write, calls = table.write, []
+
+    def fail_once(req):
+        calls.append(req)
+        if len(calls) == 1:
+            raise OSError(f"injected {failing} write failure")
+        return write(req)
+
+    monkeypatch.setattr(table, "write", fail_once)
+    batch = _hosts(spark, "ab", 3000)
+    with pytest.raises(OSError, match="injected"):
+        store.ingest(batch)
+    store.ingest(batch)
+    assert len(calls) == 2
+    eng = store.engine()
+    assert {r.tag_value for r in eng.label_values("cpu", "host").collect()} == {"a", "b"}
+    out = eng.select_series("cpu", [Matcher("host", "=", "b")])
+    assert [(r.ts_ms, r.value) for r in out.collect()] == [(3000, 1.0)]
+
+
+def test_series_broadcast_memo_cleared_only_when_series_grow(spark, tmp_path):
+    store = MetricStore(spark, str(tmp_path / "memo2"), HOUR)
+    store.ingest(_hosts(spark, "ab", 1000))
+    store.engine().select_series("cpu", with_labels=True)
+    assert store._series_bcast_memo
+    store.ingest(_hosts(spark, "ab", 2000))  # known series: memo kept
+    assert store._series_bcast_memo
+    store.ingest(_hosts(spark, "abc", 3000))  # a new series: memo cleared
+    assert store._series_bcast_memo == {}
+
+
+def test_concurrent_ingests_on_one_handle_keep_every_series(spark, tmp_path):
+    """Threads ingesting new series through one handle share its key set:
+    every series gets its catalog rows, and afterwards all are known."""
+    import sys
+    import threading
+
+    store = MetricStore(spark, str(tmp_path / "threads"), HOUR)
+    store.ingest(_hosts(spark, "a", 1000))
+    hosts = [f"t{i}" for i in range(6)]  # more threads than local[4] cores
+    frames = {h: _hosts(spark, ["a", h], 2000) for h in hosts}
+    errors = []
+
+    def run(h):
+        try:
+            store.ingest(frames[h])
+        except Exception as e:  # reported below, with the thread's host
+            errors.append((h, e))
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=run, args=(h,)) for h in hosts]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    keys = {r.series_key for r in store.series.scan(ScanRequest(ordered=False)).collect()}
+    assert keys == {f"host={h}" for h in ["a", *hosts]}
+    store.ingest(_hosts(spark, ["a", *hosts], 3000))
+    assert _catalog_ssts(store)["series"] == 1 + len(hosts)
