@@ -23,6 +23,8 @@ from __future__ import annotations
 import logging
 import threading
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -71,6 +73,12 @@ _PACKED_FIELDS = [
     ("points", T.ArrayType(_POINT)), ("ts_min", _L), ("ts_max", _L),
     ("n_points", _L),
 ]
+
+
+def _key_set(keys: pa.Table, *cols: str) -> set:
+    """The distinct ``cols`` tuples of an Arrow-collected key frame (an
+    Arrow collect skips building one Row object per catalog key)."""
+    return set(zip(*(keys[c].to_pylist() for c in cols)))
 
 
 def _default_field_id(spark: SparkSession) -> int:
@@ -176,9 +184,10 @@ class MetricStore:
         # series-label-join broadcast decision, shared by all engines over
         # this store (see engine()); cleared when ingest() grows the series
         self._series_bcast_memo: dict = {}
-        # The catalog keys this handle knows are stored (see ingest()):
+        # The catalog keys this handle read back (see ingest()):
         # ({(metric_id, tsid)}, {(metric_id, field_id, field_type)}), valid
-        # only while _catalog_identity() still equals _known_at; concurrent
+        # only while _catalog_identity() still equals _known_at and reset to
+        # None by this handle's own catalog writes; concurrent
         # ingests on this handle take turns through the catalog step
         self._known: tuple[set, set] | None = None
         self._known_at: tuple | None = None
@@ -263,15 +272,16 @@ class MetricStore:
         ``populate_series_ids`` insert misses only): series and index rows
         are written for each ``(metric_id, tsid)`` the store does not hold,
         a metrics row for each new ``(metric_id, field_id, field_type)``.
-        The handle keeps the key set its catalogs hold, learned from its
-        own writes or read back from the series and metrics tables in one
-        collect. The set is valid only while the catalogs' manifest
-        identity (``mutations`` plus ``durable_token()``) is the one it was
-        recorded at: a compaction, delete, restore or another writer on
-        the same root makes the next ingest re-read it. A steady batch of
-        known series therefore reads its input twice: a distinct-keys
-        collect, then the data write. A store with no series rows yet
-        writes every catalog row for the batch with no collect at all.
+        The handle keeps the key set its catalogs hold, read back from the
+        series and metrics tables in one collect. The set is valid only
+        while the catalogs' manifest identity (``mutations`` plus
+        ``durable_token()``) is the one it was read at, and until this
+        handle writes catalog rows: its own catalog write, a compaction,
+        delete, restore or another writer on the same root makes the next
+        ingest re-read it. A steady batch of known series therefore reads
+        its input twice: a distinct-keys collect, then the data write. A
+        store with no series rows yet writes every catalog row for the
+        batch with no collect at all.
 
         Write order is metrics, index, then series, then data. The key set
         is read from series and metrics, so an ingest that fails after its
@@ -298,8 +308,8 @@ class MetricStore:
             if not self.series.manifest.all_ssts():
                 # no series rows yet (a one-shot or first ingest): every key
                 # is new, so write them all without collecting the batch's keys
-                self._write_catalogs(samples, samples, samples)
                 self._known = None
+                self._write_catalogs(samples, samples)
                 stats = {"batch_keys": None, "new_keys": None, "new_series": None,
                          "catalogs": "written in full", "key_set": "not read"}
             else:
@@ -338,13 +348,13 @@ class MetricStore:
         metrics = self.metrics.scan(ScanRequest(ordered=False)).select(
             "metric_id", null_l.alias("tsid"), "field_id", "field_type"
         )
-        series_keys, metric_keys = set(), set()
-        for m, t, f, ft in series.unionByName(metrics).collect():
-            if t is not None:
-                series_keys.add((m, t))
-            else:
-                metric_keys.add((m, f, ft))
-        self._known = (series_keys, metric_keys)
+        keys = series.unionByName(metrics).toArrow()
+        is_series = pc.is_valid(keys["tsid"])
+        self._known = (
+            _key_set(keys.filter(is_series), "metric_id", "tsid"),
+            _key_set(keys.filter(pc.invert(is_series)),
+                     "metric_id", "field_id", "field_type"),
+        )
         return self._known
 
     def _write_missing_catalogs(self, keyed: DataFrame, samples: DataFrame) -> dict:
@@ -352,37 +362,28 @@ class MetricStore:
         Returns what it did, for ingest()'s log record."""
         reread = self._known is None or self._known_at != self._catalog_identity()
         known_series, known_metrics = self._read_known() if reread else self._known
-        before = self._known_at
         ftype = model.field_type_name(samples)
-        keys = keyed.select("metric_id", "tsid", "field_id").distinct().collect()
-        batch_series = {(m, t) for m, t, _f in keys}
-        batch_metrics = {(m, f, ftype) for m, _t, f in keys}
+        keys = keyed.select("metric_id", "tsid", "field_id").distinct().toArrow()
+        batch_series = _key_set(keys, "metric_id", "tsid")
+        batch_metrics = {
+            (m, f, ftype) for m, f in _key_set(keys, "metric_id", "field_id")
+        }
         new_series = batch_series - known_series
         new_metrics = batch_metrics - known_metrics
-        metric_rows = series_rows = None
-        if new_metrics:
-            metric_rows = self._rows_for(
-                keyed, ("metric_id", "field_id"), {(m, f) for m, f, _ft in new_metrics}
-            )
-        if new_series:
-            series_rows = self._rows_for(keyed, ("metric_id", "tsid"), new_series)
-        self._write_catalogs(metric_rows, series_rows, series_rows)
-        # Learn the new keys from this write only if it was the sole change
-        # since the key set was last valid: one manifest mutation per table
-        # written, none on the others. Anything else (another writer, a
-        # lost commit race, a fold) makes the next ingest re-read.
-        after = self._catalog_identity()
-        wrote = (metric_rows is not None, series_rows is not None,
-                 series_rows is not None)
-        if all(
-            (a[0] == b[0] + 1) if w else a == b
-            for a, b, w in zip(after, before, wrote)
-        ):
-            known_series |= new_series
-            known_metrics |= new_metrics
-            self._known_at = after
-        else:
+        if new_series or new_metrics:
+            # the next batch reads the key set back from what the catalogs
+            # now hold (also after a failed write, or a type that replaced
+            # another one under the (metric, field) key)
             self._known = None
+            metric_rows = series_rows = None
+            if new_metrics:
+                metric_rows = self._rows_for(
+                    keyed, ("metric_id", "field_id"),
+                    {(m, f) for m, f, _ft in new_metrics},
+                )
+            if new_series:
+                series_rows = self._rows_for(keyed, ("metric_id", "tsid"), new_series)
+            self._write_catalogs(metric_rows, series_rows)
         return {
             "batch_keys": len(batch_series) + len(batch_metrics),
             "new_keys": len(new_series) + len(new_metrics),
@@ -393,19 +394,17 @@ class MetricStore:
 
     def _rows_for(self, keyed: DataFrame, cols: tuple[str, str], new: set) -> DataFrame:
         """The batch rows whose ``cols`` key is in ``new``."""
-        wanted = self.spark.createDataFrame(sorted(new), f"{cols[0]} long, {cols[1]} long")
+        wanted = self.spark.createDataFrame(list(new), f"{cols[0]} long, {cols[1]} long")
         return keyed.join(F.broadcast(wanted), list(cols), "left_semi")
 
     def _write_catalogs(
-        self,
-        metric_rows: DataFrame | None,
-        index_rows: DataFrame | None,
-        series_rows: DataFrame | None,
+        self, metric_rows: DataFrame | None, series_rows: DataFrame | None
     ) -> None:
-        """Catalog rows from batch rows, series last (see ingest())."""
+        """Catalog rows from batch rows: metrics, index, then series last
+        (see ingest()); index and series rows come from ``series_rows``."""
         for table, rows, build in (
             (self.metrics, metric_rows, model.build_metrics_table),
-            (self.index, index_rows, model.build_index_table),
+            (self.index, series_rows, model.build_index_table),
             (self.series, series_rows, model.build_series_table),
         ):
             if rows is not None:

@@ -810,7 +810,13 @@ def test_one_new_series_writes_catalog_rows_for_it_only(spark, tmp_path, caplog)
 
 
 def test_known_field_with_new_type_updates_metrics_row(spark, tmp_path):
+    """The metrics row follows the field type each way: f64 -> i64 -> f64."""
     store = MetricStore(spark, str(tmp_path / "ftype"), HOUR)
+
+    def field_types():
+        rows = store.metrics.scan(ScanRequest(ordered=False)).collect()
+        return [(r.metric_name, r.field_name, r.field_type) for r in rows]
+
     store.ingest(_hosts(spark, "a", 1000))
     store.ingest(_hosts(spark, "a", 2000))  # known: reads the key set back
     as_long = spark.createDataFrame(
@@ -819,10 +825,10 @@ def test_known_field_with_new_type_updates_metrics_row(spark, tmp_path):
     )
     store.ingest(as_long)
     assert _catalog_ssts(store) == {"metrics": 2, "index": 1, "series": 1}
-    rows = store.metrics.scan(ScanRequest(ordered=False)).collect()
-    assert [(r.metric_name, r.field_name, r.field_type) for r in rows] == [
-        ("cpu", "value", "i64")
-    ]
+    assert field_types() == [("cpu", "value", "i64")]
+    store.ingest(_hosts(spark, "a", 4000, 4.0, 4))
+    assert _catalog_ssts(store) == {"metrics": 3, "index": 1, "series": 1}
+    assert field_types() == [("cpu", "value", "f64")]
 
 
 def test_key_set_is_reread_after_delete_restore_or_another_writer(
@@ -847,7 +853,10 @@ def test_key_set_is_reread_after_delete_restore_or_another_writer(
     assert series_keys(store) == {"host=a", "host=b"}
     keep = max(s.file_id for s in store.series.manifest.all_ssts())
     store.ingest(_hosts(spark, "abc", 4000))
+    # this handle's own catalog write (host=c) is read back, then reused
     info = _ingest_logged(store, _hosts(spark, "abc", 5000), caplog)
+    assert info["key_set"] == "re-read" and info["new_keys"] == 0
+    info = _ingest_logged(store, _hosts(spark, "abc", 5500), caplog)
     assert info["key_set"] == "reused" and info["new_keys"] == 0
     # another handle on the same root rolls the series table back to before
     # host=c; this handle's manifests do not see it until it re-reads
@@ -859,7 +868,7 @@ def test_key_set_is_reread_after_delete_restore_or_another_writer(
     reopened = MetricStore(spark, root, HOUR)
     assert series_keys(reopened) == {"host=a", "host=b", "host=c"}
     out = reopened.engine().select_series("cpu", [Matcher("host", "=", "c")])
-    assert sorted(r.ts_ms for r in out.collect()) == [4000, 5000, 6000]
+    assert sorted(r.ts_ms for r in out.collect()) == [4000, 5000, 5500, 6000]
 
 
 @pytest.mark.parametrize("failing", ["index", "series"])
