@@ -23,8 +23,6 @@ from __future__ import annotations
 import logging
 import threading
 
-import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -75,7 +73,7 @@ _PACKED_FIELDS = [
 ]
 
 
-def _key_set(keys: pa.Table, *cols: str) -> set:
+def _key_set(keys, *cols: str) -> set:
     """The distinct ``cols`` tuples of an Arrow-collected key frame (an
     Arrow collect skips building one Row object per catalog key)."""
     return set(zip(*(keys[c].to_pylist() for c in cols)))
@@ -338,6 +336,10 @@ class MetricStore:
         """The catalogs' key set, read back in one job; records the
         identity it is valid at (taken after catching up with other
         writers and before the read, so a concurrent change re-reads)."""
+        # imported here: a store that never re-reads (one-shot ingest,
+        # serving) does not load pyarrow into the driver
+        import pyarrow.compute as pc
+
         for t in (self.metrics, self.index, self.series):
             t.manifest.sync_if_behind()
         self._known_at = self._catalog_identity()
