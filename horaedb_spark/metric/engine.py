@@ -17,6 +17,7 @@ Spark-first planning choices:
 
 from __future__ import annotations
 
+import logging
 import re
 import threading
 from dataclasses import dataclass
@@ -26,6 +27,8 @@ from pyspark.sql import functions as F
 
 from horaedb_spark.core.timeutil import TimeRange
 from horaedb_spark.metric import model
+
+log = logging.getLogger(__name__)
 
 
 def _anchored(pattern: str) -> str:
@@ -391,14 +394,23 @@ class MetricEngine:
         # itself (block-level locking makes concurrent computes safe).
         background += [series_ck.count, index_ck.count, flat.count]
 
-        def _swallow(fn):
+        logged = threading.Lock()
+
+        def _background(fn):
             try:
                 fn()
             except Exception:
-                pass  # the per-string action will surface the real error
+                # the per-string action surfaces the error to the caller;
+                # the first background failure of this batch is logged
+                if logged.acquire(blocking=False):
+                    log.warning(
+                        "background materialization of a shared PromQL "
+                        "base failed; the per-string jobs recompute it",
+                        exc_info=True,
+                    )
 
         for fn in background:
-            threading.Thread(target=_swallow, args=(fn,), daemon=True).start()
+            threading.Thread(target=_background, args=(fn,), daemon=True).start()
         clone = MetricEngine.__new__(MetricEngine)
         clone.samples = self.samples
         clone.metrics = self.metrics

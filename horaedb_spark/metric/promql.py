@@ -1911,11 +1911,16 @@ def promql_eval_many(
             )
         # engines cache()d by the caller already share a persisted base —
         # re-materializing them would duplicate the working set and drop
-        # the _flat pre-join every compiled plan reads (ADVICE r14)
+        # the _flat pre-join every compiled plan reads (ADVICE r14). An
+        # engine whose strings reference no metric (vector(1), time())
+        # has nothing to share: materialized(set()) would checkpoint the
+        # whole store.
         shared = {
             k: e
             for k, e in uniq.items()
-            if counts[k] >= 2 and not getattr(e, "_cached", False)
+            if counts[k] >= 2
+            and not getattr(e, "_cached", False)
+            and batch_metrics[k] != set()
         }
         if shared:
             with ThreadPoolExecutor(min(len(shared), max_workers)) as pool:

@@ -24,11 +24,22 @@ whose SST set changed — DROP PARTITION then one append-mode ``insertInto``
 job over their union (NOT dynamic partition overwrite, which skips
 partitions absent from the incoming data and would leave a fully-deleted
 segment serving stale rows) — and drops partitions whose segment
-disappeared (TTL). A
-compaction that rewrites one segment therefore refreshes one partition, not
-the table; the initial build is the only full-table write. ``Compactor``
-calls ``refresh()`` after each executed task when the table opted in, which
-is what "maintains the bucketed layout through compaction" means here.
+disappeared (TTL). The initial build is the only full-table write.
+
+Compaction RE-KEYS instead of rewriting: a compaction task merges a
+segment's SSTs into one SST, and the segment's merged rows are the same
+before and after. So when the mirror partition was built from exactly the
+segment's pre-compaction SST set, ``rekey()`` records the post-compaction
+set's digest for it in ``bucketed.json`` (a metadata write, no Spark job)
+and the partition files stay as they are. ``Compactor`` swaps the manifest
+and re-keys under the mirror's lock, then calls ``refresh()`` only if the
+mirror is still stale: other segments, a segment where the task also
+expired an SST (TTL expiry does change rows), a mirror that was already
+stale, or a foreign writer's SSTs take the normal refresh path. That is
+what "maintains the bucketed layout through compaction" means here.
+``refresh()``, ``rekey()`` and ``rebuild()`` hold one per-mirror lock:
+two concurrent refreshes of one mirror (``Compactor.run_all``'s task pool)
+would otherwise drop and append the same partitions twice.
 
 Tradeoffs (DIVERGENCES.md #27): the bucket count is FIXED at creation —
 re-bucketing is a full rebuild (``rebuild()``), so pick the count for the
@@ -54,6 +65,7 @@ import hashlib
 import json
 import os
 import shutil
+import threading
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -74,6 +86,11 @@ def _is_missing_file_error(e: Exception) -> bool:
         or "FileNotFoundException" in msg
         or "FILE_NOT_EXIST" in msg
     )
+
+
+def _ids_digest(file_ids) -> str:
+    """One segment's freshness token: md5 over its sorted SST ids."""
+    return hashlib.md5(",".join(map(str, sorted(file_ids))).encode()).hexdigest()
 
 
 @dataclass(frozen=True)
@@ -123,6 +140,10 @@ class BucketedMirror:
         # must be O(1) between writes
         self._digest_memo: tuple | None = None
         self._stored_memo: dict | None = None
+        # serializes refresh/rekey/rebuild on this instance. Re-entrant:
+        # rebuild() calls refresh(), and Compactor holds it across its
+        # manifest swap and rekey()
+        self.lock = threading.RLock()
         self.name = (
             "bkt_"
             + hashlib.md5(os.path.abspath(table.root).encode()).hexdigest()[:16]
@@ -149,12 +170,7 @@ class BucketedMirror:
             by_seg.setdefault(truncate_by(s.time_range.start, dur), []).append(
                 s.file_id
             )
-        digests = {
-            str(seg): hashlib.md5(
-                ",".join(map(str, sorted(ids))).encode()
-            ).hexdigest()
-            for seg, ids in by_seg.items()
-        }
+        digests = {str(seg): _ids_digest(ids) for seg, ids in by_seg.items()}
         self._digest_memo = (counter, digests)
         return digests
 
@@ -327,6 +343,10 @@ class BucketedMirror:
         table schema change (evolution/migration) forces a full rebuild —
         incremental appends under a different spec would mix layouts, and
         the catalog table's column set is fixed at creation."""
+        with self.lock:
+            return self._refresh_locked()
+
+    def _refresh_locked(self) -> dict:
         from horaedb_spark.storage.table import SEGMENT_COLUMN
 
         spark = self.table.spark
@@ -497,10 +517,47 @@ class BucketedMirror:
         refresh() would then just re-register over them instead of
         rewriting — rebuild() must always rewrite."""
         spark = self.table.spark
-        if self._exists():
-            spark.sql(f"DROP TABLE {self.name}")
-        shutil.rmtree(self._warehouse_location(), ignore_errors=True)
-        return self.refresh()
+        with self.lock:
+            if self._exists():
+                spark.sql(f"DROP TABLE {self.name}")
+            shutil.rmtree(self._warehouse_location(), ignore_errors=True)
+            return self.refresh()
+
+    def rekey(self, segment: int, before_ids, after_ids) -> bool:
+        """Record a compaction of ``segment`` without rewriting its
+        partition. ``before_ids`` is the segment's live SST set before the
+        compaction's manifest swap; ``after_ids`` is that set with the
+        task's inputs replaced by its output. Compaction keeps the merged
+        rows, so a partition built from ``before_ids`` already holds the
+        merged rows of ``after_ids`` and only its digest changes: one meta
+        write, no Spark job.
+
+        Re-keys (returns True) only when the stored digest is
+        ``before_ids``' and the manifest's live set for the segment is now
+        exactly ``after_ids``. An SST of the segment that the same task
+        expired (TTL expiry drops rows) leaves a live set smaller than
+        ``after_ids``, and an SST another writer added leaves a larger one:
+        both return False and leave the segment to ``refresh()``."""
+        seg = str(segment)
+        with self.lock:
+            # another instance over this root may have written the meta
+            # since this one memoized it (same re-read as refresh())
+            self._stored_memo = None
+            meta = self._stored()
+            if (
+                meta.get("spec") != self._spec_json()
+                or meta.get("schema") != self._schema_token()
+                or meta["segments"].get(seg) != _ids_digest(before_ids)
+                or self._live_digests().get(seg) != _ids_digest(after_ids)
+            ):
+                return False
+            meta_out = {
+                **meta,
+                "segments": {**meta["segments"], seg: _ids_digest(after_ids)},
+            }
+            self.table.backend.put_text(self._meta_path, json.dumps(meta_out))
+            self._stored_memo = meta_out
+            return True
 
     # ------------------------------------------------------------ serve
 

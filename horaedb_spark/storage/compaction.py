@@ -28,6 +28,7 @@ submitted as its own parallel job.
 
 from __future__ import annotations
 
+import contextlib
 import logging
 import time
 from dataclasses import dataclass, field
@@ -336,9 +337,12 @@ class Compactor:
 
     def execute(self, task: CompactionTask) -> SstFile | None:
         manifest = self.table.manifest
+        mirror = self.table.bucketed if self.table.bucket_spec is not None else None
         input_ids = [s.file_id for s in task.inputs]
         if input_ids and not manifest.try_mark_compacting(input_ids):
             return None  # lost the CAS race (picker.rs:100-105)
+        # released after the mirror maintenance at the end (see the swap)
+        mirror_held = contextlib.ExitStack()
         try:
             new_sst = None
             if task.inputs:
@@ -405,7 +409,13 @@ class Compactor:
                     min_seq=min(s.effective_min_seq for s in task.inputs),
                 )
             # Manifest swap BEFORE physical deletes (executor.rs:203-217).
+            # On a bucketed table the swap and the mirror maintenance after
+            # it hold the mirror's lock, so a concurrent task's refresh()
+            # never sees this segment swapped but not yet re-keyed (and
+            # rewrites its partition for nothing).
             to_delete = input_ids + [s.file_id for s in task.expired]
+            if mirror is not None:
+                mirror_held.enter_context(mirror.lock)
             manifest.update([new_sst] if new_sst else [], to_delete)
             # Physical deletes, best-effort (executor.rs:218-253). External
             # (clone-referenced) files belong to another table: drop only
@@ -419,30 +429,41 @@ class Compactor:
                     self.table.backend.delete_tree(sst.path)
         except Exception:
             manifest.unmark_compacting(input_ids)
+            mirror_held.close()
             raise
-        # Bucketed tables keep their read-optimized mirror current through
-        # compaction: only the partitions whose SST set this task changed
-        # are rewritten (storage/bucketed.py). OUTSIDE the commit try-block
-        # and best-effort: at this point the manifest swap is committed and
-        # the input files deleted, so a mirror failure must not make the
-        # task report as failed (the except above would unmark ids that no
-        # longer exist, and a retry would scan deleted paths). A skipped
-        # refresh self-heals — serve() detects staleness via is_fresh and
-        # refreshes on the next read.
-        if self.table.bucket_spec is not None:
-            try:
-                self.table.refresh_bucketed()
-            except Exception:
-                # warning, not stderr print: a driver running many
-                # compaction tasks must be able to surface REPEATED refresh
-                # failures (each leaves serve()'s auto_refresh re-attempting
-                # a full refresh on every read) through log routing
-                logging.getLogger(__name__).warning(
-                    "bucketed mirror refresh deferred after compaction of "
-                    "%s; serve() will retry on next read",
-                    self.table.root,
-                    exc_info=True,
-                )
+        with mirror_held:
+            # Bucketed tables keep their read-optimized mirror current
+            # through compaction. The segment's merged rows did not change,
+            # so a partition built from exactly its pre-swap SST set is
+            # re-keyed to the new set, a metadata write (storage/bucketed.py);
+            # refresh() runs only for what that cannot cover: other stale
+            # segments, an SST this task expired, a mirror that was already
+            # stale. OUTSIDE the commit try-block and best-effort: at this
+            # point the manifest swap is committed and the input files
+            # deleted, so a mirror failure must not make the task report as
+            # failed (the except above would unmark ids that no longer
+            # exist, and a retry would scan deleted paths). A skipped
+            # refresh self-heals — serve() detects staleness via is_fresh
+            # and refreshes on the next read.
+            if mirror is not None:
+                try:
+                    if new_sst is not None:
+                        after = seg_ids - set(input_ids) | {new_sst.file_id}
+                        mirror.rekey(seg, seg_ids, after)
+                    if not mirror.is_fresh():
+                        mirror.refresh()
+                except Exception:
+                    # warning, not stderr print: a driver running many
+                    # compaction tasks must be able to surface REPEATED
+                    # refresh failures (each leaves serve()'s auto_refresh
+                    # re-attempting a full refresh on every read) through
+                    # log routing
+                    logging.getLogger(__name__).warning(
+                        "bucketed mirror refresh deferred after compaction of "
+                        "%s; serve() will retry on next read",
+                        self.table.root,
+                        exc_info=True,
+                    )
         return new_sst
 
     def _write_compacted(

@@ -193,6 +193,11 @@ class Manifest:
         # O(n_ssts) derivations keyed on it — exactly as fresh as reading
         # _ssts directly, since both live in this process.
         self.mutations = 0
+        # Highest SST file id this handle has seen in the log, its own and
+        # other writers'. ColumnarTable allocates ids above it, so an SST or
+        # tombstone written after this handle absorbed a foreign delta
+        # outranks (and never reuses the id of) what that delta added.
+        self.max_file_id = -1
         self._next_delta_id = 0
         self._folded_through = -1
         self.backend.makedirs(self.delta_dir)
@@ -294,6 +299,7 @@ class Manifest:
 
     def _recover(self) -> None:
         self._ssts, self._folded_through, self._next_delta_id, _ = self._load_log()
+        self.max_file_id = max(self.max_file_id, max(self._ssts, default=-1))
         # Only runs from __init__ today (no memo exists yet), but bump the
         # counter anyway: a future post-init call must invalidate any
         # mutation-keyed digest memo rather than silently serve stale state.
@@ -314,6 +320,7 @@ class Manifest:
         for fid in flags:
             if fid in self._ssts:
                 self._ssts[fid] = replace(self._ssts[fid], in_compaction=True)
+        self.max_file_id = max(self.max_file_id, max(self._ssts, default=-1))
         # Bump AFTER the dict mutations: a concurrent reader (the background
         # fold thread memoizes digests keyed on this counter) that races the
         # refresh then memoizes under the OLD counter and this bump
@@ -325,6 +332,7 @@ class Manifest:
         for d in delta.get("to_adds", []):
             sst = SstFile.from_json(d)
             self._ssts[sst.file_id] = sst
+            self.max_file_id = max(self.max_file_id, sst.file_id)
         for fid in delta.get("to_deletes", []):
             self._ssts.pop(fid, None)
         # After the mutations — see _refresh for the memo-race rationale.

@@ -166,9 +166,10 @@ class ColumnarTable:
             self._persist_schema()
         self.manifest = Manifest(root, backend=self.backend)
         # Monotonic file-id allocation, wall-clock seeded exactly like
-        # sst.rs:39-46 (single-writer assumption documented there too).
-        existing = [s.file_id for s in self.manifest.all_ssts()]
-        self._next_id = max([time.time_ns(), *[i + 1 for i in existing]])
+        # sst.rs:39-46. The reference assumes one writer; here every
+        # allocation also clears the highest id the manifest has absorbed
+        # (alloc_file_id), so handles sharing a root stay ordered.
+        self._next_id = max(time.time_ns(), self.manifest.max_file_id + 1)
         self._id_lock = threading.Lock()
 
     def _persist_schema(self) -> None:
@@ -301,9 +302,15 @@ class ColumnarTable:
         return self.bucketed.serve(auto_refresh=auto_refresh)
 
     def alloc_file_id(self) -> int:
+        """The next file id (= merge sequence), above every id this
+        handle's manifest holds. That includes ids another handle on the
+        same root committed, once the manifest has absorbed them
+        (``sync_if_behind`` or a CAS-conflict re-read): a write after that
+        outranks the other handle's tombstones and never reuses its SST
+        ids."""
         with self._id_lock:
-            fid = self._next_id
-            self._next_id += 1
+            fid = max(self._next_id, self.manifest.max_file_id + 1)
+            self._next_id = fid + 1
             return fid
 
     # backwards-compatible private alias

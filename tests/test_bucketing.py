@@ -247,6 +247,194 @@ def test_compaction_maintains_bucketed_mirror(spark, tmp_path):
     assert got == [(1, 5.0)]
 
 
+def _partition_files(t, seg):
+    """{file name: mtime_ns} of one mirror partition directory."""
+    import os
+
+    d = os.path.join(t.bucketed._warehouse_location(), f"__segment__={seg}")
+    return {n: os.stat(os.path.join(d, n)).st_mtime_ns for n in os.listdir(d)}
+
+
+def _count_refreshes(t):
+    """Record every BucketedMirror.refresh() call on ``t``'s mirror."""
+    calls = []
+    mirror = t.bucketed
+    orig = mirror.refresh
+
+    def counted():
+        calls.append(1)
+        return orig()
+
+    mirror.refresh = counted
+    return calls
+
+
+def _assert_mirror_equals_scan(t):
+    served = t.bucketed_scan(auto_refresh=False)
+    got = sorted(map(tuple, served.select("k", "ts_ms", "v").collect()))
+    want = sorted(map(tuple, t.scan().select("k", "ts_ms", "v").collect()))
+    assert got == want
+    return got
+
+
+def test_compaction_rekeys_fresh_partition_without_rewrite(spark, tmp_path):
+    """Compacting a segment the mirror built from exactly its pre-compaction
+    SST set re-keys the partition in the meta: its parquet files stay (same
+    names and mtimes), no refresh() runs, and the mirror stays fresh and
+    equal to scan()."""
+    from horaedb_spark.core.timeutil import TimeRange
+    from horaedb_spark.storage.bucketed import _ids_digest
+    from horaedb_spark.storage.compaction import CompactionTask, Compactor
+    from horaedb_spark.storage.table import WriteRequest
+
+    t = _mk_table(spark, tmp_path, "bt_rekey")
+    t.write(WriteRequest(_rows(spark, [(1, 100, 1.0), (2, 200, 2.0)]), TimeRange(0, 1000)))
+    t.write(WriteRequest(_rows(spark, [(1, 100, 5.0)]), TimeRange(0, 1000)))
+    t.write(WriteRequest(_rows(spark, [(3, 1500, 3.0)]), TimeRange(1000, 2000)))
+    t.refresh_bucketed()
+    files0, files1 = _partition_files(t, 0), _partition_files(t, 1000)
+    calls = _count_refreshes(t)
+
+    seg0 = [s for s in t.manifest.all_ssts() if s.time_range.start == 0]
+    new = Compactor(t).execute(CompactionTask(inputs=seg0))
+    assert new is not None
+    assert calls == []
+    assert _partition_files(t, 0) == files0
+    assert _partition_files(t, 1000) == files1
+    assert t.bucketed._stored()["segments"]["0"] == _ids_digest([new.file_id])
+    assert t.bucketed.is_fresh()
+    assert _assert_mirror_equals_scan(t) == [
+        (1, 100, 5.0), (2, 200, 2.0), (3, 1500, 3.0)
+    ]
+    _assert_bucketed_self_join_no_exchange(spark, t)
+
+
+def test_compaction_before_mirror_saw_latest_write_refreshes(spark, tmp_path):
+    """A write the mirror has not seen makes the segment's stored digest
+    differ from its pre-compaction SST set: no re-key, the compaction's
+    refresh() rewrites the partition, and the mirror serves the write."""
+    from horaedb_spark.core.timeutil import TimeRange
+    from horaedb_spark.storage.compaction import CompactionTask, Compactor
+    from horaedb_spark.storage.table import WriteRequest
+
+    t = _mk_table(spark, tmp_path, "bt_rekey_stale")
+    t.write(WriteRequest(_rows(spark, [(1, 100, 1.0)]), TimeRange(0, 1000)))
+    t.write(WriteRequest(_rows(spark, [(2, 200, 2.0)]), TimeRange(0, 1000)))
+    t.refresh_bucketed()
+    t.write(WriteRequest(_rows(spark, [(4, 400, 4.0)]), TimeRange(0, 1000)))
+    files0 = _partition_files(t, 0)
+    calls = _count_refreshes(t)
+
+    # compact the two SSTs the mirror saw; the third stays beside the output
+    seg0 = sorted(t.manifest.all_ssts(), key=lambda s: s.file_id)[:2]
+    assert Compactor(t).execute(CompactionTask(inputs=seg0)) is not None
+    assert calls == [1]
+    assert _partition_files(t, 0) != files0
+    assert t.bucketed.is_fresh()
+    assert _assert_mirror_equals_scan(t) == [
+        (1, 100, 1.0), (2, 200, 2.0), (4, 400, 4.0)
+    ]
+
+
+def test_compaction_expiring_an_sst_of_its_segment_rewrites_partition(spark, tmp_path):
+    """TTL expiry drops rows, so a task that compacts a segment AND expires
+    one of its SSTs must not re-key: the partition is rewritten without the
+    expired rows."""
+    from horaedb_spark.core.timeutil import TimeRange
+    from horaedb_spark.storage.compaction import Compactor, SchedulerConfig
+    from horaedb_spark.storage.table import WriteRequest
+
+    t = _mk_table(spark, tmp_path, "bt_rekey_ttl")
+    t.write(WriteRequest(_rows(spark, [(7, 5, 7.0)]), TimeRange(0, 10)))
+    t.write(WriteRequest(_rows(spark, [(1, 600, 1.0)]), TimeRange(500, 1000)))
+    t.write(WriteRequest(_rows(spark, [(1, 600, 2.0), (2, 700, 2.0)]), TimeRange(500, 1000)))
+    t.refresh_bucketed()
+    files0 = _partition_files(t, 0)
+    calls = _count_refreshes(t)
+
+    # watermark 100: the [0, 10) SST expires, the other two compact
+    comp = Compactor(t, SchedulerConfig(input_sst_min_num=2, ttl_ms=1000))
+    assert len(comp.run_all(now_ms=1100)) == 1
+    assert len(t.manifest.all_ssts()) == 1
+    assert calls == [1]
+    assert _partition_files(t, 0) != files0
+    assert t.bucketed.is_fresh()
+    assert _assert_mirror_equals_scan(t) == [(1, 600, 2.0), (2, 700, 2.0)]
+
+
+def test_run_all_rekeys_every_compacted_segment(spark, tmp_path):
+    """run_all compacts two segments on its task pool; both partitions are
+    re-keyed, none is rewritten, and no refresh() runs: the swap and the
+    re-key of one task hold the mirror's lock, so the other task never
+    sees a segment swapped but not yet re-keyed."""
+    from horaedb_spark.core.timeutil import TimeRange
+    from horaedb_spark.storage.compaction import Compactor, SchedulerConfig
+    from horaedb_spark.storage.table import WriteRequest
+
+    t = _mk_table(spark, tmp_path, "bt_rekey_all")
+    for seg in (0, 1000):
+        tr = TimeRange(seg, seg + 1000)
+        t.write(WriteRequest(_rows(spark, [(1, seg + 1, 1.0), (2, seg + 2, 2.0)]), tr))
+        t.write(WriteRequest(_rows(spark, [(1, seg + 1, 3.0)]), tr))
+    t.refresh_bucketed()
+    files = {seg: _partition_files(t, seg) for seg in (0, 1000)}
+    calls = _count_refreshes(t)
+
+    out = Compactor(t, SchedulerConfig(input_sst_min_num=2)).run_all()
+    assert len(out) == 2
+    assert calls == []
+    assert {seg: _partition_files(t, seg) for seg in (0, 1000)} == files
+    assert t.bucketed.is_fresh()
+    assert _assert_mirror_equals_scan(t) == [
+        (1, 1, 3.0), (1, 1001, 3.0), (2, 2, 2.0), (2, 1002, 2.0)
+    ]
+
+
+def test_concurrent_refreshes_of_one_mirror(spark, tmp_path):
+    """Threads refreshing one mirror with two changed segments (as
+    Compactor.run_all's task pool does): none raises, and the mirror serves
+    exactly scan() (no partition dropped or appended twice) and reports
+    fresh."""
+    import sys
+    import threading
+
+    from horaedb_spark.core.timeutil import TimeRange
+    from horaedb_spark.storage.table import WriteRequest
+
+    t = _mk_table(spark, tmp_path, "bt_race_refresh")
+    t.write(WriteRequest(_rows(spark, [(1, 100, 1.0)]), TimeRange(0, 1000)))
+    t.write(WriteRequest(_rows(spark, [(2, 1100, 2.0)]), TimeRange(1000, 2000)))
+    t.refresh_bucketed()
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for trial in range(3):
+            for seg in (0, 1000):
+                row = (10 + trial + seg, seg + 200 + trial, 1.0)
+                t.write(WriteRequest(_rows(spark, [row]), TimeRange(seg, seg + 1000)))
+            barrier = threading.Barrier(6)
+            errors = []
+
+            def refresh():
+                barrier.wait(timeout=60)
+                try:
+                    t.refresh_bucketed()
+                except Exception as e:  # noqa: BLE001 — asserted below
+                    errors.append(e)
+
+            threads = [threading.Thread(target=refresh) for _ in range(6)]
+            for th in threads:
+                th.start()
+            for th in threads:
+                th.join(timeout=300)
+            assert not any(th.is_alive() for th in threads)
+            assert errors == []
+            assert t.bucketed.is_fresh()
+            assert len(_assert_mirror_equals_scan(t)) == 2 * (trial + 2)
+    finally:
+        sys.setswitchinterval(switch)
+
+
 def test_bucketed_mirror_tracks_dml_and_random_ops(spark, tmp_path):
     """Falsifier sweep: after any interleaving of writes, DELETEs, UPDATEs
     and compactions, a refreshed mirror serves EXACTLY table.scan() — the

@@ -1055,6 +1055,74 @@ def test_eval_many_share_base_row_equality(spark):
     assert reduce(DataFrame.unionByName, solo).count() == base[0].count()
 
 
+def test_eval_many_does_not_materialize_metricless_strings(spark, monkeypatch):
+    """share_base leaves an engine alone when its strings reference no
+    metric: the union of their metrics is the empty set, and
+    materialized(set()) would checkpoint the whole store for strings that
+    only read the evaluation grid."""
+    from horaedb_spark.metric.engine import MetricEngine
+    from horaedb_spark.metric.promql import promql_eval_many
+
+    eng = _engine(spark, SF_DIR)
+    suite = ["vector(1)", "vector(time())"]
+    calls = []
+    orig = MetricEngine.materialized
+
+    def spy(self, metrics=None):
+        calls.append(metrics)
+        return orig(self, metrics)
+
+    monkeypatch.setattr(MetricEngine, "materialized", spy)
+    sharing = promql_eval_many(
+        [(eng, q) for q in suite], DAY, materialize=True, share_base=True
+    )
+    assert calls == []
+    base = promql_eval_many([(eng, q) for q in suite], DAY, materialize=True)
+    for a, b in zip(base, sharing):
+        assert a.count() == b.count() > 0
+        assert a.exceptAll(b).count() == 0
+
+
+def test_materialized_logs_a_background_failure_once(spark, monkeypatch, caplog):
+    """materialized() lands its checkpoints in background threads. When
+    they fail, the first failure is logged through the module logger,
+    once, instead of being dropped."""
+    import logging
+    import threading
+    import types
+
+    from horaedb_spark.metric import engine as engine_mod
+
+    eng = _engine(spark, SF_DIR)
+    started = []
+
+    def thread(*args, **kwargs):
+        th = threading.Thread(*args, **kwargs)
+        started.append(th)
+        return th
+
+    def failing_count(self):
+        raise RuntimeError("planted failure")
+
+    monkeypatch.setattr(
+        engine_mod,
+        "threading",
+        types.SimpleNamespace(Lock=threading.Lock, Thread=thread),
+    )
+    with caplog.at_level(logging.WARNING, logger=engine_mod.__name__):
+        # the background jobs are the frames' count(): fail those
+        with monkeypatch.context() as m:
+            m.setattr(type(eng.data), "count", failing_count)
+            eng.materialized(metrics={"click"})
+            assert len(started) >= 2
+            for th in started:
+                th.join(timeout=60)
+    assert not any(th.is_alive() for th in started)
+    records = [r for r in caplog.records if r.name == engine_mod.__name__]
+    assert len(records) == 1
+    assert "planted failure" in str(records[0].exc_info[1])
+
+
 def test_referenced_metrics_walk_is_exhaustive():
     """referenced_metrics() is the size guard for share_base: every metric
     a string reads MUST appear (a miss would filter that metric out of the

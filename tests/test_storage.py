@@ -232,6 +232,35 @@ def test_bulk_ingest_one_sst_per_segment(spark, tmp_path):
     assert len([r for r in got if (r[0], r[1]) == (1, 1)]) == 1
 
 
+def test_two_handles_on_one_root_allocate_ids_past_absorbed_deltas(spark, tmp_path):
+    """Two handles on one root each allocate file ids (= merge sequence)
+    from their own counter. Once a handle has absorbed the other's deltas
+    (sync_if_behind), its next ids lie above every id it absorbed, so
+    (1) two handles bulk-ingesting one segment never pick the same SST id,
+    and (2) a re-write of a key the other handle deleted outranks that
+    handle's tombstone."""
+    root = str(tmp_path / "two")
+    cols = "pk1 long, pk2 long, value long, ts long"
+    t0 = 1_767_225_600_000  # a real epoch-ms segment: bulk ids run ahead of the clock
+    seed = ColumnarTable(spark, root, kv_schema(), 1000)
+    seed.bulk_ingest(spark.createDataFrame([(1, 1, 10, t0)], cols), "ts")
+    a = ColumnarTable(spark, root, kv_schema(), 1000)
+    b = ColumnarTable(spark, root, kv_schema(), 1000)
+
+    (sa,) = a.bulk_ingest(spark.createDataFrame([(2, 2, 20, t0 + 1)], cols), "ts")
+    b.manifest.sync_if_behind()
+    (sb,) = b.bulk_ingest(spark.createDataFrame([(2, 2, 21, t0 + 2)], cols), "ts")
+    assert sb.file_id > sa.file_id
+
+    b.delete("pk1 = 1")
+    a.manifest.sync_if_behind()
+    _write(a, [(1, 1, 11)], TimeRange(t0, t0 + 1000))
+    want = [(1, 1, 11), (2, 2, 21)]
+    assert [tuple(r) for r in a.scan().collect()] == want
+    b.manifest.sync_if_behind()
+    assert [tuple(r) for r in b.scan().collect()] == want
+
+
 def test_write_config_reaches_parquet_footers(spark, tmp_path):
     """Writer config parity (reference config.rs:120-133): codec, dictionary,
     and PK bloom filters plumb through to the parquet footers of an SST."""
