@@ -101,12 +101,6 @@ def _parse_byte_conf(value: str) -> int:
         return 10 << 20
 
 
-# serializes materialized()'s AQE-off window for the _flat checkpoint so a
-# concurrent materialization's conf restore cannot strip another's
-# partitioning mid-plan (see materialized())
-_FLAT_CKPT_LOCK = threading.Lock()
-
-
 class MetricEngine:
     """Query layer over a samples frame (name, labels, ts_ms, value, seq)."""
 
@@ -124,21 +118,25 @@ class MetricEngine:
         self.index = model.build_index_table(samples)
         self.tags = model.build_tags_table(samples)
         self.data = model.build_data_table(samples)
-        self._cached = False
         self._flat: DataFrame | None = None
 
     def _series_join_side(self) -> DataFrame:
-        """``series (tsid, series_key)`` prepared for a data-side join:
-        broadcast-hinted only when Catalyst's size estimate fits the
-        threshold (a plan-stats lookup — metadata, no job). The decision is
-        memoized per engine: the series frame never changes under an
-        engine, and the stats lookup runs a full driver-side optimizer
-        pass we don't want on every labeled select."""
+        """``series (tsid, series_key)`` prepared for a data-side join,
+        broadcast-hinted per ``_series_broadcast_hint``."""
         sel = self.series.select("tsid", "series_key")
+        return F.broadcast(sel) if self._series_broadcast_hint() else sel
+
+    def _series_broadcast_hint(self) -> bool:
+        """Whether the series label table broadcasts on data joins: only
+        when Catalyst's size estimate fits the threshold (a plan-stats
+        lookup — metadata, no job). The decision is memoized per engine:
+        the series frame never changes under an engine, and the stats
+        lookup runs a full driver-side optimizer pass we don't want on
+        every labeled select."""
         thr = self.series_broadcast_threshold
         if thr is None:
             thr = _parse_byte_conf(
-                sel.sparkSession.conf.get(
+                self.series.sparkSession.conf.get(
                     "spark.sql.autoBroadcastJoinThreshold", "10MB"
                 )
             )
@@ -155,67 +153,13 @@ class MetricEngine:
             if thr <= 0:
                 hint = False
             else:
+                sel = self.series.select("tsid", "series_key")
                 est = int(
                     sel._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
                 )
                 hint = est <= thr
             memo[thr] = hint
-        return F.broadcast(sel) if hint else sel
-
-    def _series_broadcast_hint(self) -> bool:
-        """The memoized broadcast decision alone — for joins whose series
-        side is NOT ``self.series`` (e.g. ``materialized()`` joining the
-        checkpointed series, whose LogicalRDD has no usable stats)."""
-        self._series_join_side()
-        thr = self.series_broadcast_threshold
-        if thr is None:
-            thr = _parse_byte_conf(
-                self.series.sparkSession.conf.get(
-                    "spark.sql.autoBroadcastJoinThreshold", "10MB"
-                )
-            )
-        return bool(self.__dict__["_series_broadcast_memo"].get(thr))
-
-    def cache(self) -> "MetricEngine":
-        """Persist the derived tables for engines that serve MANY queries
-        over one base (dashboards, rule evaluators, multi-string suites).
-
-        Two things are materialized:
-
-        - ``data``/``series``/``index``/``metrics`` — without this, every
-          compiled PromQL plan re-derives the D10 dedup window + label
-          explode from the raw scan; a 20-string evaluation repeats that
-          subtree 20x inside one union plan. This is the Spark analogue of
-          the reference serving reads from merged/compacted SSTs rather
-          than re-merging per query (compaction materializes the dedup
-          once; src/columnar_storage/src/compaction/executor.rs:155-222).
-        - ``_flat`` — data pre-joined with series_key and REPARTITIONED BY
-          series_key. Every PromQL kernel's first aggregation/window keys
-          on (series_key, bucket); HashPartitioning(series_key) satisfies
-          that clustering, so per-series computation runs exchange-free on
-          the cached partitioning — the one data-sized shuffle in every
-          compiled string is paid once at cache build instead of per
-          query. At cluster scale this is the difference between one
-          shuffle of the working set and one per dashboard panel.
-
-        MEMORY_AND_DISK: partitions that don't fit spill, never recompute
-        from the scan. Idempotent; lazy (first action materializes)."""
-        if not self._cached:
-            from pyspark import StorageLevel
-
-            for df in (self.data, self.series, self.index, self.metrics):
-                df.persist(StorageLevel.MEMORY_AND_DISK)
-            self._flat = (
-                self.data.join(self._series_join_side(), "tsid", "left")
-                .repartition("series_key")
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            self._cached = True
-            # compiled-plan memo entries predate the caching state change:
-            # they'd keep serving pre-_flat plans (stale perf, not stale
-            # results) — drop them so recompiles track the cached frames
-            self.__dict__.pop("_eval_memo", None)
-        return self
+        return hint
 
     def materialized(self, metrics=None) -> "MetricEngine":
         """A shallow clone whose derived tables (``data``, ``series``,
@@ -229,11 +173,13 @@ class MetricEngine:
         the derived tables once collapses every per-string plan to a
         filter over executor-resident blocks — the same job the reference
         assigns to compaction (serve merged SSTs, don't re-merge per query;
-        src/columnar_storage/src/compaction/executor.rs). The data lands in
-        the ``cache()`` ``_flat`` shape (pre-joined with series_key,
-        repartitioned by it, partitioning preserved through the
-        checkpoint's LogicalRDD), so per-string plans additionally lose
-        the data ⋈ series join and the per-series shuffle (round 15).
+        src/columnar_storage/src/compaction/executor.rs). The data lands as
+        ``_flat`` (pre-joined with series_key, repartitioned by it,
+        partitioning preserved through the checkpoint's LogicalRDD), so
+        per-string plans additionally lose the data ⋈ series join and the
+        per-series shuffle: a per-series aggregation over a labeled
+        selection plans with no Exchange. ``_flat`` is planned in a cloned
+        session with AQE off; the caller's session conf is never changed.
 
         ``metrics`` (round 15, VERDICT r14 #2 — the 100 TB size guard):
         the metric names the batch actually references. When given, the
@@ -280,9 +226,10 @@ class MetricEngine:
         sort-merge); the data-range bounds memo transfers for the same
         reason (same rows, one less probe job)."""
 
-        # populate the broadcast memo from the PARENT's stats before the
-        # clone inherits it — the clone's checkpointed series has no stats
-        self._series_join_side()
+        # decide the series broadcast from the PARENT's stats (memoized)
+        # before the clone inherits the memo — the clone's checkpointed
+        # series has no stats
+        broadcast = self._series_broadcast_hint()
         data, index, series = self.data, self.index, self.series
         names = sorted(set(metrics)) if metrics is not None else None
 
@@ -320,10 +267,9 @@ class MetricEngine:
         elif names:
             # store-backed: metric_id is a stored column (pushes/prunes
             # as-is) and the scan is already merged — filter in place
-            cond = None
-            for name in names:
-                eq = F.col("metric_id") == F.xxhash64(F.lit(name))
-                cond = eq if cond is None else (cond | eq)
+            cond = F.col("metric_id").isin(
+                *[F.xxhash64(F.lit(n)) for n in names]
+            )
             data = data.filter(cond)
             index = index.filter(cond)
             est_src = data
@@ -339,21 +285,21 @@ class MetricEngine:
         series_ck = series.localCheckpoint(eager=False)
         index_ck = index.localCheckpoint(eager=False)
         # ONE job derives the bounded data and lands it pre-joined with
-        # series_key and REPARTITIONED BY series_key (the cache() _flat
-        # shape): every per-string kernel's first aggregation/window keys
-        # on (series_key, ...), and a localCheckpoint preserves the
+        # series_key and REPARTITIONED BY series_key (``_flat``): every
+        # per-string kernel's first aggregation/window keys on
+        # (series_key, ...), and a localCheckpoint preserves the
         # physical partitioning through the LogicalRDD — so the one
         # data-sized shuffle in every compiled string is paid once per
         # BATCH instead of once per string, and per-string plans lose the
         # data ⋈ series join outright. ``data`` is served from the same
         # blocks by projection (no second data-sized checkpoint).
         side = series_ck.select("tsid", "series_key")
-        if self._series_broadcast_hint():
+        if broadcast:
             side = F.broadcast(side)
         # Partition count is derived from the INPUT's size estimate
         # (~32 MB of source bytes per partition, i.e. ~100-250 MB
         # in-memory), clamped to [1, spark.sql.shuffle.partitions]: AQE is
-        # off for this one job (below), so it cannot coalesce for us, and
+        # off for this one frame (below), so it cannot coalesce for us, and
         # a fixed conf-sized count hands every tiny per-string job
         # conf-many near-empty tasks while the conf itself is the
         # deployment's parallelism ceiling at scale.
@@ -369,24 +315,20 @@ class MetricEngine:
         # the checkpoint only carries the repartition's hashpartitioning
         # into its LogicalRDD when the plan is NOT wrapped in
         # AdaptiveSparkPlanExec (AQE's output partitioning is invisible to
-        # LogicalRDD.fromDataset — verified empirically: AQE on = Exchange
-        # under every downstream per-series agg, AQE off = none). Plan
-        # this ONE frame with AQE off; the lock serializes concurrent
-        # materializations (promql_eval_many's per-engine pool) through the
-        # conf toggle so a sibling's restore cannot strip a flat mid-plan.
+        # LogicalRDD.fromDataset: AQE on = Exchange under every downstream
+        # per-series agg, AQE off = none). Plan this ONE frame in a clone
+        # of the caller's session (same conf, AQE off there only), then
+        # wrap the checkpoint's LogicalRDD back into the caller's session:
+        # the caller's conf never changes, so concurrent planners on it
+        # (sibling materializations, the HTTP server) keep AQE.
         # localCheckpoint(eager=False) builds the physical plan (and its
         # LogicalRDD) HERE; the RDD computes on first action.
-        with _FLAT_CKPT_LOCK:
-            prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            try:
-                flat = (
-                    data.join(side, "tsid", "left")
-                    .repartition(n_parts, "series_key")
-                    .localCheckpoint(eager=False)
-                )
-            finally:
-                spark.conf.set("spark.sql.adaptive.enabled", prev)
+        pre = data.join(side, "tsid", "left").repartition(n_parts, "series_key")
+        jclone = spark._jsparkSession.cloneSession()
+        jclone.conf().set("spark.sql.adaptive.enabled", "false")
+        jds = spark._jvm.org.apache.spark.sql.classic.Dataset
+        ck = jds.ofRows(jclone, pre._jdf.logicalPlan()).localCheckpoint(False)
+        flat = DataFrame(jds.ofRows(spark._jsparkSession, ck.logicalPlan()), spark)
         # materialize the checkpoints as BACKGROUND jobs: per-string
         # compilation (driver-side Catalyst/py4j, no cluster work) overlaps
         # the executor-side materialization instead of waiting on it. A
@@ -418,7 +360,6 @@ class MetricEngine:
         clone.data = flat.select(*self.data.columns)
         clone.series = series_ck
         clone.index = index_ck
-        clone._cached = False
         clone._flat = flat
         clone.__dict__["_series_broadcast_memo"] = self.__dict__[
             "_series_broadcast_memo"
@@ -434,20 +375,6 @@ class MetricEngine:
         if bounds is not None:
             clone._data_ts_bounds = bounds
         return clone
-
-    def uncache(self) -> "MetricEngine":
-        """Release the persisted tables (e.g. per-micro-batch engines)."""
-        if self._cached:
-            for df in (self.data, self.series, self.index, self.metrics):
-                df.unpersist()
-            if self._flat is not None:
-                self._flat.unpersist()
-                self._flat = None
-            self._cached = False
-            # same staleness rule as cache(): memoized plans reference the
-            # released _flat — drop them with the persistence state
-            self.__dict__.pop("_eval_memo", None)
-        return self
 
     def fields(self, metric: str) -> DataFrame:
         """The metric's catalog field rows (field_name, field_id,
@@ -573,7 +500,7 @@ class MetricEngine:
         the selection is a literal equality on the data table's ``field_id``
         column — no catalog join, and it prunes at the parquet scan like any
         other PK-prefix predicate. A tuple/list of field names selects
-        SEVERAL fields in one pass (an OR of field_id equalities) — the
+        SEVERAL fields in one pass (one ``field_id IN`` predicate) — the
         fused-evaluation shape ``histogram_avg`` compiles to (round 14),
         where one derivation of the base replaces one per field; rows then
         carry the ``field_id`` column for downstream disambiguation. On a
@@ -581,10 +508,10 @@ class MetricEngine:
         skipped entirely, and asking for a non-default field there is an
         error rather than silence.
 
-        On a cached engine the labeled path reads ``_flat`` (pre-joined,
-        series_key-partitioned): filters and the broadcast matcher
-        semi-join preserve the partitioning, so downstream per-series
-        aggregations need no exchange (see ``cache``)."""
+        On a ``materialized()`` clone the labeled path reads ``_flat``
+        (pre-joined, series_key-partitioned): filters and the broadcast
+        matcher semi-join preserve the partitioning, so downstream
+        per-series aggregations need no exchange."""
         mid = F.xxhash64(F.lit(metric))
         if with_labels and self._flat is not None:
             out = self._flat.filter(F.col("metric_id") == mid)
@@ -594,13 +521,9 @@ class MetricEngine:
             if isinstance(field, (tuple, list)):
                 if not field:
                     raise ValueError("field tuple must name at least one field")
-                conds = [
-                    F.col("field_id") == F.xxhash64(F.lit(f)) for f in field
-                ]
-                cond = conds[0]
-                for c in conds[1:]:
-                    cond = cond | c
-                out = out.filter(cond)
+                out = out.filter(
+                    F.col("field_id").isin(*[F.xxhash64(F.lit(f)) for f in field])
+                )
             else:
                 want = field if field is not None else model.DEFAULT_FIELD
                 out = out.filter(F.col("field_id") == F.xxhash64(F.lit(want)))

@@ -1879,9 +1879,9 @@ def promql_eval_many(
     is BOUNDED (round 15): each engine's clone is pre-filtered to the
     union of metric names its strings reference, so the materialized
     working set follows the batch, not the store, and the metric_id
-    predicate still prunes at the parquet scan. Engines the caller
-    already ``cache()``d are left alone (their persisted base + _flat
-    pre-join IS the shared base). Results are unchanged (checkpointing
+    predicate still prunes at the parquet scan. Engines that already are
+    ``materialized()`` clones are left alone (their checkpointed base +
+    _flat pre-join IS the shared base). Results are unchanged (checkpointing
     only materializes the same rows; the evaluation grid is pinned to
     the parent's data bounds before filtering); the clone's blocks
     are released on GC with the returned frames. localCheckpoint policy:
@@ -1909,18 +1909,15 @@ def promql_eval_many(
             batch_metrics[id(eng)] = (
                 None if (m is None or prev is None) else prev | m
             )
-        # engines cache()d by the caller already share a persisted base —
-        # re-materializing them would duplicate the working set and drop
-        # the _flat pre-join every compiled plan reads (ADVICE r14). An
-        # engine whose strings reference no metric (vector(1), time())
-        # has nothing to share: materialized(set()) would checkpoint the
-        # whole store.
+        # an engine that is already a materialized() clone (it carries a
+        # _flat) IS a shared base — re-materializing it would checkpoint
+        # the working set twice. An engine whose strings reference no
+        # metric (vector(1), time()) has nothing to share:
+        # materialized(set()) would checkpoint the whole store.
         shared = {
             k: e
             for k, e in uniq.items()
-            if counts[k] >= 2
-            and not getattr(e, "_cached", False)
-            and batch_metrics[k] != set()
+            if counts[k] >= 2 and e._flat is None and batch_metrics[k] != set()
         }
         if shared:
             with ThreadPoolExecutor(min(len(shared), max_workers)) as pool:

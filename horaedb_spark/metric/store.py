@@ -507,7 +507,6 @@ class MetricStore:
         refresh (only the touched partitions rewrite)."""
         eng = MetricEngine.__new__(MetricEngine)
         eng.samples = None
-        eng._cached = False
         eng._flat = None
         # every engine over this store shares the store's broadcast-decision
         # memo: a per-query engine() loop (dashboards, rule evaluators) pays

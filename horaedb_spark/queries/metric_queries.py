@@ -46,13 +46,13 @@ _DEDUP_CTE = """
 def _engine(spark: SparkSession, sf_dir: str) -> MetricEngine:
     if sf_dir not in _ENGINES:
         samples = events_to_samples(events_ms(spark, sf_dir))
-        # NOT cache()d, deliberately: A/B at sf0.1 measured the cached
+        # NOT persisted, deliberately: A/B at sf0.1 measured a persisted
         # engine SLOWER for the suite queries (10.2/6.7 s vs 7.8/4.7 s
-        # cold/warm) — the in-memory columnar deser of _flat costs more
-        # than re-running the cheap vectorized parquet scan + dedup, and
-        # ReuseExchange already dedups the shared base inside each union
-        # job. cache() stays the right call for long-lived HTTP serving
-        # (many small SEPARATE jobs over one store), not for suite unions.
+        # cold/warm) — the in-memory columnar deser of the flat table
+        # costs more than re-running the cheap vectorized parquet scan +
+        # dedup, and ReuseExchange already dedups the shared base inside
+        # each union job. Suites that share a base go through
+        # promql_eval_many(share_base=True) -> MetricEngine.materialized().
         _ENGINES[sf_dir] = MetricEngine(samples)
     return _ENGINES[sf_dir]
 

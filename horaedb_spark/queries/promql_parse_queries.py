@@ -84,7 +84,7 @@ def _bucket_engine(spark: SparkSession, sf_dir: str) -> MetricEngine:
     # NOT persisted, deliberately: an interleaved A/B at sf0.1 showed no
     # measurable suite win from persisting the samples frame (ReuseExchange
     # already dedups the shared cum-window subtree inside each union job),
-    # and full engine.cache() measured SLOWER (see metric_queries._engine).
+    # and a fully persisted engine measured SLOWER (see metric_queries._engine).
     _BUCKET_ENGINES[sf_dir] = MetricEngine(samples)
     return _BUCKET_ENGINES[sf_dir]
 

@@ -270,13 +270,16 @@ def test_wire_decoder_fuzz_no_hang_or_crash():
     fuzz()
 
 
-def test_cached_engine_equals_uncached_and_skips_exchange(spark):
-    """MetricEngine.cache(): the series_key-partitioned flat table must
-    (a) return exactly the uncached results through select_series and a
-    compiled PromQL string, and (b) feed per-series aggregations WITHOUT
-    a fresh exchange — HashPartitioning(series_key) from the cache
+def test_materialized_engine_equals_declarative_and_skips_exchange(spark):
+    """MetricEngine.materialized(): the series_key-partitioned flat
+    checkpoint must (a) return exactly the declarative engine's results
+    through select_series and a compiled PromQL string, and (b) feed
+    per-series aggregations WITHOUT a fresh exchange —
+    HashPartitioning(series_key) carried by the checkpoint's LogicalRDD
     satisfies the (series_key, bucket) clustering, so the one data-sized
-    shuffle of every evaluation is paid once at cache build."""
+    shuffle of every evaluation is paid once at materialization. The
+    partitioning is part of the checkpoint, so it shows in the plan before
+    anything executes."""
     from horaedb_spark.metric.promql import promql_eval
 
     rows = [
@@ -295,51 +298,42 @@ def test_cached_engine_equals_uncached_and_skips_exchange(spark):
         "value double, seq long",
     )
     plain = MetricEngine(samples)
-    cached = MetricEngine(samples).cache()
-    try:
-        q = "sum by (env) (rate(m[1d]))"
-        want = sorted(
-            map(tuple, promql_eval(plain, q, 86_400_000).collect())
+    mat = MetricEngine(samples).materialized()
+    q = "sum by (env) (rate(m[1d]))"
+    want = sorted(map(tuple, promql_eval(plain, q, 86_400_000).collect()))
+    got = sorted(map(tuple, promql_eval(mat, q, 86_400_000).collect()))
+    assert got == want and len(got) > 0
+    sel = sorted(
+        map(
+            tuple,
+            mat.select_series(
+                "m", [Matcher("env", "=", "prod")]
+            ).select("series_key", "ts_ms", "value").collect(),
         )
-        got = sorted(
-            map(tuple, promql_eval(cached, q, 86_400_000).collect())
+    )
+    sel_plain = sorted(
+        map(
+            tuple,
+            plain.select_series(
+                "m", [Matcher("env", "=", "prod")]
+            ).select("series_key", "ts_ms", "value").collect(),
         )
-        assert got == want and len(got) > 0
-        sel = sorted(
-            map(
-                tuple,
-                cached.select_series(
-                    "m", [Matcher("env", "=", "prod")]
-                ).select("series_key", "ts_ms", "value").collect(),
-            )
-        )
-        sel_plain = sorted(
-            map(
-                tuple,
-                plain.select_series(
-                    "m", [Matcher("env", "=", "prod")]
-                ).select("series_key", "ts_ms", "value").collect(),
-            )
-        )
-        assert sel == sel_plain and len(sel) == 60
-        # plan pin: the per-series rate aggregate reads the cached
-        # partitioning — no Exchange between InMemoryTableScan and the
-        # first HashAggregate (the final by-env agg still shuffles, but
-        # only rate-sized rows)
-        from horaedb_spark.functions.promql import rate
+    )
+    assert sel == sel_plain and len(sel) == 60
+    # plan pin: the per-series rate aggregate reads the checkpoint's
+    # partitioning — no Exchange between the checkpoint scan and the
+    # first HashAggregate
+    from horaedb_spark.functions.promql import rate
 
-        per_series = rate(
-            cached.select_series("m").select("series_key", "ts_ms", "value"),
-            ["series_key"],
-            86_400_000,
-        )
-        plan = (
-            per_series._jdf.queryExecution().executedPlan().toString()
-        )
-        head = plan.split("InMemoryTableScan")[0]
-        assert "Exchange" not in head, head
-    finally:
-        cached.uncache()
+    per_series = rate(
+        mat.select_series("m").select("series_key", "ts_ms", "value"),
+        ["series_key"],
+        86_400_000,
+    )
+    plan = per_series._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=false" in plan, plan
+    head = plan.split("Scan ExistingRDD")[0]
+    assert "Scan ExistingRDD" in plan and "Exchange" not in head, plan
 
 
 # ---------------------------------------------------------------- multi-field
@@ -515,30 +509,31 @@ def test_multi_field_catalog_joins_do_not_duplicate_rows(spark):
     assert names == {"http_req", "plain_gauge"}
 
 
-def test_cached_multi_field_engine_matches_uncached(spark):
-    """cache() materializes data/_flat with the field dimension intact:
-    field selections and the __field__ PromQL path return identical rows
-    on the cached engine."""
+def test_materialized_multi_field_engine_matches_declarative(spark):
+    """materialized() checkpoints data/_flat with the field dimension
+    intact: field selections and the __field__ PromQL path return
+    identical rows on the clone."""
     eng = MetricEngine(_mf_samples(spark))
     want = sorted(
         (r.ts_ms, r.value)
         for r in eng.select_series("http_req", field="sum",
                                    with_labels=False).collect()
     )
-    ceng = MetricEngine(_mf_samples(spark)).cache()
-    try:
-        got = sorted(
-            (r.ts_ms, r.value)
-            for r in ceng.select_series("http_req", field="sum",
-                                        with_labels=False).collect()
-        )
-        assert got == want
-        q = 'sum by (host) (sum_over_time(http_req{__field__="count"}[1h]))'
-        a = sorted(map(tuple, eng.promql(q, step_ms=3_600_000).collect()))
-        b = sorted(map(tuple, ceng.promql(q, step_ms=3_600_000).collect()))
-        assert a == b and a
-    finally:
-        ceng.uncache()
+    mat = MetricEngine(_mf_samples(spark)).materialized(metrics={"http_req"})
+    got = sorted(
+        (r.ts_ms, r.value)
+        for r in mat.select_series("http_req", field="sum",
+                                   with_labels=False).collect()
+    )
+    assert got == want
+    both = ("sum", "count")
+    assert sorted(
+        map(tuple, mat.select_series("http_req", field=both).collect())
+    ) == sorted(map(tuple, eng.select_series("http_req", field=both).collect()))
+    q = 'sum by (host) (sum_over_time(http_req{__field__="count"}[1h]))'
+    a = sorted(map(tuple, eng.promql(q, step_ms=3_600_000).collect()))
+    b = sorted(map(tuple, mat.promql(q, step_ms=3_600_000).collect()))
+    assert a == b and a
 
 
 def test_series_label_join_is_size_aware(spark):

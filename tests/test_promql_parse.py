@@ -1123,6 +1123,83 @@ def test_materialized_logs_a_background_failure_once(spark, monkeypatch, caplog)
     assert "planted failure" in str(records[0].exc_info[1])
 
 
+def test_materialized_never_sets_the_callers_session_conf(spark, monkeypatch):
+    """materialized() plans its series_key-partitioned flat with AQE off,
+    but in a clone of the caller's session: neither the Python nor the
+    JVM RuntimeConfig.set of the caller's session is called, for one
+    materialization or three concurrent ones, and a sibling thread reading
+    spark.sql.adaptive.enabled sees "true" throughout. Each clone's flat
+    still carries its partitioning (a per-series groupBy plans with no
+    Exchange)."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql.conf import RuntimeConfig
+
+    eng = _engine(spark, SF_DIR)
+    assert eng.data.sparkSession is spark
+    sets = []
+    orig_set = RuntimeConfig.set
+
+    def py_set(self, key, value):
+        sets.append(("py", key, value))
+        return orig_set(self, key, value)
+
+    class JConfSpy:
+        def __init__(self, jconf):
+            self._jconf = jconf
+
+        def set(self, *args):
+            sets.append(("jvm",) + args)
+            return self._jconf.set(*args)
+
+        def __getattr__(self, name):
+            return getattr(self._jconf, name)
+
+    class JSessionSpy:
+        def __init__(self, jsession):
+            self._jsession = jsession
+
+        def conf(self):
+            return JConfSpy(self._jsession.conf())
+
+        def __getattr__(self, name):
+            return getattr(self._jsession, name)
+
+    monkeypatch.setattr(RuntimeConfig, "set", py_set)
+    monkeypatch.setattr(spark.conf, "_jconf", JConfSpy(spark.conf._jconf))
+    monkeypatch.setattr(spark, "_jsparkSession", JSessionSpy(spark._jsparkSession))
+
+    seen = []
+    stop = threading.Event()
+
+    def poll():
+        while not stop.is_set():
+            seen.append(spark.conf.get("spark.sql.adaptive.enabled"))
+
+    poller = threading.Thread(target=poll, daemon=True)
+    poller.start()
+    try:
+        clones = [eng.materialized(metrics={"click"})]
+        with ThreadPoolExecutor(3) as pool:
+            clones += list(
+                pool.map(
+                    eng.materialized, [{"click"}, {"error"}, {"purchase"}]
+                )
+            )
+    finally:
+        stop.set()
+        poller.join(timeout=60)
+    assert not poller.is_alive()
+    assert sets == []
+    assert seen and set(seen) == {"true"}, set(seen)
+    for c in clones:
+        agg = c._flat.groupBy("series_key").count()
+        plan = agg._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
+        assert c.data.count() > 0
+
+
 def test_referenced_metrics_walk_is_exhaustive():
     """referenced_metrics() is the size guard for share_base: every metric
     a string reads MUST appear (a miss would filter that metric out of the
@@ -1145,17 +1222,16 @@ def test_referenced_metrics_walk_is_exhaustive():
     assert referenced_metrics("this is not promql ][") is None
 
 
-def test_materialized_bounded_base(spark):
+def test_materialized_bounded_base(spark, tmp_path, monkeypatch):
     """materialized(metrics=...) (round 15, VERDICT r14 #2): the
     checkpointed base is pre-filtered to the batch's metrics — rows equal
     the parent's metric_id-filtered rows, the literal metric_id predicate
     is pushed at the parquet scan (pruning survives; nothing prunes
     through a LogicalRDD afterwards), the evaluation grid is pinned to the
     PARENT's ts bounds so time()/vector() results cannot move when the
-    base shrinks, and caller-cache()d engines are skipped by the
-    share_base path (their persisted base IS the shared base)."""
-    from functools import reduce
-
+    base shrinks, and engines that already are materialized() clones are
+    not materialized again by the share_base path (their checkpointed base
+    IS the shared base)."""
     from pyspark.sql import DataFrame
 
     from horaedb_spark.metric.promql import promql_eval, promql_eval_many
@@ -1192,20 +1268,64 @@ def test_materialized_bounded_base(spark):
     b = promql_eval(clone, q, DAY)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
-    # caller-cache()d engines are left alone by share_base
-    cached = _engine(spark, SF_DIR).cache()
-    try:
-        outs = promql_eval_many(
-            [(cached, q), (cached, "sum(rate(click[1d]))")],
-            DAY,
-            share_base=True,
+    # store-backed engines bound on the stored metric_id column with ONE
+    # In predicate over the hashed names, pushed into the parquet scan
+    import re
+
+    from horaedb_spark.metric.engine import MetricEngine
+    from horaedb_spark.metric.store import MetricStore
+
+    store = MetricStore(spark, str(tmp_path / "ms"), DAY)
+    store.ingest(
+        spark.createDataFrame(
+            [
+                (n, {"host": "a"}, 1000, float(i), 1)
+                for i, n in enumerate(("cpu", "mem", "disk"))
+            ],
+            "name string, labels map<string,string>, ts_ms long, "
+            "value double, seq long",
         )
-        assert all(isinstance(o, DataFrame) for o in outs)
-        # no clone was substituted: the plans read the persisted base, not
-        # a fresh LogicalRDD checkpoint
-        for o in outs:
-            p = o._jdf.queryExecution().executedPlan().toString()
-            assert "Scan ExistingRDD" not in p, p
-        assert cached._cached
-    finally:
-        cached.uncache()
+    )
+    seng = store.engine()
+    # the bounded frames are the ones materialized() checkpoints (index)
+    # and repartitions by series_key (data)
+    bounded = []
+    with monkeypatch.context() as m:
+        for meth in ("localCheckpoint", "repartition"):
+            orig_m = getattr(type(seng.data), meth)
+
+            def spy_m(self, *args, _orig=orig_m, **kwargs):
+                bounded.append(self)
+                return _orig(self, *args, **kwargs)
+
+            m.setattr(type(seng.data), meth, spy_m)
+        sclone = seng.materialized(metrics={"cpu", "mem"})
+    plans = [f._jdf.queryExecution().executedPlan().toString() for f in bounded]
+    pushed_in = [
+        p for p in plans
+        if re.search(r"PushedFilters: \[[^\n]*In\(metric_id", p)
+    ]
+    assert len(pushed_in) >= 2, plans
+    assert sorted(r.value for r in sclone.data.collect()) == [0.0, 1.0]
+
+    # an engine that already is a materialized() clone is served as-is by
+    # share_base: no second materialization, and the plans read the
+    # clone's checkpoint, not the parquet scan
+    calls = []
+    orig = MetricEngine.materialized
+
+    def spy(self, metrics=None):
+        calls.append(metrics)
+        return orig(self, metrics)
+
+    monkeypatch.setattr(MetricEngine, "materialized", spy)
+    suite = [q, "sum(rate(click[1d]))"]
+    outs = promql_eval_many(
+        [(clone, s) for s in suite], DAY, materialize=True, share_base=True
+    )
+    assert calls == []
+    assert all(isinstance(o, DataFrame) and o.count() > 0 for o in outs)
+    for s in suite:
+        p = promql_eval(clone, s, DAY)._jdf.queryExecution()
+        p = p.executedPlan().toString()
+        assert "Scan ExistingRDD" in p and "Scan parquet" not in p, p
