@@ -13,12 +13,17 @@ Reference semantics (cited into /root/reference):
   over the picked files with ``keep_builtin=true``, write ONE merged SST whose
   ``max_sequence`` is the new file id, swap the manifest (add new, delete
   inputs + expired) *before* physical deletes; physical deletes are
-  best-effort ("no error should be returned", executor.rs:218-219).
+  best-effort ("no error should be returned", executor.rs:218-219). The
+  merged SST is written by ``ColumnarTable.write_merged``, the same
+  single-SST writer as ``write()``: the table alone decides how an SST is
+  laid out, numbered and measured.
 - **Scheduler** (compaction/scheduler.rs:49-159): periodic picker loop +
-  bounded task queue. Here: a synchronous ``run_once`` the caller invokes on
-  a cadence (driver thread / external scheduler / every N streaming batches)
-  — Spark jobs are the executor pool, so the reference's in-process runtime
-  and 2 GB memory gate have no analogue to port.
+  bounded task queue + the in-use memory gate. Here: a synchronous
+  ``run_once`` the caller invokes on a cadence (driver thread / external
+  scheduler / every N streaming batches), ``run_all`` for every eligible
+  segment at once, and ``start``/``trigger`` for the background loop, which
+  logs a failed cycle and keeps running. Spark jobs are the executor pool,
+  so the reference's in-process runtime has no analogue to port.
 
 The picker is pure metadata logic over the manifest (no Spark job); the
 executor is one batch Spark job per picked segment. At 100 TB this is the
@@ -35,7 +40,9 @@ from dataclasses import dataclass, field
 
 from horaedb_spark.core.timeutil import TimeRange, truncate_by
 from horaedb_spark.storage.manifest import SstFile
-from horaedb_spark.storage.table import ColumnarTable, ScanRequest, WriteRequest
+from horaedb_spark.storage.table import ColumnarTable, ScanRequest
+
+log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -71,12 +78,16 @@ def pick_all_candidates(
     config: SchedulerConfig,
     now_ms: int | None = None,
 ) -> list[CompactionTask]:
-    """Every segment's pick in one pass — the cluster-scale complement of
-    ``pick_candidate`` (which returns only the newest eligible segment, as
-    the reference's single-node picker does): at 100 TB each segment
+    """Every segment's pick, newest segment first — the picker of
+    picker.rs:84-188 run over all segments (files already marked
+    in-compaction are excluded, picker.rs:117-134): at 100 TB each segment
     compacts independently, so the scheduler can submit one Spark job per
     task concurrently (``Compactor.run_all``). Expired files ride on the
-    first task (or form an expiry-only task when nothing else picks)."""
+    first task (or form an expiry-only task when nothing else picks).
+
+    The reference has a unit bug here (ms vs µs TTL, picker.rs:57 vs
+    time_ext.rs:213); we implement milliseconds consistently (SURVEY.md C2).
+    """
     now_ms = now_ms if now_ms is not None else int(time.time() * 1000)
     expired: list[SstFile] = []
     candidates: list[SstFile] = []
@@ -120,44 +131,10 @@ def pick_candidate(
     config: SchedulerConfig,
     now_ms: int | None = None,
 ) -> CompactionTask:
-    """Pure-metadata picker, 1:1 with picker.rs:84-188 (including the quirk
-    that files already marked in-compaction are excluded, picker.rs:117-134).
-
-    The reference has a unit bug here (ms vs µs TTL, picker.rs:57 vs
-    time_ext.rs:213); we implement milliseconds consistently (SURVEY.md C2).
-    """
-    now_ms = now_ms if now_ms is not None else int(time.time() * 1000)
-    task = CompactionTask()
-    candidates: list[SstFile] = []
-    for sst in ssts:
-        if sst.in_compaction:
-            continue
-        if config.ttl_ms is not None and sst.is_expired(now_ms - config.ttl_ms):
-            task.expired.append(sst)
-        else:
-            candidates.append(sst)
-
-    by_segment: dict[int, list[SstFile]] = {}
-    for sst in candidates:
-        seg = truncate_by(sst.time_range.start, segment_duration_ms)
-        by_segment.setdefault(seg, []).append(sst)
-
-    max_total = config.new_sst_max_size * config.memory_estimate_factor
-    for seg in sorted(by_segment, reverse=True):  # newest segment first
-        files = sorted(by_segment[seg], key=lambda s: s.size_bytes)
-        picked: list[SstFile] = []
-        total = 0
-        for sst in files:
-            if len(picked) >= config.input_sst_max_num:
-                break
-            if total + sst.size_bytes > max_total and picked:
-                break
-            picked.append(sst)
-            total += sst.size_bytes
-        if len(picked) >= config.input_sst_min_num:
-            task.inputs = picked
-            return task
-    return task
+    """The reference's single-node pick: the newest eligible segment's task
+    (``pick_all_candidates``' first), or a no-op task when nothing picks."""
+    tasks = pick_all_candidates(ssts, segment_duration_ms, config, now_ms)
+    return tasks[0] if tasks else CompactionTask()
 
 
 class Compactor:
@@ -209,6 +186,22 @@ class Compactor:
         with self._mem_lock:
             self._inuse_bytes = max(0, self._inuse_bytes - est)
 
+    def _run_admitted(
+        self, task: CompactionTask, rejected: list | None = None
+    ) -> SstFile | None:
+        """Execute ``task`` under the memory gate. An over-budget task is
+        skipped and appended to ``rejected`` when given (the next cycle
+        re-picks or re-queues it — executor.rs returns the same "try
+        later")."""
+        if not self.try_acquire_memory(task):
+            if rejected is not None:
+                rejected.append(task)
+            return None
+        try:
+            return self.execute(task)
+        finally:
+            self.release_memory(task)
+
     def submit(self, task: CompactionTask) -> bool:
         """Bounded task queue (scheduler.rs:62-81, queue of 10): a full queue
         drops the submission — the next picker cycle re-picks the files, so
@@ -230,13 +223,7 @@ class Compactor:
                 task = self._queue.popleft() if self._queue else None
             if task is None:
                 break
-            if not self.try_acquire_memory(task):
-                deferred.append(task)
-                continue
-            try:
-                out = self.execute(task)
-            finally:
-                self.release_memory(task)
+            out = self._run_admitted(task, deferred)
             if out is not None:
                 written.append(out)
         for task in deferred:
@@ -262,8 +249,11 @@ class Compactor:
                 try:
                     while self.run_once() is not None:
                         pass
-                except Exception:  # background loop must survive one failure
-                    pass
+                except Exception:  # the loop survives; the next wake retries
+                    log.warning(
+                        "background compaction of %s failed", self.table.root,
+                        exc_info=True,
+                    )
 
         self._thread = threading.Thread(target=loop, name="sst-compact", daemon=True)
         self._thread.start()
@@ -300,21 +290,10 @@ class Compactor:
         )
         if not tasks:
             return []
-        written: list[SstFile] = []
-
-        def run(task: CompactionTask) -> SstFile | None:
-            if not self.try_acquire_memory(task):
-                return None  # over budget this cycle; next run_all re-picks
-            try:
-                return self.execute(task)
-            finally:
-                self.release_memory(task)
-
         with ThreadPoolExecutor(max_workers=max(1, parallelism)) as pool:
-            for out in pool.map(run, tasks):
-                if out is not None:
-                    written.append(out)
-        return written
+            return [
+                out for out in pool.map(self._run_admitted, tasks) if out is not None
+            ]
 
     def run_once(self, now_ms: int | None = None) -> SstFile | None:
         """One picker+executor cycle; returns the new SST if one was written.
@@ -328,12 +307,7 @@ class Compactor:
         )
         if task.is_noop:
             return None
-        if not self.try_acquire_memory(task):
-            return None
-        try:
-            return self.execute(task)
-        finally:
-            self.release_memory(task)
+        return self._run_admitted(task)
 
     def execute(self, task: CompactionTask) -> SstFile | None:
         manifest = self.table.manifest
@@ -387,7 +361,6 @@ class Compactor:
                         drop_tombstones=full_segment,
                     ),
                 )
-                seq_df = merged  # __seq__ already carries the max winning seq
                 carries_tombstones = (
                     any(s.tombstone for s in task.inputs) and not full_segment
                 )
@@ -398,10 +371,10 @@ class Compactor:
                 carries_mutations = (
                     any(s.value_mutated for s in task.inputs) and not full_segment
                 )
-                new_sst = self._write_compacted(
-                    seq_df,
+                new_sst = self.table.write_merged(
+                    merged,  # __seq__ already carries the max winning seq
                     tr,
-                    carries_tombstones,
+                    tombstone=carries_tombstones,
                     value_mutated=carries_mutations,
                     # rows keep their ORIGINAL __seq__, so the output may
                     # contain rows as old as the oldest input — restore()
@@ -458,58 +431,10 @@ class Compactor:
                     # refresh failures (each leaves serve()'s auto_refresh
                     # re-attempting a full refresh on every read) through
                     # log routing
-                    logging.getLogger(__name__).warning(
+                    log.warning(
                         "bucketed mirror refresh deferred after compaction of "
                         "%s; serve() will retry on next read",
                         self.table.root,
                         exc_info=True,
                     )
         return new_sst
-
-    def _write_compacted(
-        self,
-        df,
-        tr: TimeRange,
-        carries_tombstones: bool = False,
-        value_mutated: bool = False,
-        min_seq: int | None = None,
-    ) -> SstFile:
-        """Write one merged SST carrying the surviving rows' __seq__ values.
-
-        Reuses the table write layout but keeps the original sequences (the
-        reference stamps the *file's* max_sequence as the new id but preserves
-        merge results; here rows keep their winning __seq__ so a later scan
-        still orders correctly against non-compacted files)."""
-        import os
-
-        from pyspark.sql import functions as F
-
-        from horaedb_spark.core.schema import RESERVED_COLUMN, SEGMENT_COLUMN, SEQ_COLUMN
-
-        t = self.table
-        file_id = t._alloc_file_id()
-        segment = tr.segment(t.segment_duration_ms)
-        sst_dir = os.path.join(t.data_dir, f"{SEGMENT_COLUMN}={segment}", f"sst={file_id}")
-        # __reserved__ passes through (not re-nulled): a surviving delete
-        # tombstone from a partial compaction must keep masking older
-        # versions in non-picked SSTs.
-        cols = [*t.schema.user_columns, SEQ_COLUMN, RESERVED_COLUMN]
-        out = df.select(*cols).sortWithinPartitions(*t.schema.primary_keys)
-        out.write.options(**t.write_config.writer_options()).mode(
-            "overwrite"
-        ).parquet(t.backend.spark_path(sst_dir))
-        from horaedb_spark.storage.table import _collect_col_stats, _parquet_stats
-
-        num_rows, size_bytes = _parquet_stats(sst_dir, t.backend)
-        return SstFile(
-            file_id=file_id,
-            path=sst_dir,
-            time_range=tr,
-            max_sequence=file_id,
-            num_rows=num_rows,
-            size_bytes=size_bytes,
-            col_stats=_collect_col_stats(sst_dir, t.schema.user_columns, t.backend),
-            tombstone=carries_tombstones,
-            value_mutated=value_mutated,
-            min_seq=min_seq,
-        )

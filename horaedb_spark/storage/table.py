@@ -53,6 +53,7 @@ from horaedb_spark.storage.manifest import Manifest, SstFile
 from horaedb_spark.storage.merge import POS_COLUMN, apply_update_mode
 
 ZSLICE_COLUMN = "__zslice__"  # staging-only partition key for z-ordered bulk loads
+ZKEY_COLUMN = "__zkey__"  # staging-only Morton key: row order within a slice
 
 
 @dataclass(frozen=True)
@@ -313,10 +314,15 @@ class ColumnarTable:
             self._next_id = fid + 1
             return fid
 
-    # backwards-compatible private alias
-    _alloc_file_id = alloc_file_id
-
     # ------------------------------------------------------------------ write
+    #
+    # Every SST is written here: a PK-sorted parquet directory at
+    # ``data/__segment__=<s>/sst=<id>`` whose ``max_sequence`` is its file id
+    # (storage.rs:244-256; the compaction output too, executor.rs:155-222).
+    # ``_write_sst`` writes one such SST (write(), compaction output);
+    # ``_write_staged`` writes one per touched segment in one Spark job
+    # (bulk_ingest, delete, update, merge_into); ``_sst_file`` measures
+    # either for the manifest.
 
     def write(self, req: WriteRequest) -> SstFile:
         tr = req.time_range
@@ -325,45 +331,44 @@ class ColumnarTable:
                 f"write time range {tr} crosses a segment boundary "
                 f"(segment_duration={self.segment_duration_ms} ms)"
             )
-        segment = tr.segment(self.segment_duration_ms)
         file_id = req.file_id if req.file_id is not None else self.alloc_file_id()
-        sst_dir = os.path.join(
-            self.data_dir, f"{SEGMENT_COLUMN}={segment}", f"sst={file_id}"
-        )
         # schema enforcement: select declared columns and cast to declared
-        # types (a lit(0) int must not silently write int32 into a long column)
-        df = req.df.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                for f in self.schema.fields.fields
-            ]
+        # types (a lit(0) int must not silently write int32 into a long
+        # column), then stamp the builtins (types.rs:219-239)
+        out = req.df.select(
+            *self._declared_columns(),
+            F.lit(file_id).cast("long").alias(SEQ_COLUMN),
+            F.lit(None).cast("long").alias(RESERVED_COLUMN),
         )
-        # Stamp builtins (types.rs:219-239) and sort by PK within each output
-        # file (storage.rs:244-256) — sortWithinPartitions keeps the write
-        # distributed; global order across SSTs is irrelevant because the
-        # merge re-establishes it.
-        out = (
-            df.withColumn(SEQ_COLUMN, F.lit(file_id).cast("long"))
-            .withColumn(RESERVED_COLUMN, F.lit(None).cast("long"))
-            .sortWithinPartitions(*self.schema.primary_keys)
-        )
-        out.write.options(**self.write_config.writer_options()).mode(
-            "overwrite"
-        ).parquet(self.backend.spark_path(sst_dir))
-        num_rows, size_bytes = _parquet_stats(sst_dir, self.backend)
-        sst = SstFile(
-            file_id=file_id,
-            path=sst_dir,
-            time_range=tr,
-            max_sequence=file_id,
-            num_rows=num_rows,
-            size_bytes=size_bytes,
-            col_stats=_collect_col_stats(
-                sst_dir, self.schema.user_columns, self.backend
-            ),
-        )
+        sst = self._write_sst(out, tr, file_id)
         self.manifest.add_file(sst)
         return sst
+
+    def write_merged(
+        self,
+        df: DataFrame,
+        time_range: TimeRange,
+        tombstone: bool = False,
+        value_mutated: bool = False,
+        min_seq: int | None = None,
+    ) -> SstFile:
+        """Write compaction output (merged rows, builtins kept) as one SST
+        under a fresh file id and return it UNREGISTERED: the compactor
+        swaps it into the manifest together with its inputs. Rows keep
+        their winning ``__seq__``, so a later scan still orders them against
+        non-compacted files, and their ``__reserved__``, so a tombstone
+        surviving a partial compaction keeps masking older versions in
+        non-picked SSTs."""
+        file_id = self.alloc_file_id()
+        out = df.select(*self.schema.user_columns, SEQ_COLUMN, RESERVED_COLUMN)
+        return self._write_sst(
+            out,
+            time_range,
+            file_id,
+            tombstone=tombstone,
+            value_mutated=value_mutated,
+            min_seq=min_seq,
+        )
 
     def bulk_ingest(
         self,
@@ -386,80 +391,149 @@ class ColumnarTable:
         The per-request ``write()`` path mirrors the reference (one SST per
         call); this is the cluster-scale complement — a 1 TB backfill lands
         as a single ``partitionBy(__segment__)`` job (every executor writes
-        its slice of every segment), then each segment directory is
-        committed (``backend.commit_dir``: a rename on POSIX, a
-        manifest-pointer move on an object store) and registered. The input
-        is scanned exactly ONCE: the segment list comes from the staging
-        directory listing after the write (driver-side metadata, no second
-        data pass), and ``__seq__`` is stamped inside the same job as
-        ``base_id + segment_index`` — a deterministic per-segment file id
-        that stays monotonic across calls under the documented
-        single-writer assumption (sst.rs:39-46 has the same wall-clock
-        caveat).
+        its slice of every segment) that scans the input exactly once
+        (``_write_staged``).
         """
-        dur = self.segment_duration_ms
-        # floor form (not `div`, which truncates toward zero): pre-epoch rows
-        # must land in the segment containing them (truncate_by semantics).
-        seg_expr = F.col(ts_col) - F.pmod(ts_col, F.lit(dur))
-        base_id = self.alloc_file_id()
-        # fid(segment) = base_id + 2^31 + floor(ts/dur). The 2^31 offset keeps
-        # every bulk fid strictly above any previously allocated id even for
-        # pre-epoch (negative-index) segments; segment indexes are bounded
-        # (~5e6 for hourly segments of epoch-ms data) so they never reach the
-        # offset. After the job the allocator jumps past the largest bulk fid,
-        # so later writes sort (and version) after this load.
-        fid_base = base_id + (1 << 31)
-        staging = os.path.join(self.root, f"_staging_{base_id}")
-        n_slices = cluster_slices if cluster_by else 1
-        # fid(segment, slice) = fid_base + seg_index * n_slices + slice:
-        # monotone in (segment, slice), still bounded far under the next
-        # allocator epoch (~5e6 segments * slices << 2^31 growth headroom).
-        fid_expr = (
-            F.lit(fid_base)
-            + (F.col(SEGMENT_COLUMN) / F.lit(dur)).cast("long") * n_slices
-        ).cast("long")
-        out = df.withColumn(SEGMENT_COLUMN, seg_expr).select(
-            SEGMENT_COLUMN,
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                for f in self.schema.fields.fields
-            ],
+        out = self._segmented(df, ts_col)
+        if not cluster_by:
+            return self._write_staged(out)
+        from horaedb_spark.functions.layout import zorder_key, zorder_slice
+
+        stats = out.agg(
+            *[F.min(c).alias(f"mn_{c}") for c in cluster_by],
+            *[F.max(c).alias(f"mx_{c}") for c in cluster_by],
+        ).first()
+        zk = zorder_key(
+            [F.col(c) for c in cluster_by],
+            [float(stats[f"mn_{c}"]) for c in cluster_by],
+            [float(stats[f"mx_{c}"]) for c in cluster_by],
         )
+        out = out.withColumn(ZKEY_COLUMN, zk)
+        bounds = out.approxQuantile(
+            ZKEY_COLUMN,
+            [i / cluster_slices for i in range(1, cluster_slices)],
+            0.001,
+        )
+        out = out.withColumn(ZSLICE_COLUMN, zorder_slice(F.col(ZKEY_COLUMN), bounds))
+        return self._write_staged(out, n_slices=cluster_slices)
+
+    def _declared_columns(self) -> list[Column]:
+        """Schema enforcement: the declared columns cast to their types."""
+        return [
+            F.col(f.name).cast(f.dataType).alias(f.name)
+            for f in self.schema.fields.fields
+        ]
+
+    def _segmented(self, df: DataFrame, ts_col: str, *extra: str) -> DataFrame:
+        """``__segment__`` (of ``ts_col``) + the declared columns + ``extra``.
+        Floor form (not `div`, which truncates toward zero): pre-epoch rows
+        land in the segment containing them (truncate_by semantics)."""
+        seg = F.col(ts_col) - F.pmod(ts_col, F.lit(self.segment_duration_ms))
+        return df.select(
+            seg.alias(SEGMENT_COLUMN), *self._declared_columns(), *extra
+        )
+
+    def _sst_path(self, segment: int, file_id: int) -> str:
+        return os.path.join(
+            self.data_dir, f"{SEGMENT_COLUMN}={segment}", f"sst={file_id}"
+        )
+
+    def _writer(self, df: DataFrame):
+        return df.write.options(**self.write_config.writer_options()).mode(
+            "overwrite"
+        )
+
+    def _sst_file(
+        self, path: str, file_id: int, time_range: TimeRange, **flags
+    ) -> SstFile:
+        """Manifest entry for a written SST directory, measured from its
+        parquet footers (driver-side metadata, no Spark job). ``flags``:
+        ``tombstone``, ``value_mutated``, ``min_seq``."""
+        num_rows, size_bytes, col_stats = _footer_stats(
+            path, self.schema.user_columns, self.backend
+        )
+        return SstFile(
+            file_id=file_id,
+            path=path,
+            time_range=time_range,
+            max_sequence=file_id,
+            num_rows=num_rows,
+            size_bytes=size_bytes,
+            col_stats=col_stats,
+            **flags,
+        )
+
+    def _write_sst(
+        self, out: DataFrame, tr: TimeRange, file_id: int, **flags
+    ) -> SstFile:
+        """Write ``out`` (the physical columns) as the single SST
+        ``file_id`` of ``tr``'s segment, sorted by PK within each output
+        file (storage.rs:244-256 — sortWithinPartitions keeps the write
+        distributed; global order across SSTs is irrelevant because the
+        merge re-establishes it). Returns it unregistered."""
+        path = self._sst_path(tr.segment(self.segment_duration_ms), file_id)
+        self._writer(out.sortWithinPartitions(*self.schema.primary_keys)).parquet(
+            self.backend.spark_path(path)
+        )
+        return self._sst_file(path, file_id, tr, **flags)
+
+    def _write_staged(
+        self,
+        rows: DataFrame,
+        reserved: int | None | str = None,
+        value_mutated: bool = False,
+        n_slices: int | None = None,
+    ) -> list[SstFile]:
+        """ONE Spark job writing ``rows`` (``__segment__`` + declared
+        columns) as one SST per touched segment, registered in one manifest
+        delta; a write that lands no rows registers nothing. The job
+        ``partitionBy``s into a staging dir; the segment list comes from
+        its listing (driver-side metadata, no second data pass); each
+        segment dir is then committed (``backend.commit_dir``: a rename on
+        POSIX, a manifest-pointer move on an object store).
+
+        File ids, stamped as ``__seq__`` inside the same job:
+        ``base + 2^31 + floor(segment / dur) * n_slices + slice`` from one
+        fresh ``base``. The 2^31 offset keeps every id strictly above any
+        previously allocated one even for pre-epoch (negative-index)
+        segments; segment indexes are bounded (~5e6 for hourly segments of
+        epoch-ms data), so they never reach it. Floor on both the Spark and
+        the Python side keeps stamped and registered ids equal for
+        pre-epoch segments. The allocator then jumps past the largest id,
+        so later writes outrank this one (single-writer, the same
+        wall-clock caveat as sst.rs:39-46).
+
+        ``reserved``: an int stamps that marker on every row (tombstone
+        SSTs), None stamps NULL, "column" passes a per-row ``__reserved__``
+        already in ``rows`` (merge_into mixes tombstones and data rows).
+        ``n_slices``: ``rows`` also carry bulk_ingest's z-order
+        ``__zslice__`` (0..n_slices-1, one SST each) and ``__zkey__`` (the
+        row-group order within a slice)."""
+        dur = self.segment_duration_ms
+        zorder = n_slices is not None
+        n = n_slices if zorder else 1
+        base_id = self.alloc_file_id()
+        fid_base = base_id + (1 << 31)
+        fid = F.lit(fid_base) + F.floor(F.col(SEGMENT_COLUMN) / F.lit(dur)) * n
         part_cols = [SEGMENT_COLUMN]
         sort_tail: list[str] = []
-        if cluster_by:
-            from horaedb_spark.functions.layout import zorder_key, zorder_slice
-
-            stats = out.agg(
-                *[F.min(c).alias(f"mn_{c}") for c in cluster_by],
-                *[F.max(c).alias(f"mx_{c}") for c in cluster_by],
-            ).first()
-            zk = zorder_key(
-                [F.col(c) for c in cluster_by],
-                [float(stats[f"mn_{c}"]) for c in cluster_by],
-                [float(stats[f"mx_{c}"]) for c in cluster_by],
-            )
-            out = out.withColumn("__zkey__", zk)
-            bounds = out.approxQuantile(
-                "__zkey__",
-                [i / n_slices for i in range(1, n_slices)],
-                0.001,
-            )
-            out = out.withColumn(ZSLICE_COLUMN, zorder_slice(F.col("__zkey__"), bounds))
-            fid_expr = (fid_expr + F.col(ZSLICE_COLUMN)).cast("long")
+        if zorder:
+            fid = fid + F.col(ZSLICE_COLUMN)
             part_cols.append(ZSLICE_COLUMN)
-            sort_tail = ["__zkey__"]  # row groups follow the curve too
+            sort_tail = [ZKEY_COLUMN]
+        out = rows.withColumn(SEQ_COLUMN, fid.cast("long"))
+        if reserved != "column":
+            out = out.withColumn(RESERVED_COLUMN, F.lit(reserved).cast("long"))
         out = (
-            out.withColumn(SEQ_COLUMN, fid_expr)
-            .withColumn(RESERVED_COLUMN, F.lit(None).cast("long"))
-            .repartition(*[F.col(c) for c in part_cols])
+            out.repartition(*[F.col(c) for c in part_cols])
             .sortWithinPartitions(*part_cols, *sort_tail, *self.schema.primary_keys)
-            .drop("__zkey__")
+            .drop(ZKEY_COLUMN)
         )
-        out.write.options(**self.write_config.writer_options()).mode(
-            "overwrite"
-        ).partitionBy(*part_cols).parquet(self.backend.spark_path(staging))
-        prefix = f"{SEGMENT_COLUMN}="
+        staging = os.path.join(self.root, f"_staging_{base_id}")
+        self._writer(out).partitionBy(*part_cols).parquet(
+            self.backend.spark_path(staging)
+        )
+        prefix, sprefix = f"{SEGMENT_COLUMN}=", f"{ZSLICE_COLUMN}="
         segments = sorted(
             int(name[len(prefix):])
             for name in self.backend.list_dir(staging)
@@ -468,47 +542,33 @@ class ColumnarTable:
         if segments:
             with self._id_lock:
                 self._next_id = max(
-                    self._next_id, fid_base + (segments[-1] // dur + 1) * n_slices
+                    self._next_id, fid_base + (segments[-1] // dur + 1) * n
                 )
-        ssts = []
-
-        def _register(src: str, fid: int, seg: int) -> None:
-            dst = os.path.join(
-                self.data_dir, f"{SEGMENT_COLUMN}={seg}", f"sst={fid}"
-            )
-            final = self.backend.commit_dir(src, dst)
-            num_rows, size_bytes = _parquet_stats(final, self.backend)
-            ssts.append(
-                SstFile(
-                    file_id=fid,
-                    path=final,
-                    time_range=TimeRange(seg, seg + dur),
-                    max_sequence=fid,
-                    num_rows=num_rows,
-                    size_bytes=size_bytes,
-                    col_stats=_collect_col_stats(
-                        final, self.schema.user_columns, self.backend
-                    ),
-                )
-            )
-
+        ssts: list[SstFile] = []
         try:
             for seg in segments:
-                seg_dir = os.path.join(staging, f"{SEGMENT_COLUMN}={seg}")
-                if cluster_by:
-                    sprefix = f"{ZSLICE_COLUMN}="
-                    for name in self.backend.list_dir(seg_dir):
-                        if not name.startswith(sprefix):
-                            continue
-                        sl = int(name[len(sprefix):])
-                        _register(
-                            os.path.join(seg_dir, name),
-                            fid_base + (seg // dur) * n_slices + sl,
-                            seg,
+                seg_dir = os.path.join(staging, f"{prefix}{seg}")
+                first = fid_base + seg // dur * n
+                parts = [(seg_dir, first)]
+                if zorder:
+                    parts = [
+                        (os.path.join(seg_dir, name), first + int(name[len(sprefix):]))
+                        for name in self.backend.list_dir(seg_dir)
+                        if name.startswith(sprefix)
+                    ]
+                for src, file_id in parts:
+                    final = self.backend.commit_dir(src, self._sst_path(seg, file_id))
+                    ssts.append(
+                        self._sst_file(
+                            final,
+                            file_id,
+                            TimeRange(seg, seg + dur),
+                            tombstone=reserved is not None,
+                            value_mutated=value_mutated,
                         )
-                else:
-                    _register(seg_dir, fid_base + seg // dur, seg)
-            self.manifest.update(ssts, [])
+                    )
+            if ssts:
+                self.manifest.update(ssts, [])
         finally:
             _cleanup_staging(self.backend, staging, [s.path for s in ssts])
         return ssts
@@ -608,8 +668,8 @@ class ColumnarTable:
         full-segment compaction (executor's bottom-level rule).
 
         One Spark job regardless of how many segments the predicate spans:
-        merge-on-read → filter → distinct keys → partitionBy-staged tombstone
-        SSTs, mirroring ``bulk_ingest``'s registration path."""
+        merge-on-read → filter → distinct keys → tombstone SSTs through the
+        staged writer bulk_ingest also uses (``_write_staged``)."""
         from horaedb_spark.core.schema import UpdateMode
         from horaedb_spark.storage.merge import TOMBSTONE
 
@@ -639,7 +699,7 @@ class ColumnarTable:
                 for f in self.schema.fields.fields
             ],
         )
-        return self._stage_segmented_write(tomb, reserved=TOMBSTONE)
+        return self._write_staged(tomb, reserved=TOMBSTONE)
 
     def update(
         self,
@@ -690,7 +750,7 @@ class ColumnarTable:
         # value_mutated: the new versions DIVERGE from the old ones in value
         # columns, so predicate scans must evaluate on the merged state (SQL
         # semantics) — see scan_ssts.
-        return self._stage_segmented_write(rows, reserved=None, value_mutated=True)
+        return self._write_staged(rows, value_mutated=True)
 
     def merge_into(
         self,
@@ -725,7 +785,6 @@ class ColumnarTable:
                 raise ValueError(
                     f"cannot assign primary-key columns: {sorted(bad)}"
                 )
-        dur = self.segment_duration_ms
         pks = list(self.schema.primary_keys)
         # keep EXTRA source columns (CDC op flags etc.) through the join —
         # the matched/delete clauses may reference them; only the final
@@ -734,16 +793,7 @@ class ColumnarTable:
             c for c in source.columns
             if c not in self.schema.user_columns and c != SEGMENT_COLUMN
         ]
-        src = source.withColumn(
-            SEGMENT_COLUMN, F.col(ts_col) - F.pmod(ts_col, F.lit(dur))
-        ).select(
-            SEGMENT_COLUMN,
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                for f in self.schema.fields.fields
-            ],
-            *extras,
-        )
+        src = self._segmented(source, ts_col, *extras)
         ssts = self.manifest.find_ssts(None)
         if ssts:
             cur = apply_update_mode(
@@ -800,89 +850,7 @@ class ColumnarTable:
         # Matched rows become new versions whose values come from the source
         # / update assignments — divergent from the current versions, so the
         # output is value-mutating whenever live rows existed to match.
-        return self._stage_segmented_write(
-            rows, reserved="column", value_mutated=bool(ssts)
-        )
-
-    def _stage_segmented_write(
-        self,
-        rows: DataFrame,
-        reserved: int | None | str = None,
-        value_mutated: bool = False,
-    ) -> list[SstFile]:
-        """ONE Spark job writing (SEGMENT + user columns) rows as one SST
-        per touched segment, with a fresh per-segment ``__seq__`` that
-        outranks all live versions — the shared tail of
-        delete()/update()/merge_into(), mirroring bulk_ingest's
-        staging/registration path. ``reserved``: an int stamps that marker
-        on every row, None stamps NULL, the string "column" passes a
-        per-row ``__reserved__`` already present in ``rows`` through
-        (merge_into mixes tombstones and data rows in one job)."""
-        dur = self.segment_duration_ms
-        base_id = self.alloc_file_id()
-        fid_base = base_id + (1 << 31)  # same epoch-jump scheme as bulk_ingest
-        # floor (not truncate-toward-zero) so the stamped __seq__ agrees with
-        # the registration's python `seg // dur` even for pre-epoch segments
-        fid_expr = (
-            F.lit(fid_base) + F.floor(F.col(SEGMENT_COLUMN) / F.lit(dur)).cast("long")
-        ).cast("long")
-        out = rows.withColumn(SEQ_COLUMN, fid_expr)
-        if reserved != "column":
-            out = out.withColumn(
-                RESERVED_COLUMN,
-                (F.lit(reserved) if reserved is not None else F.lit(None)).cast(
-                    "long"
-                ),
-            )
-        has_tombstones = reserved == "column" or reserved is not None
-        out = out.repartition(F.col(SEGMENT_COLUMN)).sortWithinPartitions(
-            SEGMENT_COLUMN, *self.schema.primary_keys
-        )
-        staging = os.path.join(self.root, f"_staging_dml_{base_id}")
-        out.write.options(**self.write_config.writer_options()).mode(
-            "overwrite"
-        ).partitionBy(SEGMENT_COLUMN).parquet(self.backend.spark_path(staging))
-        prefix = f"{SEGMENT_COLUMN}="
-        segments = sorted(
-            int(name[len(prefix):])
-            for name in self.backend.list_dir(staging)
-            if name.startswith(prefix)
-        )
-        if segments:
-            with self._id_lock:
-                self._next_id = max(
-                    self._next_id, fid_base + segments[-1] // dur + 1
-                )
-        new_ssts: list[SstFile] = []
-        try:
-            for seg in segments:
-                src = os.path.join(staging, f"{SEGMENT_COLUMN}={seg}")
-                fid = fid_base + seg // dur
-                dst = os.path.join(
-                    self.data_dir, f"{SEGMENT_COLUMN}={seg}", f"sst={fid}"
-                )
-                final = self.backend.commit_dir(src, dst)
-                num_rows, size_bytes = _parquet_stats(final, self.backend)
-                new_ssts.append(
-                    SstFile(
-                        file_id=fid,
-                        path=final,
-                        time_range=TimeRange(seg, seg + dur),
-                        max_sequence=fid,
-                        num_rows=num_rows,
-                        size_bytes=size_bytes,
-                        col_stats=_collect_col_stats(
-                            final, self.schema.user_columns, self.backend
-                        ),
-                        tombstone=has_tombstones,
-                        value_mutated=value_mutated,
-                    )
-                )
-            if new_ssts:
-                self.manifest.update(new_ssts, [])
-        finally:
-            _cleanup_staging(self.backend, staging, [s.path for s in new_ssts])
-        return new_ssts
+        return self._write_staged(rows, reserved="column", value_mutated=bool(ssts))
 
     # ------------------------------------------------------------------- scan
 
@@ -1380,22 +1348,27 @@ def _cleanup_staging(
             backend.delete(child)
 
 
-def _collect_col_stats(
-    sst_dir: str, wanted: list[str], backend: StorageBackend | None = None
-) -> dict | None:
-    """Per-column (min, max) folded over every row group's footer statistics —
-    driver-side metadata read, no Spark job (same pass as ``_parquet_stats``).
-    Columns whose chunks lack min/max (unsupported types, stats disabled) are
-    omitted; returns None if nothing usable was found."""
+def _footer_stats(
+    sst_dir: str, wanted: tuple[str, ...], backend: StorageBackend
+) -> tuple[int, int, dict | None]:
+    """Row count, byte size and per-column (min, max) of an SST directory,
+    folded over every file's parquet footer in one pass — driver-side
+    metadata, no Spark job (the reference gets these from the writer,
+    storage.rs:215-224). Columns whose chunks lack min/max (unsupported
+    types, stats disabled) are omitted from the column stats, which are None
+    if nothing usable was found."""
     import pyarrow.parquet as pq
 
-    backend = backend or PosixBackend()
+    num_rows = 0
+    size = 0
     mins: dict[str, object] = {}
     maxs: dict[str, object] = {}
     dead: set[str] = set()
     for fpath in backend.walk_files(sst_dir, ".parquet"):
         with backend.open_binary(fpath) as f:
             meta = pq.ParquetFile(f).metadata
+            num_rows += meta.num_rows
+            size += backend.size(fpath)
             for rg in range(meta.num_row_groups):
                 group = meta.row_group(rg)
                 for ci in range(group.num_columns):
@@ -1420,9 +1393,8 @@ def _collect_col_stats(
                     maxs[cname] = (
                         stats.max if cname not in maxs else max(maxs[cname], stats.max)
                     )
-    if not mins:
-        return None
-    return {c: [mins[c], maxs[c]] for c in mins}
+    col_stats = {c: [mins[c], maxs[c]] for c in mins} or None
+    return num_rows, size, col_stats
 
 
 def _parse_conjuncts(predicate: str) -> list[tuple[str, str, object]]:
@@ -1511,23 +1483,6 @@ def _sst_may_match(sst: SstFile, conjuncts: list[tuple[str, str, object]]) -> bo
         except TypeError:
             continue
     return True
-
-
-def _parquet_stats(
-    sst_dir: str, backend: StorageBackend | None = None
-) -> tuple[int, int]:
-    """Row count + byte size from parquet footers — driver-side metadata read,
-    no Spark job (the reference gets these from the writer, storage.rs:215-224)."""
-    import pyarrow.parquet as pq
-
-    backend = backend or PosixBackend()
-    num_rows = 0
-    size = 0
-    for full in backend.walk_files(sst_dir, ".parquet"):
-        with backend.open_binary(full) as f:
-            num_rows += pq.ParquetFile(f).metadata.num_rows
-        size += backend.size(full)
-    return num_rows, size
 
 
 def _table_history(table: "ColumnarTable") -> list[dict]:

@@ -245,3 +245,53 @@ def test_pick_all_candidates_carries_expired(spark, tmp_path):
     out = Compactor(t, cfg).execute(tasks[0])
     assert out is not None
     assert sorted(r.pk1 for r in t.scan().collect()) == [2, 3]  # expired gone
+
+
+def test_background_failure_is_logged_and_the_loop_survives(spark, tmp_path, caplog):
+    """A failed background cycle is logged (one warning, with its
+    traceback), not swallowed, and the loop keeps serving triggers."""
+    import logging
+    import time as _time
+
+    t = ColumnarTable(spark, str(tmp_path / "bgfail"), kv_schema(), TWO_HOURS)
+    mk = lambda rows: spark.createDataFrame(rows, "pk1 long, pk2 long, value long")
+    for i in range(4):
+        t.write(WriteRequest(mk([(1, 1, i)]), TimeRange(i * 10, i * 10 + 10)))
+    c = Compactor(t, SchedulerConfig(input_sst_min_num=2))
+    real_run_once, calls = c.run_once, []
+
+    def run_once_failing_first(now_ms=None):
+        calls.append(now_ms)
+        if len(calls) == 1:
+            raise RuntimeError("planted compaction failure")
+        return real_run_once(now_ms)
+
+    c.run_once = run_once_failing_first
+    caplog.set_level(logging.WARNING, logger="horaedb_spark.storage.compaction")
+
+    def warnings():
+        return [
+            r for r in caplog.records
+            if r.name == "horaedb_spark.storage.compaction"
+            and r.levelno == logging.WARNING
+        ]
+
+    def wait_for(cond):
+        deadline = _time.time() + 60
+        while not cond() and _time.time() < deadline:
+            _time.sleep(0.1)
+
+    c.start(schedule_interval_s=3600)  # long interval: only triggers fire it
+    try:
+        c.trigger()
+        wait_for(warnings)
+        (rec,) = warnings()
+        assert rec.exc_info[1].args == ("planted compaction failure",)
+        assert len(t.manifest.all_ssts()) == 4  # the failed cycle wrote nothing
+        c.trigger()
+        wait_for(lambda: len(t.manifest.all_ssts()) == 1)
+        assert len(t.manifest.all_ssts()) == 1
+        assert [tuple(r) for r in t.scan().collect()] == [(1, 1, 3)]
+        assert len(warnings()) == 1
+    finally:
+        c.stop()

@@ -7,7 +7,10 @@ and col-stats file skipping switch to key-only pushdown + post-merge
 evaluation once a value-mutated SST is in the scanned set; (2) restore() and
 as_of_seq refuse to cross a compaction whose inputs were physically deleted;
 (3) zero-copy clone leases defer the source's physical deletes; (4) a
-hand-built multi-segment CompactionTask is rejected.
+hand-built multi-segment CompactionTask is rejected; (5) the staged writer
+behind bulk_ingest and the DML verbs floors pre-epoch segments, numbers
+each call's SSTs from one fresh base, and registers nothing for an empty
+write.
 """
 
 import os
@@ -15,6 +18,7 @@ import os
 import pytest
 
 from horaedb_spark.core.timeutil import TimeRange
+from horaedb_spark.storage.backend import ObjectStoreBackend, PosixBackend
 from horaedb_spark.storage.catalog import TableCatalog
 from horaedb_spark.storage.compaction import CompactionTask, Compactor, SchedulerConfig
 from horaedb_spark.storage.table import ColumnarTable, ScanRequest, WriteRequest
@@ -236,3 +240,85 @@ def test_partial_segment_recluster_rejected(spark, tmp_path):
     t.write(WriteRequest(_mk(spark, [(2, 2, 2)]), TimeRange(1000, 2000)))
     with pytest.raises(ValueError, match="partial segment"):
         t.recluster("pk1", cluster_by=["value"], time_range=TimeRange(0, 500))
+
+
+# ------------------------------------ the staged writer: ids, floors, no-ops
+
+
+@pytest.mark.parametrize(
+    "backend_cls", [PosixBackend, ObjectStoreBackend], ids=lambda c: c.name
+)
+def test_staged_writes_floor_pre_epoch_segments_and_skip_empty(
+    spark, tmp_path, backend_cls
+):
+    """bulk_ingest, delete, update and merge_into share one staged writer.
+    Through every verb a pre-epoch key (ts < 0) lands in the floored
+    segment and reads back; each call's SSTs are numbered
+    ``fid_base + floor(segment / dur)`` from one fresh base (stamped as the
+    rows' ``__seq__`` too), distinct from every other call's; and a call
+    that writes no rows appends no manifest delta and leaves no staging."""
+    from pyspark.sql import types as T
+
+    from horaedb_spark.core.schema import StorageSchema, UpdateMode
+
+    dur = TWO_HOURS
+    schema = StorageSchema(
+        T.StructType(
+            [T.StructField(c, T.LongType()) for c in ("k", "ts", "value")]
+        ),
+        num_primary_keys=2,
+        update_mode=UpdateMode.OVERWRITE,
+    )
+    root = str(tmp_path / "staged")
+    t = ColumnarTable(spark, root, schema, dur, backend=backend_cls())
+    mk = lambda rows: spark.createDataFrame(rows, "k long, ts long, value long")
+
+    def written(call, segments):
+        """Run one writing call. Its SSTs cover ``segments`` and share one
+        base above every id already in the manifest; each SST's rows carry
+        its file id as ``__seq__``."""
+        prior = max((s.file_id for s in t.manifest.all_ssts()), default=-1)
+        ssts = call()
+        assert sorted(s.time_range.start for s in ssts) == sorted(segments)
+        (base,) = {s.file_id - s.time_range.start // dur for s in ssts}
+        assert base - (1 << 31) > prior
+        for s in ssts:
+            assert s.time_range.end == s.time_range.start + dur
+            seqs = spark.read.parquet(t.backend.spark_path(s.path))
+            assert [r[0] for r in seqs.select("__seq__").distinct().collect()] == [
+                s.file_id
+            ]
+        bases.append(base)
+        return ssts
+
+    bases: list[int] = []
+    bulk = written(
+        lambda: t.bulk_ingest(mk([(1, -5, 10), (2, -5, 20), (3, 1000, 30)]), "ts"),
+        [-dur, 0],
+    )
+    assert not any(s.tombstone or s.value_mutated for s in bulk)
+    (upd,) = written(lambda: t.update("k = 1", {"value": "11"}), [-dur])
+    assert upd.value_mutated and not upd.tombstone
+    (dele,) = written(lambda: t.delete("k = 2"), [-dur])
+    assert dele.tombstone and not dele.value_mutated
+    # matched update in segment 0, not-matched pre-epoch insert
+    merged = written(
+        lambda: t.merge_into(mk([(3, 1000, 33), (4, -7, 40)]), "ts"), [-dur, 0]
+    )
+    assert all(s.tombstone and s.value_mutated for s in merged)
+
+    assert len(set(bases)) == 4  # every call drew its own base
+    ids = [s.file_id for s in t.manifest.all_ssts()]
+    assert len(ids) == len(set(ids)) == 6
+    assert [tuple(r) for r in t.scan().collect()] == [
+        (1, -5, 11),
+        (4, -7, 40),
+        (3, 1000, 33),
+    ]
+
+    # no rows written: nothing registered, no delta, no staging residue
+    before, listing = t.manifest.mutations, sorted(t.backend.list_dir(root))
+    assert t.bulk_ingest(mk([]), "ts") == []
+    assert t.delete("k = 999") == []
+    assert t.manifest.mutations == before
+    assert sorted(t.backend.list_dir(root)) == listing

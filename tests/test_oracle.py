@@ -27,19 +27,6 @@ def test_every_query_has_an_oracle():
     assert sorted(n for n, q in QUERIES.items() if q.oracle is None) == []
 
 
-def test_priority_names_all_registered():
-    """Regression guard on the driver-sample priority list: _ordered()
-    ranks unconfirmed queries by _PRIORITY but silently ignores unknown
-    names, so a typo (or a rename that misses the list) would quietly
-    demote a query's draw priority — the signal-wasting failure the
-    r9->r10 rotation existed to prevent."""
-    from horaedb_spark.queries.registry import _PRIORITY
-
-    missing = [n for n in _PRIORITY if n not in QUERIES]
-    assert missing == [], missing
-    assert len(set(_PRIORITY)) == len(_PRIORITY)  # no duplicates either
-
-
 def _confirmed_independent():
     """Re-derive the confirmed set with SEPARATE logic from
     registry.driver_confirmed (plain dict walk, explicit latest-wins), so
