@@ -276,10 +276,13 @@ class MetricStore:
         ``durable_token()``) is the one it was read at, and until this
         handle writes catalog rows: its own catalog write, a compaction,
         delete, restore or another writer on the same root makes the next
-        ingest re-read it. A steady batch of known series therefore reads
-        its input twice: a distinct-keys collect, then the data write. A
-        store with no series rows yet writes every catalog row for the
-        batch with no collect at all.
+        ingest re-read it. A store with no series rows yet writes every
+        catalog row for the batch with no collect at all.
+
+        ``samples`` is read once per call: the id-stamped batch is
+        persisted, and the distinct-keys collect, the catalog rows and the
+        data write all read the cached blocks, which are released before
+        ``ingest`` returns or raises.
 
         Write order is metrics, index, then series, then data. The key set
         is read from series and metrics, so an ingest that fails after its
@@ -291,31 +294,38 @@ class MetricStore:
         segment, one SST per segment registered afterwards from the staging
         listing) — ONE Spark job regardless of how many segments the batch
         spans."""
-        # D10 within-batch: duplicate (metric_id, tsid, field_id, ts_ms)
-        # rows must resolve by max ingest seq BEFORE the write stamps one
-        # __seq__ per file — matching model.build_data_table (remote-write
-        # retries folded into one batch would otherwise resolve by parquet
-        # row position). Samples without a `field` column normalize to the
-        # default 'value' field (RFC example row, RFC:150-153); the field
-        # id is the stable hash — a projection, never a catalog join.
+        # Samples without a `field` column normalize to the default 'value'
+        # field (RFC example row, RFC:150-153); the field id is the stable
+        # hash — a projection, never a catalog join. persist, not
+        # localCheckpoint: a lost executor recomputes its blocks from
+        # lineage (SCALING.md). Only this plan is cached, never ``samples``
+        # itself, so a frame the caller persisted keeps its storage level.
         keyed = model.with_ids(model.normalized_fields(samples)).withColumn(
             "field_id", model.field_id(F.col("field"))
-        )
-        ided = dedup_samples(keyed, ["metric_id", "tsid", "field_id"], "seq")
-        with self._known_lock:
-            if not self.series.manifest.all_ssts():
-                # no series rows yet (a one-shot or first ingest): every key
-                # is new, so write them all without collecting the batch's keys
-                self._known = None
-                self._write_catalogs(samples, samples)
-                stats = {"batch_keys": None, "new_keys": None, "new_series": None,
-                         "catalogs": "written in full", "key_set": "not read"}
-            else:
-                stats = self._write_missing_catalogs(keyed, samples)
-        self.data.bulk_ingest(
-            ided.select("metric_id", "tsid", "field_id", "ts_ms", "value"),
-            "ts_ms",
-        )
+        ).persist()
+        try:
+            # D10 within-batch: duplicate (metric_id, tsid, field_id, ts_ms)
+            # rows must resolve by max ingest seq BEFORE the write stamps
+            # one __seq__ per file — matching model.build_data_table
+            # (remote-write retries folded into one batch would otherwise
+            # resolve by parquet row position).
+            ided = dedup_samples(keyed, ["metric_id", "tsid", "field_id"], "seq")
+            with self._known_lock:
+                if not self.series.manifest.all_ssts():
+                    # no series rows yet (a one-shot or first ingest): every
+                    # key is new, so write them all without collecting keys
+                    self._known = None
+                    self._write_catalogs(keyed, keyed)
+                    stats = {"batch_keys": None, "new_keys": None, "new_series": None,
+                             "catalogs": "written in full", "key_set": "not read"}
+                else:
+                    stats = self._write_missing_catalogs(keyed)
+            self.data.bulk_ingest(
+                ided.select("metric_id", "tsid", "field_id", "ts_ms", "value"),
+                "ts_ms",
+            )
+        finally:
+            keyed.unpersist()
         if stats["new_series"] != 0:
             # the series table grew: engines must re-decide the label-join
             # broadcast against fresh plan stats (memo shared via engine())
@@ -359,12 +369,12 @@ class MetricStore:
         )
         return self._known
 
-    def _write_missing_catalogs(self, keyed: DataFrame, samples: DataFrame) -> dict:
+    def _write_missing_catalogs(self, keyed: DataFrame) -> dict:
         """Write catalog rows for the batch keys the store does not hold.
         Returns what it did, for ingest()'s log record."""
         reread = self._known is None or self._known_at != self._catalog_identity()
         known_series, known_metrics = self._read_known() if reread else self._known
-        ftype = model.field_type_name(samples)
+        ftype = model.field_type_name(keyed)
         keys = keyed.select("metric_id", "tsid", "field_id").distinct().toArrow()
         batch_series = _key_set(keys, "metric_id", "tsid")
         batch_metrics = {

@@ -397,6 +397,15 @@ class ColumnarTable:
         out = self._segmented(df, ts_col)
         if not cluster_by:
             return self._write_staged(out)
+        return self._write_staged(
+            self._zordered(out, cluster_by, cluster_slices), n_slices=cluster_slices
+        )
+
+    def _zordered(
+        self, out: DataFrame, cluster_by: list[str], cluster_slices: int
+    ) -> DataFrame:
+        """``out`` plus the z-order ``__zkey__`` over ``cluster_by`` and the
+        ``__zslice__`` (0..cluster_slices-1) cut from its quantiles."""
         from horaedb_spark.functions.layout import zorder_key, zorder_slice
 
         stats = out.agg(
@@ -414,8 +423,7 @@ class ColumnarTable:
             [i / cluster_slices for i in range(1, cluster_slices)],
             0.001,
         )
-        out = out.withColumn(ZSLICE_COLUMN, zorder_slice(F.col(ZKEY_COLUMN), bounds))
-        return self._write_staged(out, n_slices=cluster_slices)
+        return out.withColumn(ZSLICE_COLUMN, zorder_slice(F.col(ZKEY_COLUMN), bounds))
 
     def _declared_columns(self) -> list[Column]:
         """Schema enforcement: the declared columns cast to their types."""
@@ -483,10 +491,13 @@ class ColumnarTable:
         reserved: int | None | str = None,
         value_mutated: bool = False,
         n_slices: int | None = None,
+        min_seq: int | None = None,
+        replaces: list[int] | None = None,
     ) -> list[SstFile]:
         """ONE Spark job writing ``rows`` (``__segment__`` + declared
         columns) as one SST per touched segment, registered in one manifest
-        delta; a write that lands no rows registers nothing. The job
+        delta that also drops the ``replaces`` SST ids; a write that lands
+        no rows and replaces nothing registers nothing. The job
         ``partitionBy``s into a staging dir; the segment list comes from
         its listing (driver-side metadata, no second data pass); each
         segment dir is then committed (``backend.commit_dir``: a rename on
@@ -508,7 +519,8 @@ class ColumnarTable:
         already in ``rows`` (merge_into mixes tombstones and data rows).
         ``n_slices``: ``rows`` also carry bulk_ingest's z-order
         ``__zslice__`` (0..n_slices-1, one SST each) and ``__zkey__`` (the
-        row-group order within a slice)."""
+        row-group order within a slice). ``min_seq``: recorded on every
+        output SST (a rewrite's rows date back to its oldest input)."""
         dur = self.segment_duration_ms
         zorder = n_slices is not None
         n = n_slices if zorder else 1
@@ -565,10 +577,11 @@ class ColumnarTable:
                             TimeRange(seg, seg + dur),
                             tombstone=reserved is not None,
                             value_mutated=value_mutated,
+                            min_seq=min_seq,
                         )
                     )
-            if ssts:
-                self.manifest.update(ssts, [])
+            if ssts or replaces:
+                self.manifest.update(ssts, replaces or [])
         finally:
             _cleanup_staging(self.backend, staging, [s.path for s in ssts])
         return ssts
@@ -586,18 +599,19 @@ class ColumnarTable:
         Compaction merges by primary key and loses value-space clustering;
         this is the maintenance pass that restores it. The rewrite scans the
         chosen SSTs through normal merge-on-read (so only winning row
-        versions survive), bulk-ingests them clustered (new, higher fids —
-        precedence over the inputs is automatic), swaps the manifest BEFORE
-        deleting the input files (same crash-safety order as the compaction
-        executor), then removes the inputs. A scan racing the swap sees old
-        and new SSTs together and still resolves to identical values.
-        Returns the new SSTs; [] if another maintenance pass holds the
-        inputs."""
+        versions survive), writes them clustered through bulk ingest's
+        staged writer (new, higher fids — precedence over the inputs is
+        automatic), and registers the outputs and drops the inputs in ONE
+        manifest delta BEFORE deleting the input files (same crash-safety
+        order as the compaction executor). A crash before that delta leaves
+        the outputs unregistered (``vacuum()`` removes them); a manifest
+        never holds the outputs without their ``min_seq``. Returns the new
+        SSTs; [] if another maintenance pass holds the inputs."""
         ssts = self.manifest.find_ssts(time_range)
         if not ssts:
             return []
-        # The rewrite RESTAMPS ``__seq__`` (bulk_ingest allocates fresh file
-        # ids), so it must cover every live SST of every touched segment:
+        # The rewrite RESTAMPS ``__seq__`` (the staged writer allocates fresh
+        # file ids), so it must cover every live SST of every touched segment:
         # a partial pick would (a) drop tombstones whose older versions
         # survive in non-picked files, and (b) promote rewritten old
         # versions over NEWER versions sitting in non-picked files of the
@@ -624,19 +638,18 @@ class ColumnarTable:
             merged = self.scan_ssts(
                 ssts, ScanRequest(ordered=False, drop_tombstones=True)
             )
-            new_ssts = self.bulk_ingest(
-                merged, ts_col, cluster_by=cluster_by, cluster_slices=cluster_slices
-            )
-            # The rewrite restamped __seq__, but its rows originally date
-            # back to the oldest input — record that so restore() knows a
+            # The rewrite restamps __seq__, but its rows date back to the
+            # oldest input: min_seq records that, so restore() knows a
             # rollback past this point would lose them. Full-segment
             # coverage (asserted above) collapses versions, so the outputs
-            # are NOT value_mutated even if inputs were.
-            from dataclasses import replace as _dc_replace
-
-            min_in = min(s.effective_min_seq for s in ssts)
-            new_ssts = [_dc_replace(s, min_seq=min_in) for s in new_ssts]
-            self.manifest.update(new_ssts, ids)
+            # are NOT value_mutated even if inputs were. One delta adds the
+            # outputs and drops the inputs.
+            new_ssts = self._write_staged(
+                self._zordered(self._segmented(merged, ts_col), cluster_by, cluster_slices),
+                n_slices=cluster_slices,
+                min_seq=min(s.effective_min_seq for s in ssts),
+                replaces=ids,
+            )
             protected = bool(self.live_clone_roots())
             for s in ssts:
                 if not s.external and not protected:  # clone-referenced bytes stay

@@ -892,8 +892,10 @@ def test_ingest_failing_before_series_write_is_retried(
 
     monkeypatch.setattr(table, "write", fail_once)
     batch = _hosts(spark, "ab", 3000)
+    spark.catalog.clearCache()
     with pytest.raises(OSError, match="injected"):
         store.ingest(batch)
+    assert _cache_is_empty(spark)  # the failed write released the batch
     store.ingest(batch)
     assert len(calls) == 2
     eng = store.engine()
@@ -947,3 +949,69 @@ def test_concurrent_ingests_on_one_handle_keep_every_series(spark, tmp_path):
     assert keys == {f"host={h}" for h in ["a", *hosts]}
     store.ingest(_hosts(spark, ["a", *hosts], 3000))
     assert _catalog_ssts(store)["series"] == 1 + len(hosts)
+
+
+def _cache_is_empty(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_ingest_decodes_each_payload_once(spark, tmp_path, monkeypatch, caplog):
+    """The id-stamped batch is persisted for the whole ingest: the key
+    collect, the catalog rows and the data write read it, so every
+    remote-write payload is decoded once, and the cache is released."""
+    from horaedb_spark.metric import ingest
+
+    decode_one = ingest.decode_write_request
+    decodes = spark.sparkContext.accumulator(0)
+
+    def counting_decode(payload):
+        decodes.add(1)
+        return decode_one(payload)
+
+    # decode_payloads' worker function looks the decoder up in its module
+    # when it is pickled, so the passthrough ships with the job
+    monkeypatch.setattr(ingest, "decode_write_request", counting_decode)
+    spark.catalog.clearCache()
+    store = MetricStore(spark, str(tmp_path / "once"), HOUR)
+
+    def ingest_payloads(hosts, ts):
+        payloads = [
+            (ingest.encode_write_request(
+                [{"name": "cpu", "labels": {"host": h}, "samples": [(1.0, ts)]}]
+            ), ts)
+            for h in hosts
+        ]
+        before = decodes.value
+        frame = ingest.decode_payloads(
+            spark.createDataFrame(payloads, "payload binary, seq long")
+        )
+        info = _ingest_logged(store, frame, caplog)
+        assert decodes.value - before == len(payloads)
+        assert _cache_is_empty(spark)
+        return info
+
+    assert ingest_payloads("abc", 1000)["catalogs"] == "written in full"
+    info = ingest_payloads("abc", 2000)  # known series
+    assert info["catalogs"] == "skipped" and info["key_set"] == "re-read"
+    info = ingest_payloads("abcd", 3000)  # one new series
+    assert info["new_series"] == 1 and info["catalogs"] == "written"
+    eng = store.engine()
+    assert {r.tag_value for r in eng.label_values("cpu", "host").collect()} == set("abcd")
+    out = eng.select_series("cpu", [Matcher("host", "=", "a")])
+    assert sorted(r.ts_ms for r in out.collect()) == [1000, 2000, 3000]
+
+
+def test_ingest_keeps_a_caller_persisted_frame_cached(spark, tmp_path):
+    """ingest persists and releases only its own plan: a samples frame the
+    caller persisted, already carrying a field column, stays cached."""
+    spark.catalog.clearCache()
+    store = MetricStore(spark, str(tmp_path / "callers"), HOUR)
+    for ts in (1000, 2000):
+        samples = _hosts(spark, "ab", ts).withColumn("field", F.lit("value")).persist()
+        level = samples.storageLevel
+        store.ingest(samples)
+        assert samples.storageLevel == level and level.useMemory
+        samples.unpersist()
+    assert _cache_is_empty(spark)
+    out = store.engine().select_series("cpu", [Matcher("host", "=", "b")])
+    assert sorted(r.ts_ms for r in out.collect()) == [1000, 2000]

@@ -522,6 +522,31 @@ def test_recluster_restores_zorder_pruning(spark, tmp_path):
     assert len(read) < len(new_ssts)
 
 
+def test_recluster_registers_outputs_in_one_delta(spark, tmp_path):
+    """recluster() adds its outputs, with min_seq, and drops its inputs in
+    one manifest delta: the manifest never lists the outputs without it."""
+    import os
+
+    t = ColumnarTable(spark, str(tmp_path / "rc1"), kv_schema(), TWO_HOURS)
+    mk = lambda rows: spark.createDataFrame(rows, "pk1 long, pk2 long, value long")
+    t.write(WriteRequest(mk([(i, i, i) for i in range(50)]), TimeRange(0, 100)))
+    t.write(WriteRequest(mk([(i, i, i + 100) for i in range(0, 50, 5)]),
+                         TimeRange(0, 100)))
+    inputs = t.manifest.all_ssts()
+    expect = sorted(map(tuple, t.scan(ScanRequest(ordered=False)).collect()))
+    mutations = t.manifest.mutations
+    deltas = set(os.listdir(t.manifest.delta_dir))
+
+    new_ssts = t.recluster("pk1", cluster_by=["value"], cluster_slices=2)
+    assert len(new_ssts) == 2
+    assert t.manifest.mutations == mutations + 1
+    assert len(set(os.listdir(t.manifest.delta_dir)) - deltas) == 1
+    min_in = min(s.file_id for s in inputs)
+    assert [s.min_seq for s in t.manifest.all_ssts()] == [min_in, min_in]
+    assert {s.file_id for s in t.manifest.all_ssts()} == {s.file_id for s in new_ssts}
+    assert sorted(map(tuple, t.scan(ScanRequest(ordered=False)).collect())) == expect
+
+
 def test_recluster_crash_window_scan_stays_correct(spark, tmp_path):
     """Crash-safety of the manifest-swap-before-delete order: in the window
     where the clustered rewrite SSTs are registered but the inputs are not
