@@ -102,14 +102,13 @@ def _parse_byte_conf(value: str) -> int:
 
 
 class MetricEngine:
-    """Query layer over a samples frame (name, labels, ts_ms, value, seq)."""
+    """Query layer over a samples frame (name, labels, ts_ms, value, seq).
 
-    # Byte threshold under which the series label table gets an explicit
-    # broadcast hint on data joins; None defers to the session's
-    # spark.sql.autoBroadcastJoinThreshold. Class attribute so engines
-    # built without __init__ (MetricStore.engine's __new__) share the
-    # default; assign on an instance to override per engine.
-    series_broadcast_threshold: int | None = None
+    Two shapes serve the same queries: a samples-backed engine
+    (``__init__``) derives its tables from ``samples``; a store-backed one
+    (``MetricStore.engine``, ``samples`` None) reads the store's merged
+    tables. ``materialized()`` clones either shape onto checkpointed
+    tables for a batch of strings over one base."""
 
     def __init__(self, samples: DataFrame):
         self.samples = samples
@@ -128,25 +127,22 @@ class MetricEngine:
 
     def _series_broadcast_hint(self) -> bool:
         """Whether the series label table broadcasts on data joins: only
-        when Catalyst's size estimate fits the threshold (a plan-stats
-        lookup — metadata, no job). The decision is memoized per engine:
+        when Catalyst's size estimate fits the session's
+        ``spark.sql.autoBroadcastJoinThreshold`` (a plan-stats lookup —
+        metadata, no job). The decision is memoized per engine:
         the series frame never changes under an engine, and the stats
         lookup runs a full driver-side optimizer pass we don't want on
         every labeled select."""
-        thr = self.series_broadcast_threshold
-        if thr is None:
-            thr = _parse_byte_conf(
-                self.series.sparkSession.conf.get(
-                    "spark.sql.autoBroadcastJoinThreshold", "10MB"
-                )
+        thr = _parse_byte_conf(
+            self.series.sparkSession.conf.get(
+                "spark.sql.autoBroadcastJoinThreshold", "10MB"
             )
+        )
         # The memo dict may be SHARED across engines over the same base
         # (MetricStore hands every engine() the store's dict and clears it
         # on ingest) so a per-query engine() loop pays the optimizer pass
-        # once, not per query. Keyed by the EFFECTIVE threshold: an engine
-        # whose instance-level series_broadcast_threshold differs (the
-        # documented per-engine override) must not inherit a sibling's
-        # decision made under another threshold.
+        # once, not per query. Keyed by the threshold: a decision made
+        # under one session threshold must not answer under another.
         memo = self.__dict__.setdefault("_series_broadcast_memo", {})
         hint = memo.get(thr)
         if hint is None:
@@ -161,11 +157,12 @@ class MetricEngine:
             memo[thr] = hint
         return hint
 
-    def materialized(self, metrics=None) -> "MetricEngine":
+    def materialized(self, metrics: set[str]) -> "MetricEngine":
         """A shallow clone whose derived tables (``data``, ``series``,
-        ``index``) are eagerly ``localCheckpoint``ed — the shared-base
-        materialization for SUITE evaluation (many PromQL strings over one
-        store in one batch, ``promql_eval_many(share_base=True)``).
+        ``index``) are eagerly ``localCheckpoint``ed and bounded to the
+        ``metrics`` a batch references — the shared-base materialization
+        for SUITE evaluation (many PromQL strings over one store in one
+        batch, ``promql_eval_many``).
 
         Why: every compiled string re-embeds the scan → D10-dedup →
         series-key derivation subtree; a 16-string suite re-analyzes it 16x
@@ -181,14 +178,13 @@ class MetricEngine:
         selection plans with no Exchange. ``_flat`` is planned in a cloned
         session with AQE off; the caller's session conf is never changed.
 
-        ``metrics`` (round 15, VERDICT r14 #2 — the 100 TB size guard):
-        the metric names the batch actually references. When given, the
-        checkpointed ``data`` and ``index`` frames are bounded to those
-        metrics BEFORE materialization, so the working set follows the
-        batch, not the store. Two shapes:
+        ``metrics`` (the size guard): a non-empty set of metric names.
+        The checkpointed frames are bounded to them BEFORE materialization,
+        so the working set follows the batch, not the store. The engine's
+        shape picks the bound:
 
-        - samples-backed engines (``__init__``) REBUILD data/index from
-          ``samples.filter(name IN batch)`` — ``name`` is a source
+        - samples-backed engines (``__init__``) REBUILD data/index/series
+          from ``samples.filter(name IN batch)`` — ``name`` is a source
           column, so the predicate pushes at the scan (PushedFilters;
           metric_id is ``xxhash64(name)``, a derived column nothing can
           push) AND the D10 dedup window shuffles only the referenced
@@ -196,22 +192,19 @@ class MetricEngine:
           filter-after-build: the dedup partitions by metric_id, so
           dropping other metrics' partitions cannot change a kept row
           (the engine already treats xxhash64(name) as the collision-free
-          identity everywhere, e.g. select_series).
+          identity everywhere, e.g. select_series). The clone's series is
+          bounded too: tsid embeds the metric name, so bounded data only
+          references bounded-series tsids.
         - store-backed engines (``MetricStore.engine``, samples=None)
-          filter on the literal ``metric_id`` — there it IS a stored
-          column (pushes / prunes as-is) and the scan is already merged
-          (no dedup to prune).
+          filter data/index on the literal ``metric_id`` — there it IS a
+          stored column (pushes / prunes as-is) and the scan is already
+          merged (no dedup to prune); the clone keeps the whole series
+          scan.
 
-        A wide store whose suite touches a handful of metrics checkpoints
-        only those metrics' rows. The evaluation grid must not move when
-        the base shrinks, so the parent's (min, max) ts bounds are
-        computed and pinned on the clone before filtering —
-        time()/vector()/absent() grids stay identical to the declarative
-        path. In the samples-backed shape the clone's ``series`` is
-        bounded with everything else (tsid embeds the metric name, so
-        bounded data only references bounded-series tsids; the clone
-        serves exactly this batch's strings); store-backed clones keep
-        the whole series scan.
+        The evaluation grid must not move when the base shrinks, so the
+        parent's (min, max) ts bounds are computed and pinned on the clone
+        before filtering — time()/vector()/absent() grids stay identical
+        to the declarative path.
 
         localCheckpoint policy (SCALING.md "localCheckpoint boundary"): this
         is the SERVING-SUITE side of the boundary — the blast radius of a
@@ -220,43 +213,39 @@ class MetricEngine:
         declarative plans). Library operators over corpus-sized frames keep
         declarative defaults instead (functions/dedup.exact_substr_spans).
 
-        The parent's series-broadcast decision is copied (a checkpointed
+        The parent's series-broadcast decision is shared (a checkpointed
         frame is a LogicalRDD whose size estimate defaults to huge, which
         would silently flip the per-string series join from broadcast to
         sort-merge); the data-range bounds memo transfers for the same
         reason (same rows, one less probe job)."""
-
+        names = sorted(set(metrics))
+        if not names:
+            raise ValueError("materialized() needs the metric names to bound")
         # decide the series broadcast from the PARENT's stats (memoized)
         # before the clone inherits the memo — the clone's checkpointed
         # series has no stats
         broadcast = self._series_broadcast_hint()
-        data, index, series = self.data, self.index, self.series
-        names = sorted(set(metrics)) if metrics is not None else None
-
-        def _pin_bounds() -> None:
-            # pin the grid to the PARENT's range before the base shrinks.
-            # The agg runs over ``samples`` when available: the D10 dedup
-            # keeps one row per (metric, tsid, ts) — it never removes a
-            # timestamp entirely — so min/max ts_ms over samples equals
-            # min/max over data, without paying the dedup window's shuffle
-            # just to read two scalars. Memoized on the PARENT, so a
-            # long-lived engine pays it once across batches.
-            if getattr(self, "_data_ts_bounds", None) is None:
-                src = self.samples if self.samples is not None else self.data
-                row = src.agg(F.min("ts_ms"), F.max("ts_ms")).first()
-                if row[0] is not None:
-                    self._data_ts_bounds = (int(row[0]), int(row[1]))
+        # pin the grid to the PARENT's range before the base shrinks (a
+        # compiler falling through to the clone's bounded data would derive
+        # a wrong grid). The agg runs over ``samples`` when available: the
+        # D10 dedup keeps one row per (metric, tsid, ts) — it never removes
+        # a timestamp entirely — so min/max ts_ms over samples equals
+        # min/max over data, without paying the dedup window's shuffle just
+        # to read two scalars. Memoized on the PARENT, so a long-lived
+        # engine pays it once across batches.
+        if getattr(self, "_data_ts_bounds", None) is None:
+            src = self.samples if self.samples is not None else self.data
+            row = src.agg(F.min("ts_ms"), F.max("ts_ms")).first()
+            if row[0] is not None:
+                self._data_ts_bounds = (int(row[0]), int(row[1]))
 
         background: list = []
-        if names and self.samples is not None:
+        if self.samples is not None:
             # ONE derivation of the (possibly expensive) samples subtree:
             # checkpoint the name-bounded sample stream — the name
             # predicate pushes at the scan — then derive data/series/index
             # from the materialized blocks instead of re-deriving the
-            # subtree once per table. The clone's series is bounded
-            # with everything else: tsid embeds the metric name, so the
-            # bounded data can only reference bounded-series tsids, and
-            # the clone serves exactly this batch's strings.
+            # subtree once per table.
             bounded = self.samples.filter(F.col("name").isin(names))
             est_src = bounded
             base = bounded.localCheckpoint(eager=False)
@@ -264,23 +253,16 @@ class MetricEngine:
             data = model.build_data_table(base)
             index = model.build_index_table(base)
             series = model.build_series_table(base)
-        elif names:
+        else:
             # store-backed: metric_id is a stored column (pushes/prunes
             # as-is) and the scan is already merged — filter in place
             cond = F.col("metric_id").isin(
                 *[F.xxhash64(F.lit(n)) for n in names]
             )
-            data = data.filter(cond)
-            index = index.filter(cond)
+            data = self.data.filter(cond)
+            index = self.index.filter(cond)
+            series = self.series
             est_src = data
-        else:
-            est_src = self.samples if self.samples is not None else data
-        # the grid source of truth must be pinned BEFORE the clone serves
-        # a compile (a compiler falling through to the clone's bounded
-        # data would derive a wrong grid) — this one stays blocking; it is
-        # metadata-sized and memoized on the parent
-        if names:
-            _pin_bounds()
 
         series_ck = series.localCheckpoint(eager=False)
         index_ck = index.localCheckpoint(eager=False)
@@ -364,13 +346,6 @@ class MetricEngine:
         clone.__dict__["_series_broadcast_memo"] = self.__dict__[
             "_series_broadcast_memo"
         ]
-        # a per-INSTANCE threshold override must travel with the memo: the
-        # memo is keyed by effective threshold, so a clone falling back to
-        # the class default would miss the memo, run the stats pass over
-        # the checkpointed LogicalRDD (size estimate defaults huge), and
-        # silently flip the series join to sort-merge (ADVICE r14)
-        if "series_broadcast_threshold" in self.__dict__:
-            clone.series_broadcast_threshold = self.series_broadcast_threshold
         bounds = getattr(self, "_data_ts_bounds", None)
         if bounds is not None:
             clone._data_ts_bounds = bounds

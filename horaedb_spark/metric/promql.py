@@ -146,13 +146,51 @@ AGG_OPS = {
 }
 PARAM_AGGS = {"topk", "bottomk", "quantile", "limitk", "limit_ratio"}
 STRING_PARAM_AGGS = {"count_values"}
+
+
+def _holt_winters(
+    df: DataFrame, keys: list[str], step_ms: int, sf: float, tf: float
+) -> DataFrame:
+    """holt_winters(sel[range], sf, tf): one fold per (series, step
+    bucket). Prometheus 3 renamed it double_exponential_smoothing (it never
+    was Holt-Winters: no seasonality); both names evaluate here."""
+    b = df.withColumn("bucket_ms", F.col("ts_ms") - F.pmod("ts_ms", F.lit(step_ms)))
+    return P.holt_winters(b, [*keys, "bucket_ms"], sf, tf)
+
+
+# Range functions evaluated at range == step only: name -> (kernel, the
+# value column of its (series, bucket_ms) output, the names of the literal
+# arguments that follow the range). The compiler calls
+# kernel(df, keys, step_ms, *literals) and casts the value column to double:
+# changes/resets/present_over_time count, and on a double column the
+# optimizer drops the cast.
+ALIGNED_RANGE_FNS = {
+    "irate": (P.irate, "irate_per_s", ()),
+    "idelta": (P.idelta, "idelta", ()),
+    "delta": (P.delta, "delta", ()),
+    "deriv": (P.deriv, "deriv", ()),
+    "changes": (P.transition_counts, "changes", ()),
+    "resets": (P.transition_counts, "resets", ()),
+    "stddev_over_time": (P.stddev_over_time, "stddev_over_time", ()),
+    "stdvar_over_time": (P.stddev_over_time, "stdvar_over_time", ()),
+    "present_over_time": (P.edge_over_time, "present_over_time", ()),
+    "last_over_time": (P.edge_over_time, "last_over_time", ()),
+    "mad_over_time": (P.mad_over_time, "mad_over_time", ()),
+    "predict_linear": (
+        lambda df, keys, step_ms, ahead_s: P.predict_linear(
+            df, keys, step_ms, int(ahead_s)
+        ),
+        "predicted",
+        ("ahead_s",),
+    ),
+    "holt_winters": (_holt_winters, "smoothed", ("sf", "tf")),
+    "double_exponential_smoothing": (_holt_winters, "smoothed", ("sf", "tf")),
+    "quantile_over_time": (P.quantile_over_time, "quantile_over_time", ("q",)),
+}
+# rate/increase/*_over_time also slide (range a multiple of the step)
 RANGE_FNS = {
-    "rate", "increase", "irate", "idelta", "delta", "deriv",
-    "predict_linear", "holt_winters", "double_exponential_smoothing",
-    "avg_over_time", "min_over_time", "max_over_time", "sum_over_time",
-    "count_over_time", "last_over_time", "quantile_over_time",
-    "changes", "resets", "stddev_over_time", "stdvar_over_time",
-    "present_over_time", "mad_over_time",
+    "rate", "increase", "avg_over_time", "min_over_time", "max_over_time",
+    "sum_over_time", "count_over_time", *ALIGNED_RANGE_FNS,
 }
 MATH_FNS = {
     "abs", "ceil", "floor", "sqrt", "exp", "ln", "log2", "log10", "sgn",
@@ -1224,12 +1262,12 @@ class PromQLCompiler:
 
     def _range_fn(self, node: Call):
         fn = node.fn
-        q = None
         args = list(node.args)
         if fn == "quantile_over_time":
             if not args or not isinstance(args[0], Number):
                 raise PromQLError("quantile_over_time needs a literal q")
-            q = args.pop(0).value
+            # the literal q follows the range, like every other literal
+            args.append(args.pop(0))
         df, range_ms, at_ms = self._range_input(args[0])
         step = self.step_ms
         sliding = range_ms != step
@@ -1239,6 +1277,21 @@ class PromQLCompiler:
                 f"step {step}ms"
             )
         keys = ["series_key"]
+        if fn in ALIGNED_RANGE_FNS:
+            if sliding:
+                raise PromQLError(f"{fn} supports range == step only")
+            kernel, val, literals = ALIGNED_RANGE_FNS[fn]
+            lits = args[1 : 1 + len(literals)]
+            if len(lits) < len(literals) or not all(
+                isinstance(a, Number) for a in lits
+            ):
+                raise PromQLError(f"{fn} needs literal {', '.join(literals)}")
+            out = kernel(df, keys, step, *[a.value for a in lits])
+            return out.select(
+                *keys,
+                F.col("bucket_ms").alias("ts_ms"),
+                F.col(val).cast("double").alias("value"),
+            )
         if fn == "rate":
             out = (
                 P.sliding_rate(df, keys, step, range_ms)
@@ -1258,108 +1311,6 @@ class PromQLCompiler:
             out = P.increase(df, keys, step)
             return out.select(
                 *keys, F.col("bucket_ms").alias("ts_ms"), F.col("increase").alias("value")
-            )
-        if fn in ("irate", "idelta", "delta", "deriv"):
-            if sliding:
-                raise PromQLError(f"{fn} supports range == step only")
-            out = {
-                "irate": P.irate, "idelta": P.idelta, "delta": P.delta,
-                "deriv": P.deriv,
-            }[fn](df, keys, step)
-            val = {
-                "irate": "irate_per_s", "idelta": "idelta", "delta": "delta",
-                "deriv": "deriv",
-            }[fn]
-            return out.select(
-                *keys, F.col("bucket_ms").alias("ts_ms"), F.col(val).alias("value")
-            )
-        if fn in ("changes", "resets"):
-            if sliding:
-                raise PromQLError(f"{fn} supports range == step only")
-            out = P.transition_counts(df, keys, step)
-            return out.select(
-                *keys,
-                F.col("bucket_ms").alias("ts_ms"),
-                F.col(fn).cast("double").alias("value"),
-            )
-        if fn in ("stddev_over_time", "stdvar_over_time"):
-            if sliding:
-                raise PromQLError(f"{fn} supports range == step only")
-            out = P.stddev_over_time(df, keys, step)
-            return out.select(
-                *keys, F.col("bucket_ms").alias("ts_ms"), F.col(fn).alias("value")
-            )
-        if fn == "present_over_time":
-            if sliding:
-                raise PromQLError("present_over_time supports range == step only")
-            out = P.edge_over_time(df, keys, step)
-            return out.select(
-                *keys,
-                F.col("bucket_ms").alias("ts_ms"),
-                F.col("present_over_time").cast("double").alias("value"),
-            )
-        if fn == "mad_over_time":
-            if sliding:
-                raise PromQLError("mad_over_time supports range == step only")
-            out = P.mad_over_time(df, keys, step)
-            return out.select(
-                *keys,
-                F.col("bucket_ms").alias("ts_ms"),
-                F.col("mad_over_time").alias("value"),
-            )
-        if fn == "predict_linear":
-            # predict_linear(sel[range], ahead_s)
-            if sliding:
-                raise PromQLError("predict_linear supports range == step only")
-            if len(node.args) < 2 or not isinstance(node.args[1], Number):
-                raise PromQLError("predict_linear needs a literal ahead_s")
-            out = P.predict_linear(df, keys, step, int(node.args[1].value))
-            return out.select(
-                *keys,
-                F.col("bucket_ms").alias("ts_ms"),
-                F.col("predicted").alias("value"),
-            )
-        if fn in ("holt_winters", "double_exponential_smoothing"):
-            # Prometheus 3 renamed holt_winters to
-            # double_exponential_smoothing (it never was Holt-Winters —
-            # no seasonality); both names dispatch to the same kernel
-            # holt_winters(sel[range], sf, tf) — fold per (series, bucket)
-            if sliding:
-                raise PromQLError("holt_winters supports range == step only")
-            if len(node.args) < 3 or not all(
-                isinstance(a, Number) for a in node.args[1:3]
-            ):
-                raise PromQLError("holt_winters needs literal sf, tf")
-            b = df.withColumn(
-                "bucket_ms",
-                F.col("ts_ms") - F.pmod("ts_ms", F.lit(step)),
-            )
-            out = P.holt_winters(
-                b, ["series_key", "bucket_ms"],
-                node.args[1].value, node.args[2].value,
-            )
-            return out.select(
-                "series_key",
-                F.col("bucket_ms").alias("ts_ms"),
-                F.col("smoothed").alias("value"),
-            )
-        if fn == "quantile_over_time":
-            if sliding:
-                raise PromQLError("quantile_over_time supports range == step only")
-            out = P.quantile_over_time(df, keys, step, q)
-            return out.select(
-                *keys,
-                F.col("bucket_ms").alias("ts_ms"),
-                F.col("quantile_over_time").alias("value"),
-            )
-        if fn == "last_over_time":
-            if sliding:
-                raise PromQLError("last_over_time supports range == step only")
-            out = P.edge_over_time(df, keys, step)
-            return out.select(
-                *keys,
-                F.col("bucket_ms").alias("ts_ms"),
-                F.col("last_over_time").alias("value"),
             )
         # avg/min/max/sum/count_over_time
         if sliding:
@@ -1839,94 +1790,66 @@ def referenced_metrics(query: str) -> set[str] | None:
     return names
 
 
+# threads of promql_eval_many's pool: one small job per string in flight
+_SUITE_WORKERS = 16
+
+
 def promql_eval_many(
-    jobs: list[tuple[MetricEngine, str]],
-    step_ms: int,
-    materialize: bool = False,
-    max_workers: int = 16,
-    post=None,
-    share_base: bool = False,
+    jobs: list[tuple[MetricEngine, str]], step_ms: int, post=None
 ) -> list[DataFrame]:
     """Evaluate MANY PromQL strings against their engines (dashboard /
     rule-group shape), returning frames in input order.
 
-    ``materialize=False`` (default) compiles lazily and SERIALLY — a
-    compile-only thread pool was measured slower (5.98 s vs 3.72 s for
-    the 16-string suite, cold, sf0.1): DataFrame construction is
-    GIL-bound py4j chatter, and racing threads duplicate the
-    shared-subtree compiles the engine-scoped AST memo otherwise dedups.
-
-    ``materialize=True`` is the shape that actually wins for suite
-    workloads: each string EXECUTES as its own small job on a thread pool
-    (eager ``localCheckpoint`` — results stay distributed as executor
-    blocks, released on GC). Evaluating a 16-branch suite as ONE union
-    action makes AQE re-optimize a giant plan at every materialized
-    stage (~60 exchanges; measured wall 5.3-5.5 s at sf0.1 against only
-    ~0.3 s of perfectly-parallel executor work), while 16 concurrent
-    small jobs overlap their stage waves and each replan sees a small
-    plan: 3.3 s total, build included. ``post(df, i)`` (e.g. a
-    tag+rounding projection) is applied before the checkpoint so only
+    Each string EXECUTES as its own small job on a pool of
+    ``_SUITE_WORKERS`` threads (eager ``localCheckpoint``: results stay
+    distributed as executor blocks, released on GC). Evaluating a
+    16-branch suite as ONE union action makes AQE re-optimize a giant plan
+    at every materialized stage (~60 exchanges; measured wall 5.3-5.5 s at
+    sf0.1 against only ~0.3 s of perfectly-parallel executor work), while
+    16 concurrent small jobs overlap their stage waves and each replan
+    sees a small plan: 3.3 s total, build included. ``post(df, i)`` (e.g.
+    a tag+rounding projection) is applied before the checkpoint so only
     final rows materialize. Memo races under the pool cost at most a
     duplicate subtree compile, never a wrong result.
 
-    ``share_base=True`` (with ``materialize``) additionally materializes
-    each engine's derived base ONCE per batch
-    (``MetricEngine.materialized()``): engines referenced by two or more
-    strings are replaced by a clone whose data/series/index tables are
-    eager localCheckpoints, so the scan → dedup → series-key subtree is
-    analyzed and executed once instead of per string — per-string plans
-    become filters over executor-resident blocks. The checkpointed base
-    is BOUNDED (round 15): each engine's clone is pre-filtered to the
-    union of metric names its strings reference, so the materialized
-    working set follows the batch, not the store, and the metric_id
-    predicate still prunes at the parquet scan. Engines that already are
-    ``materialized()`` clones are left alone (their checkpointed base +
-    _flat pre-join IS the shared base). Results are unchanged (checkpointing
-    only materializes the same rows; the evaluation grid is pinned to
-    the parent's data bounds before filtering); the clone's blocks
-    are released on GC with the returned frames. localCheckpoint policy:
-    see the SCALING.md boundary paragraph — this is the serving-suite
-    side (blast radius = one suite re-run), not a library-operator
-    default."""
-    if not materialize:
-        return [promql_eval(eng, q, step_ms) for eng, q in jobs]
+    The batch also shares each engine's derived base: an engine used by
+    two or more strings whose strings reference a non-empty set of metric
+    names is replaced by its ``MetricEngine.materialized(metrics)`` clone,
+    whose data/series/index tables are eager localCheckpoints bounded to
+    those metrics. The scan → dedup → series-key subtree is then analyzed
+    and executed once instead of per string, and per-string plans become
+    filters over executor-resident blocks. Left alone: engines used once,
+    engines that already are ``materialized()`` clones (their checkpointed
+    base + ``_flat`` pre-join IS the shared base), engines whose strings
+    read no metric (``vector(1)``, ``time()``: nothing to share), and
+    engines with an unparseable string (the batch raises on it anyway).
+    Results are unchanged: checkpointing only materializes the same rows,
+    and the evaluation grid is pinned to the parent's data bounds. The
+    clone's blocks are released on GC with the returned frames.
+    localCheckpoint policy: see the SCALING.md boundary paragraph — this
+    is the serving-suite side (blast radius = one suite re-run), not a
+    library-operator default."""
     from concurrent.futures import ThreadPoolExecutor
 
-    if share_base:
-        counts: dict[int, int] = {}
-        uniq: dict[int, MetricEngine] = {}
-        batch_metrics: dict[int, set[str] | None] = {}
-        for eng, q in jobs:
-            counts[id(eng)] = counts.get(id(eng), 0) + 1
-            uniq[id(eng)] = eng
-            # union of metric names this engine's strings reference — the
-            # size guard for materialized(): the checkpointed base is
-            # bounded by the batch's working set, and the metric_id
-            # predicate stays pushed down at the parquet scan. One
-            # unparseable string disables pruning for its engine (None).
-            m = referenced_metrics(q)
-            prev = batch_metrics.get(id(eng), set())
-            batch_metrics[id(eng)] = (
-                None if (m is None or prev is None) else prev | m
-            )
-        # an engine that is already a materialized() clone (it carries a
-        # _flat) IS a shared base — re-materializing it would checkpoint
-        # the working set twice. An engine whose strings reference no
-        # metric (vector(1), time()) has nothing to share:
-        # materialized(set()) would checkpoint the whole store.
-        shared = {
-            k: e
-            for k, e in uniq.items()
-            if counts[k] >= 2 and e._flat is None and batch_metrics[k] != set()
-        }
-        if shared:
-            with ThreadPoolExecutor(min(len(shared), max_workers)) as pool:
-                futs = {
-                    k: pool.submit(e.materialized, batch_metrics.get(k))
-                    for k, e in shared.items()
-                }
-                clones = {k: f.result() for k, f in futs.items()}
-            jobs = [(clones.get(id(e), e), q) for e, q in jobs]
+    strings: dict[int, tuple[MetricEngine, list[str]]] = {}
+    for eng, q in jobs:
+        strings.setdefault(id(eng), (eng, []))[1].append(q)
+    shared: dict[int, tuple[MetricEngine, set[str]]] = {}
+    for k, (eng, qs) in strings.items():
+        if len(qs) < 2 or eng._flat is not None:
+            continue
+        # the union of the metric names its strings read bounds the base
+        names = [referenced_metrics(q) for q in qs]
+        if None not in names and (metrics := set().union(*names)):
+            shared[k] = (eng, metrics)
+    if shared:
+        with ThreadPoolExecutor(min(len(shared), _SUITE_WORKERS)) as pool:
+            futs = {
+                k: pool.submit(eng.materialized, metrics)
+                for k, (eng, metrics) in shared.items()
+            }
+            clones = {k: f.result() for k, f in futs.items()}
+        jobs = [(clones.get(id(e), e), q) for e, q in jobs]
 
     def one(i: int, eng: MetricEngine, q: str) -> DataFrame:
         out = promql_eval(eng, q, step_ms)
@@ -1934,6 +1857,6 @@ def promql_eval_many(
             out = post(out, i)
         return out.localCheckpoint(eager=True)
 
-    with ThreadPoolExecutor(min(max_workers, max(1, len(jobs)))) as pool:
+    with ThreadPoolExecutor(min(_SUITE_WORKERS, max(1, len(jobs)))) as pool:
         futs = [pool.submit(one, i, e, q) for i, (e, q) in enumerate(jobs)]
         return [f.result() for f in futs]

@@ -84,18 +84,20 @@ class RuleEvaluator:
             total += sum(s.num_rows for s in ssts)
         return total
 
-    def engine_over_records(self) -> MetricEngine:
-        """A MetricEngine over the RECORDED series — rules compose, and the
-        HTTP surface serves them like any scraped metric."""
-        scan = self.table.scan()
-        samples = scan.select(
-            "name",
-            F.str_to_map("series_key", F.lit(","), F.lit("=")).alias("labels"),
-            "ts_ms",
-            "value",
-            F.lit(0).alias("seq"),
-        )
-        return MetricEngine(samples)
+
+def engine_over(table: ColumnarTable) -> MetricEngine:
+    """A MetricEngine over a flat (name, series_key, ts_ms, value) sample
+    table — the recorded series (rules compose) and the HTTP server's
+    remote-write sink, served like any scraped metric."""
+    samples = table.scan().select(
+        "name",
+        F.str_to_map("series_key", F.lit(","), F.lit("=")).alias("labels"),
+        "ts_ms",
+        "value",
+        F.lit(0).alias("seq"),
+    )
+    return MetricEngine(samples)
+
 
 @dataclass(frozen=True)
 class AlertingRule:

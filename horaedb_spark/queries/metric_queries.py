@@ -52,7 +52,8 @@ def _engine(spark: SparkSession, sf_dir: str) -> MetricEngine:
         # costs more than re-running the cheap vectorized parquet scan +
         # dedup, and ReuseExchange already dedups the shared base inside
         # each union job. Suites that share a base go through
-        # promql_eval_many(share_base=True) -> MetricEngine.materialized().
+        # promql_eval_many, which shares one MetricEngine.materialized()
+        # base per engine.
         _ENGINES[sf_dir] = MetricEngine(samples)
     return _ENGINES[sf_dir]
 

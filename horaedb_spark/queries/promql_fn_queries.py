@@ -341,13 +341,10 @@ def promql_fn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
 
-    # share_base (round 14): the engine base is localCheckpointed once for
-    # the 22-string batch (see promql_parse_eval / MetricEngine
-    # .materialized()) — measured best-of-4 interleaved at sf0.1:
+    # promql_eval_many localCheckpoints the engine base once for the
+    # 22-string batch (see promql_parse_eval / MetricEngine
+    # .materialized()) — round 14, best-of-4 interleaved at sf0.1:
     # 12.0 s → 5.5 s, rows byte-identical (oracle-gated)
-    parts = promql_eval_many(
-        [(eng, q) for _, q in _QS], DAY_MS, materialize=True, post=post,
-        share_base=True,
-    )
+    parts = promql_eval_many([(eng, q) for _, q in _QS], DAY_MS, post=post)
     allq = reduce(DataFrame.unionByName, parts)
     return allq.orderBy("query_id", "series_key", "ts_ms")

@@ -474,7 +474,7 @@ def promql_parse_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("q16", beng, _Q16),
     ]
     # Each string EXECUTES as its own small concurrent job
-    # (promql_eval_many materialize=True): one 16-branch union action
+    # (promql_eval_many): one 16-branch union action
     # makes AQE re-optimize a ~60-exchange plan at every materialized
     # stage (5.3-5.5 s wall at sf0.1 against ~0.3 s of parallel executor
     # work), while 16 pooled localCheckpoint jobs overlap their stage
@@ -493,17 +493,13 @@ def promql_parse_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
 
-    # share_base (round 14): both engines' derived tables (scan → D10
-    # dedup → series key) are localCheckpointed ONCE for the batch instead
-    # of being re-analyzed and re-executed inside all 16 string plans —
-    # measured best-of-4 interleaved at sf0.1: 8.8 s → 6.4 s, rows
-    # byte-identical (oracle-gated). See MetricEngine.materialized().
+    # promql_eval_many also localCheckpoints both engines' derived tables
+    # (scan → D10 dedup → series key) ONCE for the batch instead of
+    # re-analyzing and re-executing them inside all 16 string plans
+    # (round 14, best-of-4 interleaved at sf0.1: 8.8 s → 6.4 s, rows
+    # byte-identical, oracle-gated). See MetricEngine.materialized().
     parts = promql_eval_many(
-        [(engine, q) for _, engine, q in suite],
-        DAY_MS,
-        materialize=True,
-        post=post,
-        share_base=True,
+        [(engine, q) for _, engine, q in suite], DAY_MS, post=post
     )
     from functools import reduce
 
@@ -710,7 +706,7 @@ def promql_recording_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     points overwrite, never duplicate); the scan of the recorded table must
     equal the direct evaluation of both rules. Recorded names use the
     Prometheus ``level:metric:operation`` convention and the table is
-    itself a valid sample store (rules compose via engine_over_records)."""
+    itself a valid sample store (rules compose via engine_over)."""
     import tempfile
 
     from horaedb_spark.metric.rules import (

@@ -98,7 +98,7 @@ def _build_events_table(
 
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
+    with ThreadPoolExecutor(4) as pool:
         list(pool.map(write_slice, zip(slices, ids)))
     ev.unpersist()
     if shared:

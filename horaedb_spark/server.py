@@ -49,7 +49,7 @@ from urllib.parse import parse_qs, unquote, urlparse
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
-from horaedb_spark.metric.engine import MetricEngine, matches_labels
+from horaedb_spark.metric.engine import matches_labels
 from horaedb_spark.metric.ingest import (
     decode_exemplars,
     decode_metadata,
@@ -61,7 +61,11 @@ from horaedb_spark.metric.promql import (
     _duration_ms,
     parse_promql,
 )
-from horaedb_spark.metric.rules import AlertingRule, evaluate_alert_states
+from horaedb_spark.metric.rules import (
+    AlertingRule,
+    engine_over,
+    evaluate_alert_states,
+)
 from horaedb_spark.storage.compaction import Compactor
 from horaedb_spark.storage.table import ScanRequest
 
@@ -903,14 +907,7 @@ class ControlServer:
         # actually changed. Runs only on cache misses (engines are built
         # inside the cached compute); metadata-sized.
         self.write_table.manifest.sync_if_behind()
-        samples = self.write_table.scan().select(
-            "name",
-            F.str_to_map("series_key", F.lit(","), F.lit("=")).alias("labels"),
-            "ts_ms",
-            "value",
-            F.lit(0).alias("seq"),
-        )
-        return MetricEngine(samples)
+        return engine_over(self.write_table)
 
     def start(self) -> None:
         self._thread = threading.Thread(

@@ -290,7 +290,7 @@ class Compactor:
         )
         if not tasks:
             return []
-        with ThreadPoolExecutor(max_workers=max(1, parallelism)) as pool:
+        with ThreadPoolExecutor(max(1, parallelism)) as pool:
             return [
                 out for out in pool.map(self._run_admitted, tasks) if out is not None
             ]

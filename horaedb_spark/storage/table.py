@@ -412,10 +412,17 @@ class ColumnarTable:
             *[F.min(c).alias(f"mn_{c}") for c in cluster_by],
             *[F.max(c).alias(f"mx_{c}") for c in cluster_by],
         ).first()
+
+        def bound(name: str) -> float:
+            # no non-NULL value (an empty frame, an all-NULL column): the
+            # column is constant, which zorder_key skips like a zero span
+            v = stats[name]
+            return 0.0 if v is None else float(v)
+
         zk = zorder_key(
             [F.col(c) for c in cluster_by],
-            [float(stats[f"mn_{c}"]) for c in cluster_by],
-            [float(stats[f"mx_{c}"]) for c in cluster_by],
+            [bound(f"mn_{c}") for c in cluster_by],
+            [bound(f"mx_{c}") for c in cluster_by],
         )
         out = out.withColumn(ZKEY_COLUMN, zk)
         bounds = out.approxQuantile(

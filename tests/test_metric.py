@@ -298,7 +298,7 @@ def test_materialized_engine_equals_declarative_and_skips_exchange(spark):
         "value double, seq long",
     )
     plain = MetricEngine(samples)
-    mat = MetricEngine(samples).materialized()
+    mat = MetricEngine(samples).materialized({"m"})
     q = "sum by (env) (rate(m[1d]))"
     want = sorted(map(tuple, promql_eval(plain, q, 86_400_000).collect()))
     got = sorted(map(tuple, promql_eval(mat, q, 86_400_000).collect()))
@@ -539,8 +539,8 @@ def test_materialized_multi_field_engine_matches_declarative(spark):
 def test_series_label_join_is_size_aware(spark):
     """The series label join broadcasts only under a size estimate: at
     100 TB the series table of a high-cardinality store is data-sized and
-    force-broadcasting it would OOM the executors. A forced-low threshold
-    must flip the plan to a shuffle join on tsid with row-equal results;
+    force-broadcasting it would OOM the executors. A session threshold
+    of -1 must flip the plan to a shuffle join on tsid with row-equal results;
     the default (estimate well under the session threshold) must keep the
     broadcast."""
     buf = encode_write_request(
@@ -567,12 +567,11 @@ def test_series_label_join_is_size_aware(spark):
     rows_b, plan_b = plan_of(small)
     assert "BroadcastHashJoin" in plan_b, plan_b[:1500]
 
-    # forced-low threshold: the engine stops hinting; with the session
-    # auto-broadcast also off (the at-100-TB condition — AQE would otherwise
-    # re-broadcast the tiny test table at runtime), the plan must flip to a
-    # shuffle join on tsid with row-equal results
+    # session auto-broadcast off (the at-100-TB condition): the engine
+    # stops hinting, AQE cannot re-broadcast the tiny test table at
+    # runtime, and the plan must flip to a shuffle join on tsid with
+    # row-equal results
     forced = MetricEngine(decode_payloads(payloads))
-    forced.series_broadcast_threshold = 1  # everything is "too big"
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:

@@ -728,11 +728,11 @@ def test_engine_from_mirror_without_data_buckets_raises(spark, tmp_path):
 
 
 def test_store_engine_threshold_override_not_poisoned_by_shared_memo(spark, tmp_path):
-    """Engines from one store share the broadcast-decision memo, but the
-    documented per-instance series_broadcast_threshold override must still
-    win: a sibling engine's earlier broadcast=True decision (made under
-    the default threshold) must not leak into an engine whose override
-    says the series table is too big to broadcast."""
+    """Engines from one store share the broadcast-decision memo, but a
+    changed session threshold must still win: a sibling engine's earlier
+    broadcast=True decision (made under the default threshold) must not
+    leak into an engine queried with spark.sql.autoBroadcastJoinThreshold
+    overridden to -1 (never broadcast)."""
     store = MetricStore(spark, str(tmp_path / "memo"), HOUR)
     store.ingest(
         _samples(
@@ -747,7 +747,6 @@ def test_store_engine_threshold_override_not_poisoned_by_shared_memo(spark, tmp_
     assert "BroadcastHashJoin" in plan_a.split("== Initial Plan ==")[0]
 
     b = store.engine()
-    b.series_broadcast_threshold = 1  # everything is "too big"
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:

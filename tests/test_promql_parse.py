@@ -390,10 +390,11 @@ def test_engine_promql_method(spark, eng):
 
 def test_recording_rules_compose(spark, eng, tmp_path):
     """A rule's output table is itself a sample store: a PromQL string over
-    engine_over_records() queries the recorded series like scraped ones."""
+    engine_over() queries the recorded series like scraped ones."""
     from horaedb_spark.metric.rules import (
         RecordingRule,
         RuleEvaluator,
+        engine_over,
         rules_table_schema,
     )
     from horaedb_spark.storage.table import ColumnarTable
@@ -410,7 +411,7 @@ def test_recording_rules_compose(spark, eng, tmp_path):
     n2 = ev.record([rule])  # idempotent: same points overwrite
     assert n2 == n
     direct = promql_eval(eng, "sum by (cohort) (rate(click[1d]))", DAY)
-    recorded_eng = ev.engine_over_records()
+    recorded_eng = engine_over(table)
     # query the RECORDED metric through the parser (max_over_time at the
     # same step returns each recorded point unchanged)
     served = promql_eval(
@@ -981,14 +982,14 @@ def test_histogram_family_functions(spark):
         promql_eval(single, "histogram_count(click)", 7 * DAY)
 
 
-def test_eval_many_share_base_row_equality(spark):
-    """share_base=True (round-14: the batch's engines are replaced by
+def test_eval_many_shared_base_row_equality(spark):
+    """Sharing the base (round 14: the batch's engines are replaced by
     MetricEngine.materialized() clones whose data/series/index are
     localCheckpointed once) must be a pure execution-strategy change:
-    identical rows to the unshared path for a matcher + agg + binop
+    identical rows to promql_eval per string for a matcher + agg + binop
     suite, the clone must keep the parent's series-broadcast decision
     (a checkpointed LogicalRDD has no usable size stats — without the
-    copied memo the per-string series join silently flips from
+    shared memo the per-string series join silently flips from
     broadcast to sort-merge), and engines referenced once must be left
     alone (no wasted base materialization)."""
     from functools import reduce
@@ -1010,13 +1011,8 @@ def test_eval_many_share_base_row_equality(spark):
             F.lit(str(i)).alias("query_id"), "series_key", "ts_ms", "value"
         )
 
-    base = promql_eval_many(
-        [(eng, q) for q in suite], DAY, materialize=True, post=post
-    )
-    sharing = promql_eval_many(
-        [(eng, q) for q in suite], DAY, materialize=True, post=post,
-        share_base=True,
-    )
+    base = [post(promql_eval(eng, q, DAY), i) for i, q in enumerate(suite)]
+    sharing = promql_eval_many([(eng, q) for q in suite], DAY, post=post)
     da = reduce(DataFrame.unionByName, base)
     db = reduce(DataFrame.unionByName, sharing)
     assert da.exceptAll(db).count() == 0
@@ -1024,7 +1020,7 @@ def test_eval_many_share_base_row_equality(spark):
     assert da.count() == db.count() and da.count() > 0
 
     # the materialized clone inherits the broadcast decision + bounds memo
-    clone = eng.materialized()
+    clone = eng.materialized({"click"})
     assert clone.__dict__["_series_broadcast_memo"] is eng.__dict__[
         "_series_broadcast_memo"
     ]
@@ -1049,38 +1045,81 @@ def test_eval_many_share_base_row_equality(spark):
 
     # single-reference engines are not materialized: a one-job batch keeps
     # its original engine plan (parquet-scan-backed)
-    solo = promql_eval_many(
-        [(eng, suite[0])], DAY, materialize=True, post=post, share_base=True
-    )
+    solo = promql_eval_many([(eng, suite[0])], DAY, post=post)
     assert reduce(DataFrame.unionByName, solo).count() == base[0].count()
 
 
-def test_eval_many_does_not_materialize_metricless_strings(spark, monkeypatch):
-    """share_base leaves an engine alone when its strings reference no
-    metric: the union of their metrics is the empty set, and
-    materialized(set()) would checkpoint the whole store for strings that
-    only read the evaluation grid."""
+def _spy_materialized(monkeypatch) -> list:
+    """Record the metrics of every MetricEngine.materialized() call."""
     from horaedb_spark.metric.engine import MetricEngine
-    from horaedb_spark.metric.promql import promql_eval_many
 
-    eng = _engine(spark, SF_DIR)
-    suite = ["vector(1)", "vector(time())"]
     calls = []
     orig = MetricEngine.materialized
 
-    def spy(self, metrics=None):
+    def spy(self, metrics):
         calls.append(metrics)
         return orig(self, metrics)
 
     monkeypatch.setattr(MetricEngine, "materialized", spy)
-    sharing = promql_eval_many(
-        [(eng, q) for q in suite], DAY, materialize=True, share_base=True
-    )
+    return calls
+
+
+def test_eval_many_does_not_materialize_metricless_strings(spark, monkeypatch):
+    """promql_eval_many leaves an engine alone when its strings reference
+    no metric: the union of their metrics is the empty set, and there is
+    no base to share for strings that only read the evaluation grid."""
+    from horaedb_spark.metric.promql import promql_eval_many
+
+    eng = _engine(spark, SF_DIR)
+    suite = ["vector(1)", "vector(time())"]
+    calls = _spy_materialized(monkeypatch)
+    sharing = promql_eval_many([(eng, q) for q in suite], DAY)
     assert calls == []
-    base = promql_eval_many([(eng, q) for q in suite], DAY, materialize=True)
+    base = [promql_eval(eng, q, DAY) for q in suite]
     for a, b in zip(base, sharing):
         assert a.count() == b.count() > 0
         assert a.exceptAll(b).count() == 0
+
+
+def test_eval_many_with_an_unparseable_string_materializes_nothing(
+    spark, monkeypatch
+):
+    """A batch holding a string that does not parse raises PromQLError on
+    it, without first checkpointing a base for its engine."""
+    from horaedb_spark.metric.promql import promql_eval_many
+
+    eng = _engine(spark, SF_DIR)
+    suite = ["sum(rate(click[1d]))", "this is not promql ]["]
+    calls = _spy_materialized(monkeypatch)
+    with pytest.raises(PromQLError):
+        promql_eval_many([(eng, q) for q in suite], DAY)
+    assert calls == []
+
+
+@pytest.mark.parametrize(
+    "fn,extra",
+    [
+        ("irate", ""), ("idelta", ""), ("delta", ""), ("deriv", ""),
+        ("changes", ""), ("resets", ""), ("stddev_over_time", ""),
+        ("stdvar_over_time", ""), ("present_over_time", ""),
+        ("last_over_time", ""), ("mad_over_time", ""),
+        ("predict_linear", ", 3600"), ("holt_winters", ", 0.5, 0.5"),
+        ("double_exponential_smoothing", ", 0.5, 0.5"),
+        ("quantile_over_time", "q"),
+    ],
+)
+def test_aligned_only_range_functions_reject_a_sliding_range(spark, eng, fn, extra):
+    """The range functions without a sliding kernel compile at range ==
+    step and raise a PromQLError naming the function at range = 2 x step."""
+    def query(rng: str) -> str:
+        if extra == "q":
+            return f"{fn}(0.9, click[{rng}])"
+        return f"{fn}(click[{rng}]{extra})"
+
+    out = promql_eval(eng, query("1d"), DAY)
+    assert out.columns == ["series_key", "ts_ms", "value"]
+    with pytest.raises(PromQLError, match=f"{fn} supports range == step only"):
+        promql_eval(eng, query("2d"), DAY)
 
 
 def test_materialized_logs_a_background_failure_once(spark, monkeypatch, caplog):
@@ -1201,11 +1240,11 @@ def test_materialized_never_sets_the_callers_session_conf(spark, monkeypatch):
 
 
 def test_referenced_metrics_walk_is_exhaustive():
-    """referenced_metrics() is the size guard for share_base: every metric
+    """referenced_metrics() is the size guard for a shared base: every metric
     a string reads MUST appear (a miss would filter that metric out of the
     checkpointed base and silently empty its rows), no-selector strings
-    return the empty set, and unparseable strings return None (pruning
-    disabled, never a wrong prune)."""
+    return the empty set, and unparseable strings return None (no shared
+    base, never a wrong prune)."""
     from horaedb_spark.metric.promql import referenced_metrics
 
     assert referenced_metrics("rate(click[1d])") == {"click"}
@@ -1223,14 +1262,14 @@ def test_referenced_metrics_walk_is_exhaustive():
 
 
 def test_materialized_bounded_base(spark, tmp_path, monkeypatch):
-    """materialized(metrics=...) (round 15, VERDICT r14 #2): the
+    """materialized(metrics) (round 15, VERDICT r14 #2): the
     checkpointed base is pre-filtered to the batch's metrics — rows equal
     the parent's metric_id-filtered rows, the literal metric_id predicate
     is pushed at the parquet scan (pruning survives; nothing prunes
     through a LogicalRDD afterwards), the evaluation grid is pinned to the
     PARENT's ts bounds so time()/vector() results cannot move when the
     base shrinks, and engines that already are materialized() clones are
-    not materialized again by the share_base path (their checkpointed base
+    not materialized again by promql_eval_many (their checkpointed base
     IS the shared base)."""
     from pyspark.sql import DataFrame
 
@@ -1251,7 +1290,9 @@ def test_materialized_bounded_base(spark, tmp_path, monkeypatch):
     assert "PushedFilters: [" in pushed, pushed
     assert "In(event_type" in pushed or "EqualTo(event_type" in pushed, pushed
 
-    clone = eng.materialized(metrics={"click"})
+    with pytest.raises(ValueError, match="metric names"):
+        eng.materialized(set())
+    clone = eng.materialized({"click"})
     # bounded: exactly the parent's rows for that metric, nothing else
     want = eng.data.filter(F.col("metric_id") == mid).count()
     assert clone.data.count() == want > 0
@@ -1272,7 +1313,6 @@ def test_materialized_bounded_base(spark, tmp_path, monkeypatch):
     # In predicate over the hashed names, pushed into the parquet scan
     import re
 
-    from horaedb_spark.metric.engine import MetricEngine
     from horaedb_spark.metric.store import MetricStore
 
     store = MetricStore(spark, str(tmp_path / "ms"), DAY)
@@ -1299,7 +1339,7 @@ def test_materialized_bounded_base(spark, tmp_path, monkeypatch):
                 return _orig(self, *args, **kwargs)
 
             m.setattr(type(seng.data), meth, spy_m)
-        sclone = seng.materialized(metrics={"cpu", "mem"})
+        sclone = seng.materialized({"cpu", "mem"})
     plans = [f._jdf.queryExecution().executedPlan().toString() for f in bounded]
     pushed_in = [
         p for p in plans
@@ -1309,20 +1349,11 @@ def test_materialized_bounded_base(spark, tmp_path, monkeypatch):
     assert sorted(r.value for r in sclone.data.collect()) == [0.0, 1.0]
 
     # an engine that already is a materialized() clone is served as-is by
-    # share_base: no second materialization, and the plans read the
+    # promql_eval_many: no second materialization, and the plans read the
     # clone's checkpoint, not the parquet scan
-    calls = []
-    orig = MetricEngine.materialized
-
-    def spy(self, metrics=None):
-        calls.append(metrics)
-        return orig(self, metrics)
-
-    monkeypatch.setattr(MetricEngine, "materialized", spy)
+    calls = _spy_materialized(monkeypatch)
     suite = [q, "sum(rate(click[1d]))"]
-    outs = promql_eval_many(
-        [(clone, s) for s in suite], DAY, materialize=True, share_base=True
-    )
+    outs = promql_eval_many([(clone, s) for s in suite], DAY)
     assert calls == []
     assert all(isinstance(o, DataFrame) and o.count() > 0 for o in outs)
     for s in suite:

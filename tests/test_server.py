@@ -995,7 +995,7 @@ def test_query_cache_concurrent_requests(spark, tmp_path):
                 f"http://127.0.0.1:{srv.port}{p}", timeout=120
             ).read()
 
-        with concurrent.futures.ThreadPoolExecutor(max_workers=8) as ex:
+        with concurrent.futures.ThreadPoolExecutor(8) as ex:
             got = list(ex.map(fetch, range(24)))
         by_path: dict = {}
         for p, body in got:

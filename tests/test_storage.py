@@ -547,6 +547,41 @@ def test_recluster_registers_outputs_in_one_delta(spark, tmp_path):
     assert sorted(map(tuple, t.scan(ScanRequest(ordered=False)).collect())) == expect
 
 
+def test_recluster_of_a_fully_deleted_segment_drops_its_inputs(spark, tmp_path):
+    """A segment whose rows are all deleted reclusters to nothing: no new
+    SST, and one manifest delta drops the data and tombstone inputs."""
+    import os
+
+    t = ColumnarTable(spark, str(tmp_path / "rc0"), kv_schema(), TWO_HOURS)
+    rows = [(i, i, i) for i in range(5)]
+    t.write(WriteRequest(
+        spark.createDataFrame(rows, "pk1 long, pk2 long, value long"),
+        TimeRange(0, 100),
+    ))
+    t.delete("pk1 >= 0")
+    inputs = t.manifest.all_ssts()
+    assert sorted(s.tombstone for s in inputs) == [False, True]
+    mutations = t.manifest.mutations
+
+    assert t.recluster("pk1", cluster_by=["value"], cluster_slices=2) == []
+    assert t.manifest.all_ssts() == []
+    assert t.manifest.mutations == mutations + 1
+    assert not any(os.path.exists(s.path) for s in inputs)
+    assert t.scan(ScanRequest(ordered=False)).count() == 0
+
+
+def test_zorder_bulk_ingest_on_an_all_null_cluster_column(spark, tmp_path):
+    """A cluster column with no non-NULL value is constant to the z-order:
+    every row lands, in one slice."""
+    t = ColumnarTable(spark, str(tmp_path / "znull"), kv_schema(), TWO_HOURS)
+    rows = [(i, i, None) for i in range(20)]
+    df = spark.createDataFrame(rows, "pk1 long, pk2 long, value long")
+    ssts = t.bulk_ingest(df, "pk1", cluster_by=["value"], cluster_slices=2)
+    assert sum(s.num_rows for s in ssts) == 20
+    got = sorted(map(tuple, t.scan(ScanRequest(ordered=False)).collect()))
+    assert got == rows
+
+
 def test_recluster_crash_window_scan_stays_correct(spark, tmp_path):
     """Crash-safety of the manifest-swap-before-delete order: in the window
     where the clustered rewrite SSTs are registered but the inputs are not
