@@ -659,74 +659,98 @@ def histogram_quantile(
     )
 
 
+def _step_ceil(c: Column, step_ms: int) -> Column:
+    """The first step-aligned instant at or after ``c`` (floor-based, so
+    negative timestamps align like positive ones)."""
+    return c + F.pmod(-c, F.lit(step_ms).cast("long"))
+
+
+def _step_floor(c: Column, step_ms: int) -> Column:
+    """The last step-aligned instant at or before ``c``."""
+    return c - F.pmod(c, F.lit(step_ms).cast("long"))
+
+
+def _explode_steps(
+    df: DataFrame,
+    first: Column,
+    last: Column,
+    step_ms: int,
+    keys: list[str],
+    cols: list,
+) -> DataFrame:
+    """One row ``(*keys, step_ms, *cols)`` per aligned step in ``[first,
+    last]`` for each row of ``df`` (``first`` aligned, ``last`` any
+    instant). Empty ranges are dropped first: ``sequence`` raises on
+    ``start > stop``."""
+    last = _step_floor(last, step_ms)
+    return df.filter(first <= last).select(
+        *keys,
+        F.explode(
+            F.sequence(first, last, F.lit(step_ms).cast("long"))
+        ).alias("step_ms"),
+        *cols,
+    )
+
+
 def instant_vector(
     df: DataFrame,
     series_cols: list[str],
     step_ms: int,
     lookback_ms: int,
     with_sample_ts: bool = False,
+    start_ms: int | None = None,
+    end_ms: int | None = None,
 ) -> DataFrame:
-    """PromQL instant-vector step evaluation (D8): at every aligned step t in
-    the data's range, each series reports its latest sample with
-    ``t - lookback < sample_ts <= t`` (the staleness rule). Series with no
-    sample in the window emit nothing at that step.
+    """PromQL instant-vector step evaluation (D8): at every aligned step t,
+    each series reports its latest sample with ``t - lookback < sample_ts
+    <= t`` (the staleness rule). Series with no sample in the window emit
+    nothing at that step. The grid ends at the frame's last sample.
 
-    Implemented as the union+window as-of pattern: step anchors union with
-    samples, one window per series carries the last sample forward — a single
-    shuffle on the series key, no per-sample explode, no range join. At scale
-    anchors are |series| x |steps| rows, tiny next to the sample stream."""
-    bounds = df.agg(F.min("ts_ms").alias("__mn__"), F.max("ts_ms").alias("__mx__"))
-    series = df.select(*series_cols).distinct()
-    anchors = (
-        series.crossJoin(F.broadcast(bounds))
-        .select(
-            *series_cols,
-            F.explode(
-                F.sequence(
-                    F.expr(f"((__mn__ + {step_ms - 1}) div {step_ms}) * {step_ms}"),
-                    F.expr(f"(__mx__ div {step_ms}) * {step_ms}"),
-                    F.lit(step_ms).cast("long"),
-                )
-            ).alias("step_ms"),
-        )
+    ``start_ms``/``end_ms`` are the evaluation window (aligned steps,
+    inclusive): only samples in ``(start - lookback, end]`` are read and
+    only steps in ``[start, end]`` are emitted. Absent, every step of the
+    frame's range is.
+
+    One pass: one window per series ordered by time gives each sample its
+    successor ``next_ts``, and the sample explodes into exactly the steps
+    it answers, ``ts <= t < min(next_ts, ts + lookback)`` — one exploded row
+    per output row whatever ``lookback / step`` is. A null-valued latest
+    sample reports the last non-null value before it (the running
+    ``last(value, ignorenulls)``) with its own ``sample_ts``; in a bounded
+    call that carry sees only the window's samples. The grid's end is one
+    broadcast ``max(ts_ms)`` over the frame (from ``start`` on, which gives
+    the same answer for every step in the window)."""
+    ts = F.col("ts_ms")
+    edge = df
+    if start_ms is not None:
+        df = df.filter(ts > start_ms - lookback_ms)
+        edge = edge.filter(ts >= start_ms)
+    if end_ms is not None:
+        df = df.filter(ts <= end_ms)
+    edge = edge.agg(F.max("ts_ms").alias("__edge__")).filter(
+        F.col("__edge__").isNotNull()
     )
-    a = anchors.select(
-        *series_cols,
-        F.col("step_ms").alias("ts_ms"),
-        F.lit(None).cast("double").alias("value"),
-        F.lit(1).alias("__anchor__"),
-        "step_ms",
-    )
-    s = df.select(
+    w = Window.partitionBy(*series_cols).orderBy("ts_ms")
+    carried = df.select(
         *series_cols,
         "ts_ms",
-        "value",
-        F.lit(0).alias("__anchor__"),
-        F.lit(None).cast("long").alias("step_ms"),
+        F.lead("ts_ms").over(w).alias("__next__"),
+        F.last("value", ignorenulls=True)
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        .alias("value"),
+    ).crossJoin(F.broadcast(edge))
+    first = _step_ceil(ts, step_ms)
+    # least() skips nulls: the series' last sample has no successor
+    last = F.least(
+        ts + F.lit(lookback_ms - 1), F.col("__next__") - 1, F.col("__edge__")
     )
-    w = (
-        Window.partitionBy(*series_cols)
-        .orderBy("ts_ms", "__anchor__")  # a sample at t sorts before t's anchor
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    u = (
-        a.unionByName(s)
-        .withColumn("ivalue", F.last("value", ignorenulls=True).over(w))
-        .withColumn(
-            "sample_ts",
-            F.last(
-                F.when(F.col("__anchor__") == 0, F.col("ts_ms")), ignorenulls=True
-            ).over(w),
-        )
-    )
-    extra = ["sample_ts"] if with_sample_ts else []
-    return (
-        u.filter(
-            (F.col("__anchor__") == 1)
-            & F.col("sample_ts").isNotNull()
-            & (F.col("sample_ts") > F.col("step_ms") - lookback_ms)
-        )
-        .select(*series_cols, "step_ms", F.col("ivalue").alias("value"), *extra)
+    if start_ms is not None:
+        first = F.greatest(first, F.lit(start_ms).cast("long"))
+    if end_ms is not None:
+        last = F.least(last, F.lit(end_ms).cast("long"))
+    extra = [ts.alias("sample_ts")] if with_sample_ts else []
+    return _explode_steps(
+        carried, first, last, step_ms, series_cols, ["value", *extra]
     )
 
 
@@ -736,65 +760,34 @@ def fill_linear(df: DataFrame, series_cols: list[str], step_ms: int) -> DataFram
     sample gets ``prev + (next-prev) * (t-t_prev)/(t_next-t_prev)`` from its
     neighboring samples. Steps outside the sampled interior emit nothing.
 
-    Same union+window shape as :func:`instant_vector` — one shuffle on the
-    series key, two window passes (backward carry + forward carry), no range
-    join, no explode."""
-    bounds = df.agg(F.min("ts_ms").alias("__mn__"), F.max("ts_ms").alias("__mx__"))
-    series = df.select(*series_cols).distinct()
-    anchors = series.crossJoin(F.broadcast(bounds)).select(
+    Same one-pass shape as :func:`instant_vector`: one window per series
+    pairs each sample with its successor, and the pair explodes into the
+    steps ``ts <= t < next_ts`` it brackets. Null values take the last
+    non-null value at or before the pair's start and the first non-null
+    value after it."""
+    w = Window.partitionBy(*series_cols).orderBy("ts_ms")
+    pairs = df.select(
         *series_cols,
-        F.explode(
-            F.sequence(
-                F.expr(f"((__mn__ + {step_ms - 1}) div {step_ms}) * {step_ms}"),
-                F.expr(f"(__mx__ div {step_ms}) * {step_ms}"),
-                F.lit(step_ms).cast("long"),
-            )
-        ).alias("step_ms"),
-    )
-    a = anchors.select(
-        *series_cols,
-        F.col("step_ms").alias("ts_ms"),
-        F.lit(None).cast("double").alias("value"),
-        F.lit(1).alias("__anchor__"),
-        "step_ms",
-    )
-    s = df.select(
-        *series_cols,
-        "ts_ms",
-        "value",
-        F.lit(0).alias("__anchor__"),
-        F.lit(None).cast("long").alias("step_ms"),
-    )
-    back = (
-        Window.partitionBy(*series_cols)
-        .orderBy("ts_ms", "__anchor__")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    fwd = (
-        Window.partitionBy(*series_cols)
-        .orderBy("ts_ms", "__anchor__")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    sample_ts = F.when(F.col("__anchor__") == 0, F.col("ts_ms"))
-    u = (
-        a.unionByName(s)
-        .withColumn("prev_val", F.last("value", ignorenulls=True).over(back))
-        .withColumn("prev_ts", F.last(sample_ts, ignorenulls=True).over(back))
-        .withColumn("next_val", F.first("value", ignorenulls=True).over(fwd))
-        .withColumn("next_ts", F.first(sample_ts, ignorenulls=True).over(fwd))
+        F.col("ts_ms").alias("prev_ts"),
+        F.lead("ts_ms").over(w).alias("next_ts"),
+        F.last("value", ignorenulls=True)
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        .alias("prev_val"),
+        F.first("value", ignorenulls=True)
+        .over(w.rowsBetween(1, Window.unboundedFollowing))
+        .alias("next_val"),
     )
     interp = F.col("prev_val") + (F.col("next_val") - F.col("prev_val")) * (
         (F.col("step_ms") - F.col("prev_ts")) / (F.col("next_ts") - F.col("prev_ts"))
     )
-    return (
-        u.filter(
-            (F.col("__anchor__") == 1)
-            & F.col("prev_ts").isNotNull()
-            & F.col("next_ts").isNotNull()
-            & (F.col("next_ts") != F.col("prev_ts"))
-        )
-        .select(*series_cols, "step_ms", interp.alias("value"))
-    )
+    return _explode_steps(
+        pairs,
+        _step_ceil(F.col("prev_ts"), step_ms),
+        F.col("next_ts") - 1,
+        step_ms,
+        series_cols,
+        ["prev_ts", "next_ts", "prev_val", "next_val"],
+    ).select(*series_cols, "step_ms", interp.alias("value"))
 
 
 def clamp(

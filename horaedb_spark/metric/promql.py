@@ -713,6 +713,9 @@ class PromQLCompiler:
         # defaults it to one step (documented divergence — a 5m lookback on
         # a 1d grid over sparse data would yield an empty vector).
         self.lookback_ms = lookback_ms if lookback_ms is not None else step_ms
+        # Prometheus has one lookback per query: subquery bodies inherit an
+        # explicit one, and otherwise default to their own step
+        self._sub_lookback_ms = lookback_ms
         # explicit evaluation range for time()/vector()/absent*() — the
         # HTTP query_range start/end. When absent, derived once from the
         # engine's data range (a two-value aggregate, cached).
@@ -790,6 +793,7 @@ class PromQLCompiler:
                 node,
                 self.step_ms,
                 self.lookback_ms,
+                self._sub_lookback_ms,
                 self.start_ms,
                 self.end_ms,
             )
@@ -839,7 +843,11 @@ class PromQLCompiler:
             # aligned step, each series reports its latest sample within
             # the staleness lookback (functions/promql.instant_vector)
             out = P.instant_vector(
-                self._samples(node), ["series_key"], self.step_ms, self.lookback_ms
+                self._samples(node),
+                ["series_key"],
+                self.step_ms,
+                self.lookback_ms,
+                **self._window(node.at_ms),
             )
             return self._apply_at(
                 out.select(
@@ -891,7 +899,9 @@ class PromQLCompiler:
             # step 0 = the parser's no-step sentinel ([range:]) — default
             # to this compiler's evaluation step, as Prometheus does
             sub_step = node.step_ms or self.step_ms
-            inner = PromQLCompiler(self.engine, sub_step)._eval(node.expr)
+            inner = PromQLCompiler(
+                self.engine, sub_step, self._sub_lookback_ms
+            )._eval(node.expr)
             if not isinstance(inner, DataFrame):
                 raise PromQLError("subquery body must be a vector")
             return (
@@ -907,12 +917,27 @@ class PromQLCompiler:
         instant; on the step grid that is the one matching evaluation)."""
         if at_ms is None:
             return df
+        return df.filter(F.col("ts_ms") == self._at_step(at_ms))
+
+    def _at_step(self, at_ms: int | str) -> int:
+        """The aligned step an ``@`` pin evaluates at."""
         if at_ms == "start":
             at_ms = self._bounds()[0]
         elif at_ms == "end":
             at_ms = self._bounds()[1]
-        aligned = at_ms - at_ms % self.step_ms
-        return df.filter(F.col("ts_ms") == aligned)
+        return at_ms - at_ms % self.step_ms
+
+    def _window(self, at_ms: int | str | None) -> dict:
+        """The instant kernel's evaluation window, as its keyword arguments:
+        the pinned step under ``@``, else the compile's ``[start, end]``
+        steps when both are given, else none (the frame's whole range)."""
+        if at_ms is not None:
+            t = self._at_step(at_ms)
+            return {"start_ms": t, "end_ms": t}
+        if self.start_ms is not None and self.end_ms is not None:
+            lo, hi = self._bounds()
+            return {"start_ms": lo, "end_ms": hi}
+        return {}
 
     # functions evaluable with ZERO arguments (Prometheus defaults the
     # missing vector to vector(time()) for the date functions)
@@ -1096,6 +1121,7 @@ class PromQLCompiler:
                     self.step_ms,
                     self.lookback_ms,
                     with_sample_ts=True,
+                    **self._window(arg.at_ms),
                 )
                 return self._apply_at(
                     out.select(
@@ -1224,6 +1250,7 @@ class PromQLCompiler:
                 ["series_key", "field_id"],
                 self.step_ms,
                 self.lookback_ms,
+                **self._window(sel.at_ms),
             )
             sum_id = F.xxhash64(F.lit("sum"))
             cnt_id = F.xxhash64(F.lit("count"))

@@ -664,8 +664,9 @@ def promql_histogram_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def promql_instant_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Instant-vector step evaluation with staleness (D8): at each 7-day
     aligned step, each 'click' series reports its latest sample within a
-    3-day lookback — PromQL's evaluation model. Union+window as-of (one
-    shuffle on the series key); the oracle is DuckDB's ASOF JOIN."""
+    3-day lookback — PromQL's evaluation model. One window per series (one
+    shuffle on the series key), each sample exploded into the steps it
+    answers; the oracle is a DuckDB range join ranked per step."""
     eng = _engine(spark, sf_dir)
     sel = _series_with_labels(eng.select_series("click"))
     out = promql.instant_vector(
@@ -944,8 +945,9 @@ def metric_series_list(spark: SparkSession, sf_dir: str) -> DataFrame:
 def promql_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear gap-fill at 7-day steps over sparse 'signup' series (the
     Timescale `interpolate` / Influx `fill(linear)` operator): each interior
-    step interpolates between its neighboring samples. Union+window form —
-    one shuffle, no range join."""
+    step interpolates between its neighboring samples. One window per series
+    (one shuffle), each sample pair exploded into the steps it brackets; no
+    range join."""
     eng = _engine(spark, sf_dir)
     sel = _series_with_labels(eng.select_series("signup"))
     out = promql.fill_linear(

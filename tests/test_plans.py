@@ -106,9 +106,10 @@ def test_ivf_centroid_assignment_is_map_only(spark):
 
 
 def test_instant_vector_single_series_shuffle(spark):
-    """The union+window as-of form must not range-join or explode samples:
-    exactly one window over the series key, anchors built from a broadcast
-    of the (1-row) bounds aggregate."""
+    """The one-pass form: exactly one window over the series key, each
+    sample exploded into the steps it answers — no union with anchors, no
+    series distinct, no range join; the grid's end is a broadcast one-row
+    aggregate."""
     from horaedb_spark.functions.promql import instant_vector
 
     df = spark.createDataFrame(
@@ -116,10 +117,49 @@ def test_instant_vector_single_series_shuffle(spark):
         "sid string, ts_ms long, value double",
     )
     plan = plan_of(instant_vector(df, ["sid"], 500, 300))
-    assert "CartesianProduct" not in plan
-    assert plan.count("Window") >= 1
-    # no join of samples against anchors — the as-of is window-carried
-    assert "SortMergeJoin" not in plan, plan[:3000]
+    windows = re.findall(r"\bWindow \[.*", plan)
+    assert len(windows) == 1 and "[sid#" in windows[0], plan[:3000]
+    for op in ("Union", "CartesianProduct", "SortMergeJoin"):
+        assert op not in plan, (op, plan[:3000])
+    # no series distinct: the only aggregate is the grid-end max
+    aggs = re.findall(r"HashAggregate\(keys=\[([^\]]*)\]", plan)
+    assert aggs and all(keys == "" for keys in aggs), plan[:3000]
+    assert "BroadcastNestedLoopJoin" in plan, plan[:3000]
+
+
+def test_bounded_selector_pushes_time_range_to_scan(spark, tmp_path):
+    """A selector compiled over [start, end] reads (start - lookback, end]
+    and takes the grid's end over ts >= start: both ranges reach the
+    store's parquet scans as pushed filters."""
+    from horaedb_spark.metric.promql import PromQLCompiler
+    from horaedb_spark.metric.store import MetricStore
+
+    store = MetricStore(spark, str(tmp_path / "ms"), 3_600_000)
+    store.ingest(spark.createDataFrame(
+        [("cpu", {"host": h}, t * 1000, float(t), t)
+         for h in "ab" for t in range(0, 600, 10)],
+        "name string, labels map<string,string>, ts_ms long, value double, "
+        "seq long",
+    ))
+    df = PromQLCompiler(
+        store.engine(), 60_000, 120_000, start_ms=300_000, end_ms=420_000
+    ).compile("cpu")
+    key = "spark.sql.maxMetadataStringLength"  # untruncated scan filters
+    old = spark.conf.get(key)
+    spark.conf.set(key, "10000")
+    try:
+        plan = plan_of(df)
+    finally:
+        spark.conf.set(key, old)
+    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
+    assert any(
+        "GreaterThan(ts_ms,180000)" in f and "LessThanOrEqual(ts_ms,420000)" in f
+        for f in pushed
+    ), pushed
+    assert any("GreaterThanOrEqual(ts_ms,300000)" in f for f in pushed), pushed
+    assert sorted((r.series_key, r.ts_ms, r.value) for r in df.collect()) == [
+        (f"host={h}", t, t / 1000) for h in "ab" for t in (300_000, 360_000, 420_000)
+    ]
 
 
 def test_ivf_cell_partitioning_prunes_scan(spark, tmp_path):

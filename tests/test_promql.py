@@ -153,10 +153,12 @@ def test_fill_linear_golden(spark):
 
 
 def test_instant_and_fill_randomized_model_check(spark):
-    """Model check: 40 random series (fixed seed), one Spark call per
-    operator, expectations computed by a direct Python model — catches
-    boundary cases the goldens don't (steps at samples, gaps > lookback,
-    single-sample series, negative-ish alignment)."""
+    """Model check: 40 random series (fixed seed, some null values), one
+    Spark call per operator and evaluation window, expectations computed by
+    a direct Python model — catches boundary cases the goldens don't (steps
+    at samples, gaps > lookback, single-sample series, null carries, and
+    windows that start before the first sample, end past the frame's last
+    sample, or hold one step)."""
     import random
 
     from horaedb_spark.functions.promql import fill_linear, instant_vector
@@ -168,42 +170,85 @@ def test_instant_and_fill_randomized_model_check(spark):
         n = rng.randint(1, 12)
         tss = sorted(rng.sample(range(0, 1500), n))
         for t in tss:
-            rows.append((f"s{s}", t, round(rng.uniform(-50, 50), 3)))
+            v = None if rng.random() < 0.15 else round(rng.uniform(-50, 50), 3)
+            rows.append((f"s{s}", t, v))
+    # inside the lookback of step 1500, which lies past the frame's last
+    # sample: the grid's end, not the lookback, must drop it
+    rows.append(("edge", 1460, 1.0))
     df = spark.createDataFrame(rows, "sid string, ts_ms long, value double")
 
     by_series = {}
     for sid, t, v in rows:
         by_series.setdefault(sid, []).append((t, v))
 
-    # python model over the same global step grid the operators use
+    # python model over the frame's global step grid
     mn = min(t for _, t, _ in rows)
     mx = max(t for _, t, _ in rows)
-    steps = range(-(-mn // STEP) * STEP, (mx // STEP) * STEP + 1, STEP)
+    grid = range(-(-mn // STEP) * STEP, (mx // STEP) * STEP + 1, STEP)
+    assert grid[-1] < 1500  # the edge case above is live
 
-    exp_instant, exp_fill = {}, {}
-    for sid, pts in by_series.items():
-        for t in steps:
-            prev = [(ts, v) for ts, v in pts if ts <= t]
-            if prev:
-                pts_, pv = prev[-1]
-                if pts_ > t - LOOKBACK:
-                    exp_instant[(sid, t)] = pv
-            after = [(ts, v) for ts, v in pts if ts > t]
-            if prev and after:
-                (pt, pv), (nt, nv) = prev[-1], after[0]
-                exp_fill[(sid, t)] = pv + (nv - pv) * ((t - pt) / (nt - pt))
-    got_instant = {
+    def non_null(pts):
+        return [v for _, v in pts if v is not None]
+
+    def model_instant(lo=None, hi=None):
+        """(sid, t) -> (value, sample_ts); a bounded call reads only the
+        samples in (lo - lookback, hi] and emits only steps in [lo, hi]."""
+        out = {}
+        for sid, pts in by_series.items():
+            if lo is not None:
+                pts = [(t, v) for t, v in pts if lo - LOOKBACK < t <= hi]
+            for t in grid:
+                if lo is not None and not lo <= t <= hi:
+                    continue
+                prev = [(ts, v) for ts, v in pts if ts <= t]
+                if prev and prev[-1][0] > t - LOOKBACK:
+                    carried = non_null(prev)
+                    out[(sid, t)] = (carried[-1] if carried else None, prev[-1][0])
+        return out
+
+    # unbounded; a window starting before the first sample; one ending past
+    # the frame's last sample; one-step windows inside and past the grid; an
+    # interior window (its first steps lose pre-window null carries)
+    windows = [(None, None), (-300, 400), (1000, 1800), (700, 700),
+               (1500, 1500), (300, 900)]
+    for lo, hi in windows:
+        bounds = {} if lo is None else {"start_ms": lo, "end_ms": hi}
+        got = {
+            (r["sid"], r["step_ms"]): (r["value"], r["sample_ts"])
+            for r in instant_vector(
+                df, ["sid"], STEP, LOOKBACK, with_sample_ts=True, **bounds
+            ).collect()
+        }
+        assert got == model_instant(lo, hi), (lo, hi)
+    plain = {
         (r["sid"], r["step_ms"]): r["value"]
         for r in instant_vector(df, ["sid"], STEP, LOOKBACK).collect()
     }
-    assert got_instant == exp_instant
+    assert plain == {k: v for k, (v, _) in model_instant().items()}
+
+    exp_fill = {}
+    for sid, pts in by_series.items():
+        for t in grid:
+            prev = [(ts, v) for ts, v in pts if ts <= t]
+            after = [(ts, v) for ts, v in pts if ts > t]
+            if prev and after:
+                (pt, _), (nt, _) = prev[-1], after[0]
+                pv, nv = non_null(prev), non_null(after)
+                exp_fill[(sid, t)] = (
+                    pv[-1] + (nv[0] - pv[-1]) * ((t - pt) / (nt - pt))
+                    if pv and nv
+                    else None
+                )
     got_fill = {
         (r["sid"], r["step_ms"]): r["value"]
         for r in fill_linear(df, ["sid"], STEP).collect()
     }
     assert set(got_fill) == set(exp_fill)
-    for k in exp_fill:
-        assert abs(got_fill[k] - exp_fill[k]) < 1e-9, (k, got_fill[k], exp_fill[k])
+    for k, want in exp_fill.items():
+        if want is None:
+            assert got_fill[k] is None, k
+        else:
+            assert abs(got_fill[k] - want) < 1e-9, (k, got_fill[k], want)
 
 
 def test_transition_counts_golden(spark):

@@ -1360,3 +1360,69 @@ def test_materialized_bounded_base(spark, tmp_path, monkeypatch):
         p = promql_eval(clone, s, DAY)._jdf.queryExecution()
         p = p.executedPlan().toString()
         assert "Scan ExistingRDD" in p and "Scan parquet" not in p, p
+
+
+def _window_engine(spark):
+    """Three series per metric at irregular cadences (offset starts, gaps
+    wider than the lookback), with a multi-field family for
+    histogram_avg."""
+    from horaedb_spark.metric.engine import MetricEngine
+    from horaedb_spark.metric.ingest import group_metric_families
+
+    rows = []
+    for i, h in enumerate("abc"):
+        for t in range(i * 300, 20_000, 700 + 900 * i):
+            for name, v in (("lat_sum", t % 97), ("lat_count", 1 + t % 5),
+                            ("g", t % 13)):
+                rows.append((name, {"h": h}, t, float(v), len(rows)))
+    return MetricEngine(group_metric_families(spark.createDataFrame(
+        rows,
+        "name string, labels map<string,string>, ts_ms long, value double, "
+        "seq long",
+    )))
+
+
+def test_bounded_compile_equals_unbounded_filtered(spark):
+    """A compile given start/end evaluates its instant selectors over that
+    window only, and returns exactly the unbounded compile's rows inside it
+    — also past the data's last sample, where the grid ends."""
+    eng = _window_engine(spark)
+    queries = ["g", "timestamp(g)", "histogram_avg(lat)", "g @ 9",
+               "sum by (h) (g offset 1500ms)"]
+    for q in queries:
+        full = _rows(PromQLCompiler(eng, 1000, 2500).compile(q))
+        assert full, q
+        for lo, hi in [(3000, 9000), (15_000, 25_000)]:
+            bounded = _rows(
+                PromQLCompiler(eng, 1000, 2500, start_ms=lo, end_ms=hi)
+                .compile(q)
+            )
+            want = [r for r in full if lo <= r[1] <= hi]
+            if "@" not in q:  # a pin evaluates at its own step
+                assert bounded == want, (q, lo, hi)
+            else:
+                assert [r for r in bounded if lo <= r[1] <= hi] == want, (q, lo, hi)
+
+
+def test_subquery_inherits_explicit_lookback(spark):
+    """Prometheus has one lookback per query: a 5m lookback given to the
+    compiler also holds inside a [30m:1m] subquery, so a series sampled
+    every 3m answers every inner 1m step. Without an explicit lookback the
+    body keeps its own one-step default and answers one step in three."""
+    from horaedb_spark.metric.engine import MetricEngine
+
+    step, m = 1_800_000, 60_000
+    rows = [("x", {"h": "a"}, t, 1.0, t) for t in range(0, 4 * step, 3 * m)]
+    eng = MetricEngine(spark.createDataFrame(
+        rows,
+        "name string, labels map<string,string>, ts_ms long, value double, "
+        "seq long",
+    ))
+    q = "count_over_time(x[30m:1m])"
+    five = {r.ts_ms: r.value
+            for r in PromQLCompiler(eng, step, 5 * m).compile(q).collect()}
+    own = {r.ts_ms: r.value for r in PromQLCompiler(eng, step).compile(q).collect()}
+    # the windows the data covers whole: every inner step is within 5m of
+    # a 3m-cadence sample
+    assert [five[t] for t in (0, step, 2 * step)] == [30.0] * 3, five
+    assert [own[t] for t in (0, step, 2 * step)] == [10.0] * 3, own
