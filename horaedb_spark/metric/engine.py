@@ -101,6 +101,21 @@ def _parse_byte_conf(value: str) -> int:
         return 10 << 20
 
 
+def partitions_for(df: DataFrame) -> int:
+    """Partitions for a materialized copy of ``df``, from Catalyst's size
+    estimate (a plan-stats lookup, no job): ~32 MB of source bytes per
+    partition (~100-250 MB in memory), clamped to
+    [1, spark.sql.shuffle.partitions]. A fixed conf-sized count would hand
+    every tiny per-query job conf-many near-empty tasks, while the conf
+    itself is the deployment's parallelism ceiling at scale."""
+    try:
+        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        est = 1 << 60
+    conf_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    return max(1, min(conf_parts, est // (32 << 20) + 1))
+
+
 class MetricEngine:
     """Query layer over a samples frame (name, labels, ts_ms, value, seq).
 
@@ -139,10 +154,11 @@ class MetricEngine:
             )
         )
         # The memo dict may be SHARED across engines over the same base
-        # (MetricStore hands every engine() the store's dict and clears it
-        # on ingest) so a per-query engine() loop pays the optimizer pass
-        # once, not per query. Keyed by the threshold: a decision made
-        # under one session threshold must not answer under another.
+        # (MetricStore hands every engine() its catalog snapshot's dict,
+        # replaced together with the snapshot) so a per-query engine() loop
+        # pays the optimizer pass once, not per query. Keyed by the
+        # threshold: a decision made under one session threshold must not
+        # answer under another.
         memo = self.__dict__.setdefault("_series_broadcast_memo", {})
         hint = memo.get(thr)
         if hint is None:
@@ -278,22 +294,10 @@ class MetricEngine:
         side = series_ck.select("tsid", "series_key")
         if broadcast:
             side = F.broadcast(side)
-        # Partition count is derived from the INPUT's size estimate
-        # (~32 MB of source bytes per partition, i.e. ~100-250 MB
-        # in-memory), clamped to [1, spark.sql.shuffle.partitions]: AQE is
-        # off for this one frame (below), so it cannot coalesce for us, and
-        # a fixed conf-sized count hands every tiny per-string job
-        # conf-many near-empty tasks while the conf itself is the
-        # deployment's parallelism ceiling at scale.
+        # Partition count from the INPUT's size estimate: AQE is off for
+        # this one frame (below), so it cannot coalesce for us.
         spark = data.sparkSession
-        try:
-            est = int(
-                est_src._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            est = 1 << 60
-        conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        n_parts = max(1, min(conf_parts, est // (32 << 20) + 1))
+        n_parts = partitions_for(est_src)
         # the checkpoint only carries the repartition's hashpartitioning
         # into its LogicalRDD when the plan is NOT wrapped in
         # AdaptiveSparkPlanExec (AQE's output partitioning is invisible to

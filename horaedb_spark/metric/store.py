@@ -31,7 +31,7 @@ from horaedb_spark.core.schema import StorageSchema, UpdateMode
 from horaedb_spark.core.timeutil import TimeRange
 from horaedb_spark.functions.promql import dedup_samples
 from horaedb_spark.metric import model
-from horaedb_spark.metric.engine import MetricEngine
+from horaedb_spark.metric.engine import MetricEngine, partitions_for
 from horaedb_spark.storage.table import ColumnarTable, ScanRequest, WriteRequest
 
 CATALOG_SEGMENT = 1 << 60  # catalogs are not time-partitioned: one segment
@@ -91,6 +91,27 @@ def _default_field_id(spark: SparkSession) -> int:
 
 
 _DEFAULT_FID: int | None = None
+
+
+class _CatalogSnapshot:
+    """The merged metrics, series and index catalogs at one catalog
+    ``version`` (their manifests' ``mutations``). Each frame is the
+    merge-on-read scan coalesced to ``partitions_for`` its size and
+    persisted: the first query that reads it fills it, and later queries
+    read the cached rows instead of re-running the dedup window."""
+
+    def __init__(self, version: tuple, metrics: DataFrame, series: DataFrame,
+                 index: DataFrame):
+        self.version = version
+        self.metrics, self.series, self.index = metrics, series, index
+        # the engines' series-join broadcast decision (engine.py), made
+        # against these frames' stats and so replaced together with them
+        self.series_broadcast_memo: dict = {}
+
+    def release(self) -> None:
+        """Unpersist the frames (a newer snapshot replaces this one)."""
+        for df in (self.metrics, self.series, self.index):
+            df.unpersist()
 
 
 class MetricStore:
@@ -179,9 +200,10 @@ class MetricStore:
                 "MetricStore.migrate_legacy(spark, root, segment_duration_ms) "
                 "once — a metadata-only migration, no SST is rewritten"
             )
-        # series-label-join broadcast decision, shared by all engines over
-        # this store (see engine()); cleared when ingest() grows the series
-        self._series_bcast_memo: dict = {}
+        # The catalogs every engine() serves (see _catalogs()), rebuilt
+        # under the lock when the catalogs' manifests have moved
+        self._snapshot: _CatalogSnapshot | None = None
+        self._snapshot_lock = threading.Lock()
         # The catalog keys this handle read back (see ingest()):
         # ({(metric_id, tsid)}, {(metric_id, field_id, field_type)}), valid
         # only while _catalog_identity() still equals _known_at and reset to
@@ -326,10 +348,6 @@ class MetricStore:
             )
         finally:
             keyed.unpersist()
-        if stats["new_series"] != 0:
-            # the series table grew: engines must re-decide the label-join
-            # broadcast against fresh plan stats (memo shared via engine())
-            self._series_bcast_memo.clear()
         log.debug(
             "MetricStore.ingest %s: %s batch keys, %s new, catalogs %s, key set %s",
             self.root, stats["batch_keys"], stats["new_keys"], stats["catalogs"],
@@ -514,15 +532,19 @@ class MetricStore:
         granularity as manifest SST pruning — SSTs never span segments),
         and aggregations whose keys include ``tsid`` run exchange-free.
         The first engine() after an ingest triggers an incremental mirror
-        refresh (only the touched partitions rewrite)."""
+        refresh (only the touched partitions rewrite).
+
+        ``metrics``, ``series`` and ``index`` come from the store's catalog
+        snapshot (``_catalogs()``): one persisted copy of each merged
+        catalog per catalog version, shared by every engine over this
+        handle, so queries stop re-running the catalogs' dedup window. Any
+        catalog write, compaction, delete, restore or manifest re-sync
+        moves the version, and the next engine() builds a new snapshot.
+        An engine's catalog rows are frozen when it is created, as its data
+        scan's SST list is."""
         eng = MetricEngine.__new__(MetricEngine)
         eng.samples = None
         eng._flat = None
-        # every engine over this store shares the store's broadcast-decision
-        # memo: a per-query engine() loop (dashboards, rule evaluators) pays
-        # the series-size optimizer pass once, not per query; ingest()
-        # clears it
-        eng._series_broadcast_memo = self._series_bcast_memo
         # Live serving-version source for response caches (server.py
         # _serving_version): a tuple of the backing tables' manifest
         # mutation counters. Any ingest bumps at least one, so a cache
@@ -543,10 +565,6 @@ class MetricStore:
             self.index.manifest.mutations,
             self.data.manifest.durable_token(),
         )
-        eng.metrics = self.metrics.scan(ScanRequest(ordered=False))
-        eng.series = self.series.scan(ScanRequest(ordered=False))
-        eng.index = self.index.scan(ScanRequest(ordered=False))
-        eng.tags = eng.index.select("metric_id", "tag_key", "tag_value").distinct()
         if from_mirror is None:
             from_mirror = self.data.bucket_spec is not None
         if from_mirror:
@@ -575,4 +593,49 @@ class MetricStore:
             eng.data = self.data.scan(
                 ScanRequest(time_range or TimeRange.all(), ordered=False)
             )
+        # The catalogs are taken AFTER the data view: ingest writes a
+        # batch's series rows before its data, so every tsid the data view
+        # holds is in the snapshot (taken first, it could miss the series
+        # of a batch that landed in between, which then join to a null
+        # series_key).
+        snap = self._catalogs()
+        eng.metrics, eng.series, eng.index = snap.metrics, snap.series, snap.index
+        eng.tags = eng.index.select("metric_id", "tag_key", "tag_value").distinct()
+        eng._series_broadcast_memo = snap.series_broadcast_memo
         return eng
+
+    def _catalogs(self) -> _CatalogSnapshot:
+        """The catalog snapshot at the catalogs' current version, built
+        under the lock so concurrent engine() calls share one. A snapshot
+        it replaces is unpersisted: an engine still holding its frames
+        recomputes them from lineage."""
+        tables = {"metrics": self.metrics, "series": self.series, "index": self.index}
+        with self._snapshot_lock:
+            # Read BEFORE the scans resolve their SSTs: a write landing in
+            # between bumps its counter after changing the manifest, so the
+            # next call sees a new version and rebuilds, where reading it
+            # after could key a snapshot that misses the write.
+            version = tuple(t.manifest.mutations for t in tables.values())
+            old = self._snapshot
+            if old is not None:
+                if old.version == version:
+                    return old
+                # released before the new frames persist: a catalog the
+                # change did not touch plans the same scan, and unpersisting
+                # the old frame afterwards would drop their shared entry
+                old.release()
+            frames, parts = [], {}
+            for name, table in tables.items():
+                scan = table.scan(ScanRequest(ordered=False))
+                parts[name] = partitions_for(scan)
+                frames.append(scan.coalesce(parts[name]).persist())
+            snap = self._snapshot = _CatalogSnapshot(version, *frames)
+        log.debug(
+            "MetricStore %s catalog snapshot %s at version %s, partitions %s",
+            self.root, "replaced" if old is not None else "built", version, parts,
+            extra={"catalog_snapshot": {
+                "root": self.root, "version": version, "partitions": parts,
+                "replaced": old is not None,
+            }},
+        )
+        return snap

@@ -904,14 +904,168 @@ def test_ingest_failing_before_series_write_is_retried(
 
 
 def test_series_broadcast_memo_cleared_only_when_series_grow(spark, tmp_path):
+    """The engines' series-broadcast decision lives in the store's catalog
+    snapshot: decided by the first labeled query, kept while the catalogs
+    do not change, and re-decided once a new series replaces the
+    snapshot."""
     store = MetricStore(spark, str(tmp_path / "memo2"), HOUR)
     store.ingest(_hosts(spark, "ab", 1000))
-    store.engine().select_series("cpu", with_labels=True)
-    assert store._series_bcast_memo
+    eng = store.engine()
+    eng.select_series("cpu", with_labels=True)
+    memo = eng._series_broadcast_memo
+    assert memo and memo is store._snapshot.series_broadcast_memo
     store.ingest(_hosts(spark, "ab", 2000))  # known series: memo kept
-    assert store._series_bcast_memo
-    store.ingest(_hosts(spark, "abc", 3000))  # a new series: memo cleared
-    assert store._series_bcast_memo == {}
+    assert store.engine()._series_broadcast_memo is memo and memo
+    store.ingest(_hosts(spark, "abc", 3000))  # a new series: re-decided
+    assert store.engine()._series_broadcast_memo == {}
+
+
+def _answers(store):
+    """label_values and labeled select_series through a new engine."""
+    eng = store.engine()
+    values = {r.tag_value for r in eng.label_values("cpu", "host").collect()}
+    rows = {(r.series_key, r.ts_ms) for r in
+            eng.select_series("cpu", with_labels=True).collect()}
+    return values, rows
+
+
+def test_catalog_snapshot_follows_every_catalog_change(spark, tmp_path):
+    """engine() serves the catalogs from one persisted snapshot per catalog
+    version: a known-series ingest keeps it, while a new series, a
+    compaction of the series table and a delete plus restore each replace
+    it, the next engine() answers with the new state, and the replaced
+    snapshot is unpersisted, so one snapshot stays cached."""
+    from horaedb_spark.storage.compaction import Compactor, SchedulerConfig
+
+    spark.catalog.clearCache()
+    store = MetricStore(spark, str(tmp_path / "snap"), HOUR)
+    store.ingest(_hosts(spark, "ab", 1000))
+    ab = {("host=a", 1000), ("host=b", 1000)}
+    assert _answers(store) == (set("ab"), ab)
+    snaps = [store._snapshot]
+
+    store.ingest(_hosts(spark, "ab", 2000))  # known series
+    ab |= {("host=a", 2000), ("host=b", 2000)}
+    assert _answers(store) == (set("ab"), ab)
+    assert store._snapshot is snaps[-1]
+
+    def changed(want):
+        assert _answers(store) == want
+        assert store._snapshot is not snaps[-1]
+        snaps.append(store._snapshot)
+
+    store.ingest(_hosts(spark, "abc", 3000))  # a new series
+    abc = ab | {("host=a", 3000), ("host=b", 3000), ("host=c", 3000)}
+    changed((set("abc"), abc))
+
+    Compactor(store.series, SchedulerConfig(input_sst_min_num=2)).run_all()
+    assert len(store.series.manifest.all_ssts()) == 1
+    changed((set("abc"), abc))
+
+    keep = {t: max(s.file_id for s in getattr(store, t).manifest.all_ssts())
+            for t in ("series", "index")}
+    store.series.delete(F.col("series_key") == "host=c")
+    store.index.delete(F.col("tag_value") == "c")
+    dropped = (abc - {("host=c", 3000)}) | {(None, 3000)}
+    changed((set("ab"), dropped))
+    for t, fid in keep.items():
+        getattr(store, t).restore(fid)
+    changed((set("abc"), abc))
+
+    # releasing the current snapshot empties the cache, so no replaced
+    # snapshot's frame stayed cached beside it
+    current = snaps.pop()
+    assert all(df.storageLevel.useMemory
+               for df in (current.metrics, current.series, current.index))
+    current.release()
+    assert _cache_is_empty(spark)
+
+
+def test_catalog_snapshot_survives_a_cleared_cache(spark, tmp_path):
+    """Clearing the session's cache between queries costs the snapshot its
+    cached rows, not its answers: engines recompute them from lineage."""
+    store = MetricStore(spark, str(tmp_path / "cleared"), HOUR)
+    store.ingest(_hosts(spark, "ab", 1000))
+    eng = store.engine()
+    want = _answers(store)
+    spark.catalog.clearCache()
+    rows = {(r.series_key, r.ts_ms) for r in
+            eng.select_series("cpu", with_labels=True).collect()}
+    assert rows == want[1]
+    assert _answers(store) == want
+    spark.catalog.clearCache()
+    store.ingest(_hosts(spark, "abc", 2000))
+    assert _answers(store) == (set("abc"), want[1] | {
+        ("host=a", 2000), ("host=b", 2000), ("host=c", 2000)})
+
+
+def test_catalog_snapshot_build_and_replace_are_logged(spark, tmp_path, caplog):
+    store = MetricStore(spark, str(tmp_path / "snaplog"), HOUR)
+    store.ingest(_hosts(spark, "a", 1000))
+    with caplog.at_level(logging.DEBUG, logger="horaedb_spark.metric.store"):
+        store.engine()
+        store.engine()  # same catalogs: no new snapshot
+        store.ingest(_hosts(spark, "ab", 2000))
+        store.engine()
+    recs = [r.catalog_snapshot for r in caplog.records
+            if hasattr(r, "catalog_snapshot")]
+    assert [r["replaced"] for r in recs] == [False, True]
+    assert recs[0]["version"] != recs[1]["version"] == store._snapshot.version
+    assert all(r["root"] == store.root for r in recs)
+    assert recs[1]["partitions"] == {"metrics": 1, "series": 1, "index": 1}
+
+
+def test_engines_racing_a_new_series_ingest_see_every_series_key(spark, tmp_path):
+    """Threads building engines and running labeled queries while another
+    thread ingests new series: each engine's catalogs are at least as new
+    as its data, so no row joins to a null series_key, and nothing
+    raises."""
+    import sys
+    import threading
+
+    store = MetricStore(spark, str(tmp_path / "race"), HOUR)
+    store.ingest(_hosts(spark, "a", 1000))
+    new = [f"n{i}" for i in range(4)]
+    stop = threading.Event()
+    errors, answers = [], []
+
+    def read(i):
+        try:
+            while not stop.is_set():
+                eng = store.engine()
+                answers.append(eng.select_series("cpu", with_labels=True).collect())
+        except Exception as e:  # reported below, with the thread
+            errors.append((f"reader {i}", e))
+
+    def write():
+        try:
+            for i, h in enumerate(new):
+                store.ingest(_hosts(spark, ["a", h], 2000 + i))
+        except Exception as e:
+            errors.append(("writer", e))
+        finally:
+            stop.set()
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        # more threads than local[4] cores
+        threads = [threading.Thread(target=read, args=(i,)) for i in range(5)]
+        threads.append(threading.Thread(target=write))
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        stop.set()
+        sys.setswitchinterval(prev)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert answers
+    assert all(r.series_key is not None for rows in answers for r in rows)
+    keys = {r.series_key for r in
+            store.engine().select_series("cpu", with_labels=True).collect()}
+    assert keys == {f"host={h}" for h in ["a", *new]}
 
 
 def test_concurrent_ingests_on_one_handle_keep_every_series(spark, tmp_path):

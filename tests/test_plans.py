@@ -162,6 +162,55 @@ def test_bounded_selector_pushes_time_range_to_scan(spark, tmp_path):
     ]
 
 
+def _outside_cached(plan: str) -> str:
+    """The plan text without the subtrees under ``InMemoryRelation``: the
+    plan that filled a cache, which a query reading the cache does not
+    run."""
+    out, depth = [], None
+    for line in plan.splitlines():
+        indent = len(line) - len(line.lstrip(" :|+-"))
+        if depth is not None and indent > depth:
+            continue
+        depth = indent if "InMemoryRelation" in line else None
+        out.append(line)
+    return "\n".join(out)
+
+
+def test_store_query_reads_catalogs_from_the_snapshot(spark, tmp_path):
+    """A mirror-backed instant query reads the series and index catalogs
+    from the store's persisted snapshot: no merge-on-read dedup window on
+    (__segment__, metric_id, tsid) runs, and the series side of the label
+    join is an InMemoryTableScan."""
+    from horaedb_spark.metric.promql import PromQLCompiler
+    from horaedb_spark.metric.store import MetricStore
+
+    store = MetricStore(spark, str(tmp_path / "ms"), 3_600_000, data_buckets=2)
+    store.ingest(spark.createDataFrame(
+        [("cpu", {"host": h}, t * 1000, float(t), t)
+         for h in "ab" for t in range(0, 600, 10)],
+        "name string, labels map<string,string>, ts_ms long, value double, "
+        "seq long",
+    ))
+    eng = store.engine()
+
+    def query():
+        return PromQLCompiler(
+            eng, 60_000, 120_000, start_ms=300_000, end_ms=300_000
+        ).compile('cpu{host="a"}')
+
+    query().collect()  # fills the snapshot
+    df = query()
+    assert [(r.series_key, r.ts_ms, r.value) for r in df.collect()] == [
+        ("host=a", 300_000, 300.0)
+    ]
+    plan = _outside_cached(plan_of(df))
+    dedup = [w for w in re.findall(r"\bWindow \[.*", plan) if "__segment__" in w]
+    assert not dedup, plan[:4000]
+    final = plan.split("== Initial Plan ==")[0]
+    assert re.search(r"InMemoryTableScan \[tsid#\d+L, series_key#", final), final
+    assert "InMemoryRelation" in plan_of(df)  # the cache the helper skipped
+
+
 def test_ivf_cell_partitioning_prunes_scan(spark, tmp_path):
     """The SCALING.md claim made concrete: a corpus written partitioned by
     IVF cell id turns candidate generation into partition pruning — a query

@@ -1310,7 +1310,8 @@ def test_materialized_bounded_base(spark, tmp_path, monkeypatch):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
     # store-backed engines bound on the stored metric_id column with ONE
-    # In predicate over the hashed names, pushed into the parquet scan
+    # In predicate over the hashed names: pushed into the data's parquet
+    # scan, and applied to the index in the store's catalog snapshot
     import re
 
     from horaedb_spark.metric.store import MetricStore
@@ -1345,7 +1346,12 @@ def test_materialized_bounded_base(spark, tmp_path, monkeypatch):
         p for p in plans
         if re.search(r"PushedFilters: \[[^\n]*In\(metric_id", p)
     ]
-    assert len(pushed_in) >= 2, plans
+    snapshot_in = [
+        p for p in plans
+        if re.search(r"InMemoryTableScan \[metric_id#\d+L, tag_key#[^\n]*\], "
+                     r"\[metric_id#\d+L IN \(", p)
+    ]
+    assert pushed_in and snapshot_in, plans
     assert sorted(r.value for r in sclone.data.collect()) == [0.0, 1.0]
 
     # an engine that already is a materialized() clone is served as-is by
