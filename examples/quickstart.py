@@ -175,7 +175,7 @@ def main() -> None:
         bucket_spec=BucketSpec(8, ("user_id",)),
     )
     bt.bulk_ingest(ev.limit(10_000), "ts_ms")
-    served = bt.bucketed_scan()  # auto-refreshes the catalog mirror
+    served = bt.bucketed_scan()  # builds the catalog mirror on first use
     per_user = served.groupBy("user_id").count()  # no exchange on the fact side
     print("bucketed mirror users:", per_user.count())
 

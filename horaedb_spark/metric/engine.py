@@ -134,6 +134,17 @@ class MetricEngine:
         self.data = model.build_data_table(samples)
         self._flat: DataFrame | None = None
 
+    def current(self) -> "MetricEngine":
+        """The engine a query should run on now, the one resolution point
+        for long-lived engines (``PromQLCompiler`` and ``ControlServer``
+        call it). A store-backed engine answers the store's engine at the
+        store's current version, memoized: while the store is unchanged
+        that is the engine itself, and no frame is rebuilt. An engine whose
+        frames are its own (samples-backed, ``materialized()`` clones)
+        answers itself."""
+        follow = self.__dict__.get("_follow")
+        return self if follow is None else follow()
+
     def _series_join_side(self) -> DataFrame:
         """``series (tsid, series_key)`` prepared for a data-side join,
         broadcast-hinted per ``_series_broadcast_hint``."""

@@ -706,7 +706,9 @@ class PromQLCompiler:
         start_ms: int | None = None,
         end_ms: int | None = None,
     ):
-        self.engine = engine
+        # a long-lived store-backed engine resolves to the store's current
+        # one (its frozen SST list may have been compacted away)
+        self.engine = engine if engine is None else engine.current()
         self.step_ms = step_ms
         # staleness lookback for bare instant selectors. Prometheus fixes
         # this at 5m; a bucketed engine evaluating at arbitrary steps

@@ -132,7 +132,9 @@ class MetricStore:
         exchange-free — the Spark-first analogue of the reference serving
         reads from compacted SSTs rather than re-merging per query
         (executor.rs:155-222). Pick the count for the target scale
-        (buckets ≈ cluster cores at the final size)."""
+        (buckets ≈ cluster cores at the final size). The mirror refreshes
+        on a background thread; ``close()`` (or ``with MetricStore(...)``)
+        waits for it."""
         self.spark = spark
         self.root = root
         self.pack_ms = pack_ms
@@ -204,6 +206,8 @@ class MetricStore:
         # under the lock when the catalogs' manifests have moved
         self._snapshot: _CatalogSnapshot | None = None
         self._snapshot_lock = threading.Lock()
+        # serializes MetricEngine.current() resolutions (see _current())
+        self._current_lock = threading.Lock()
         # The catalog keys this handle read back (see ingest()):
         # ({(metric_id, tsid)}, {(metric_id, field_id, field_type)}), valid
         # only while _catalog_identity() still equals _known_at and reset to
@@ -507,10 +511,12 @@ class MetricStore:
 
         The data frame is the packed scan, so never ask ``engine()`` for
         the mirror path: on a ``data_buckets`` store that would run a
-        mirror freshness check (and, right after an ingest, a refresh
-        WRITE job) whose served frame is discarded one line later."""
+        mirror freshness check (and, right after an ingest, schedule a
+        background refresh) for a served frame discarded one line later.
+        ``current()`` follows the store with another packed engine."""
         eng = self.engine(time_range, from_mirror=False)
         eng.data = self.packed_scan(time_range)
+        self._track(eng, eng._at_version, lambda: self.packed_engine(time_range))
         return eng
 
     # ------------------------------------------------------------------- read
@@ -531,8 +537,12 @@ class MetricStore:
         selection prunes catalog partitions on ``__segment__`` (the same
         granularity as manifest SST pruning — SSTs never span segments),
         and aggregations whose keys include ``tsid`` run exchange-free.
-        The first engine() after an ingest triggers an incremental mirror
-        refresh (only the touched partitions rewrite).
+        No engine() writes once the mirror exists: the segments an ingest
+        touched since the last refresh are read merge-on-read from their
+        SSTs (only they pay the dedup window), the rest from the mirror,
+        and the mirror's background refresher rewrites the stale
+        partitions off the query path (storage/bucketed.py). Only a store
+        whose mirror does not exist yet builds it inside this call.
 
         ``metrics``, ``series`` and ``index`` come from the store's catalog
         snapshot (``_catalogs()``): one persisted copy of each merged
@@ -540,31 +550,22 @@ class MetricStore:
         handle, so queries stop re-running the catalogs' dedup window. Any
         catalog write, compaction, delete, restore or manifest re-sync
         moves the version, and the next engine() builds a new snapshot.
-        An engine's catalog rows are frozen when it is created, as its data
-        scan's SST list is."""
+
+        An engine's frames are frozen when it is created: its catalog rows,
+        and its data scan's SST list. ``eng.current()`` is the store's
+        engine at the store's current version (the four tables' manifests
+        plus the mirror's meta writes), memoized, so an unchanged store
+        answers ``eng`` itself. ``PromQLCompiler`` and ``ControlServer``
+        resolve it, so a long-lived engine follows ingests, compactions
+        (which delete the SSTs an old engine reads) and landed mirror
+        refreshes."""
+        version = self._engine_version()
         eng = MetricEngine.__new__(MetricEngine)
         eng.samples = None
         eng._flat = None
         # Live serving-version source for response caches (server.py
-        # _serving_version): a tuple of the backing tables' manifest
-        # mutation counters. Any ingest bumps at least one, so a cache
-        # keyed on this recomputes after writes — necessary because a
-        # mirror-backed engine's catalog scan re-resolves files per action
-        # (data CAN change under a long-lived engine object).
-        # Local counters catch THIS instance's ingests exactly; the data
-        # manifest's durable token (memoized ≤1s) additionally catches
-        # writes from OTHER instances over the same root — a sample lands
-        # in the data table on every ingest, so its log identity moves
-        # whenever any writer commits (review r12: without it, a cached
-        # response over a shared mirror never invalidated cross-instance).
-        eng._version_fn = lambda: (
-            id(self),
-            self.data.manifest.mutations,
-            self.series.manifest.mutations,
-            self.metrics.manifest.mutations,
-            self.index.manifest.mutations,
-            self.data.manifest.durable_token(),
-        )
+        # _serving_version); see _data_version().
+        eng._version_fn = self._data_version
         if from_mirror is None:
             from_mirror = self.data.bucket_spec is not None
         if from_mirror:
@@ -602,7 +603,68 @@ class MetricStore:
         eng.metrics, eng.series, eng.index = snap.metrics, snap.series, snap.index
         eng.tags = eng.index.select("metric_id", "tag_key", "tag_value").distinct()
         eng._series_broadcast_memo = snap.series_broadcast_memo
+        self._track(eng, version, lambda: self.engine(time_range, from_mirror))
         return eng
+
+    def _data_version(self) -> tuple:
+        """A tuple of the backing tables' manifest mutation counters. Any
+        ingest bumps at least one, so a cache keyed on this recomputes
+        after writes. Local counters catch THIS instance's ingests
+        exactly; the data manifest's durable token (memoized ≤1s)
+        additionally catches writes from OTHER instances over the same
+        root — a sample lands in the data table on every ingest, so its
+        log identity moves whenever any writer commits (review r12:
+        without it, a cached response over a shared mirror never
+        invalidated cross-instance)."""
+        return (
+            id(self),
+            self.data.manifest.mutations,
+            self.series.manifest.mutations,
+            self.metrics.manifest.mutations,
+            self.index.manifest.mutations,
+            self.data.manifest.durable_token(),
+        )
+
+    def _engine_version(self) -> tuple:
+        """``_data_version()`` plus the data mirror's meta writes: a landed
+        refresh changes which segments an engine reads from the mirror,
+        not the rows it answers."""
+        mirror = self.data._bucketed
+        return (*self._data_version(), 0 if mirror is None else mirror.meta_version)
+
+    def _track(self, eng: MetricEngine, version: tuple, rebuild) -> None:
+        """Make ``eng.current()`` follow this store: ``eng`` was built at
+        ``version``, and ``rebuild()`` builds its like at the current one."""
+        eng._at_version = version
+        eng._latest = eng
+        eng._follow = lambda: self._current(eng, rebuild)
+
+    def _current(self, eng: MetricEngine, rebuild) -> MetricEngine:
+        """``eng``'s latest resolution, rebuilt when the store's version
+        has moved past it. Under one lock, so concurrent resolutions of
+        one engine share one rebuild."""
+        with self._current_lock:
+            if eng._latest._at_version != self._engine_version():
+                eng._latest = rebuild()
+            return eng._latest
+
+    def close(self) -> None:
+        """Wait for the data mirror's background refresher, then release
+        the catalog snapshot. Idempotent, and called on leaving a
+        ``with MetricStore(...) as store:`` block. The handle stays usable:
+        its next engine() builds a new snapshot."""
+        if self.data._bucketed is not None:
+            self.data._bucketed.join()
+        with self._snapshot_lock:
+            if self._snapshot is not None:
+                self._snapshot.release()
+                self._snapshot = None
+
+    def __enter__(self) -> "MetricStore":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
 
     def _catalogs(self) -> _CatalogSnapshot:
         """The catalog snapshot at the catalogs' current version, built

@@ -889,12 +889,14 @@ class ControlServer:
                 self._qr_cache.popitem(last=False)
 
     def _query_engine(self):
-        """The engine the read API serves: the attached static engine, or
-        (remote-write mode) a fresh engine over the write sink's current
-        contents. The derived frames are lazy — construction is cheap and
-        every query sees the latest committed SSTs."""
+        """The engine the read API serves: the attached engine resolved to
+        its current one (a store-backed engine follows its store, see
+        ``MetricEngine.current``), or (remote-write mode) a fresh engine
+        over the write sink's current contents. The derived frames are
+        lazy — construction is cheap and every query sees the latest
+        committed SSTs."""
         if self.metric_engine is not None:
-            return self.metric_engine
+            return self.metric_engine.current()
         if self.write_table is None:
             return None
         # Serve the DURABLE state, not this handle's memoized view: another

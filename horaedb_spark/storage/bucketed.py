@@ -18,13 +18,29 @@ exactly the read-optimized-view split Hudi/Iceberg make; the mirror is the
 serving copy, the SSTs stay the source of truth.
 
 Freshness + incremental maintenance: the mirror records, per segment, a
-digest of the live SST ids that produced it (plus the BucketSpec — a spec
-change forces a full rebuild). ``refresh()`` rewrites ONLY the partitions
-whose SST set changed — DROP PARTITION then one append-mode ``insertInto``
-job over their union (NOT dynamic partition overwrite, which skips
-partitions absent from the incoming data and would leave a fully-deleted
-segment serving stale rows) — and drops partitions whose segment
-disappeared (TTL). The initial build is the only full-table write.
+digest of the live SST ids that produced it (plus the BucketSpec and the
+table schema: a change of either forces a full rebuild). A partition is
+FRESH while its stored digest equals its segment's live digest.
+``refresh()`` rewrites ONLY the stale partitions — DROP PARTITION then one
+append-mode ``insertInto`` job over their union (NOT dynamic partition
+overwrite, which skips partitions absent from the incoming data and would
+leave a fully-deleted segment serving stale rows) — and drops partitions
+whose segment disappeared (TTL). The initial build is the only full-table
+write.
+
+Serving never writes once the mirror exists. ``serve()`` returns the fresh
+partitions unioned with a merge-on-read scan of the stale segments' SSTs
+(Hudi's and Iceberg's snapshot view over their read-optimized one; the
+scan alone when no partition is fresh), leaves out partitions whose
+segment is gone, and hands the stale segments to the mirror's one
+background refresher: a thread that runs ``refresh()`` under the mirror's
+lock, off the query path (Structured Streaming's incremental
+maintenance). A serve that finds it running sets one re-run flag; a failed
+refresh is logged and the next stale serve schedules it again. With every
+partition fresh the served frame is exactly ``spark.table(name)``. Only a
+missing mirror, or a spec or schema change, is built (or re-registered)
+inline: an engine created on an empty mirror would otherwise serve the
+whole table merge-on-read for as long as it lives.
 
 Compaction RE-KEYS instead of rewriting: a compaction task merges a
 segment's SSTs into one SST, and the segment's merged rows are the same
@@ -63,14 +79,19 @@ from __future__ import annotations
 
 import hashlib
 import json
+import logging
 import os
 import shutil
 import threading
 from dataclasses import dataclass
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from horaedb_spark.core.timeutil import TimeRange, truncate_by
+
+log = logging.getLogger(__name__)
 
 
 def _is_missing_file_error(e: Exception) -> bool:
@@ -144,6 +165,15 @@ class BucketedMirror:
         # rebuild() calls refresh(), and Compactor holds it across its
         # manifest swap and rekey()
         self.lock = threading.RLock()
+        # bumped by every meta write of refresh()/rekey(): a serving version
+        # for callers that pick between this mirror and merge-on-read
+        # (MetricEngine.current())
+        self.meta_version = 0
+        # the one background refresher (serve()) and its re-run flag,
+        # both guarded by _refresher_lock
+        self._refresher: threading.Thread | None = None
+        self._rerun = False
+        self._refresher_lock = threading.Lock()
         self.name = (
             "bkt_"
             + hashlib.md5(os.path.abspath(table.root).encode()).hexdigest()[:16]
@@ -306,10 +336,17 @@ class BucketedMirror:
         mismatch and does a full rebuild."""
         stored = self._stored()
         return (
+            self._layout_current(stored)
+            and stored["segments"] == self._live_digests()
+        )
+
+    def _layout_current(self, stored: dict) -> bool:
+        """The catalog table exists and was built under this BucketSpec and
+        table schema, as the ``stored`` meta records."""
+        return (
             self._exists()
             and stored.get("spec") == self._spec_json()
             and stored.get("schema") == self._schema_token()
-            and stored["segments"] == self._live_digests()
         )
 
     # ---------------------------------------------------------- refresh
@@ -399,6 +436,7 @@ class BucketedMirror:
                     self._meta_path, json.dumps(meta_out)
                 )
                 self._stored_memo = meta_out
+                self.meta_version += 1
                 return stats
             full = self._segments_frame([int(s) for s in sorted(live, key=int)])
             (
@@ -496,6 +534,7 @@ class BucketedMirror:
         meta_out = self._meta_json(live)
         self.table.backend.put_text(self._meta_path, json.dumps(meta_out))
         self._stored_memo = meta_out
+        self.meta_version += 1
         return stats
 
     def _meta_json(self, segments: dict[str, str]) -> dict:
@@ -557,18 +596,101 @@ class BucketedMirror:
             }
             self.table.backend.put_text(self._meta_path, json.dumps(meta_out))
             self._stored_memo = meta_out
+            self.meta_version += 1
             return True
 
     # ------------------------------------------------------------ serve
 
     def serve(self, auto_refresh: bool = True) -> DataFrame:
         """The bucketed frame (user columns + ``__segment__`` for partition
-        pruning). With ``auto_refresh=False`` a stale mirror raises instead
-        of silently serving old data."""
-        if not self.is_fresh():
-            if not auto_refresh:
-                raise RuntimeError(
-                    f"bucketed mirror {self.name} is stale; call refresh()"
-                )
+        pruning), the merged rows of every live segment. Never writes once
+        the mirror exists: stale segments are read merge-on-read from their
+        SSTs, unioned with the fresh partitions, and handed to the
+        background refresher. A missing mirror, or one built under another
+        spec or schema, is built inline. With ``auto_refresh=False`` a
+        stale mirror raises instead."""
+        from horaedb_spark.storage.table import SEGMENT_COLUMN
+
+        spark = self.table.spark
+        stored = self._stored()
+        built = self._layout_current(stored)
+        if built:
+            live, segments = self._live_digests(), stored["segments"]
+            stale = sorted((s for s in live if segments.get(s) != live[s]), key=int)
+            gone = sorted((s for s in segments if s not in live), key=int)
+            if not stale and not gone:
+                return spark.table(self.name)
+        if not auto_refresh:
+            raise RuntimeError(
+                f"bucketed mirror {self.name} is stale; call refresh()"
+            )
+        if not built:
             self.refresh()
-        return self.table.spark.table(self.name)
+            return spark.table(self.name)
+        refresher = self._schedule_refresh()
+        log.debug(
+            "bucketed mirror %s: %d fresh partitions, stale segments %s read "
+            "merge-on-read, refresher %s",
+            self.table.root, len(live) - len(stale), stale, refresher,
+            extra={"mirror_serve": {
+                "root": self.table.root, "fresh": len(live) - len(stale),
+                "stale": [int(s) for s in stale], "refresher": refresher,
+            }},
+        )
+        mirror = spark.table(self.name)
+        fresh = mirror.filter(
+            ~F.col(SEGMENT_COLUMN).isin([int(s) for s in stale + gone])
+        )
+        if not stale:
+            return fresh
+        merged = self._segments_frame([int(s) for s in stale]).select(*mirror.columns)
+        # with every live segment stale the mirror has no row to add
+        return merged if len(stale) == len(live) else fresh.unionByName(merged)
+
+    # -------------------------------------------------------- refresher
+
+    def _schedule_refresh(self) -> str:
+        """Start the background refresher, or, when it is running, set its
+        re-run flag. Returns ``"started"`` or ``"running"``."""
+        with self._refresher_lock:
+            if self._refresher is not None:
+                self._rerun = True
+                return "running"
+            # InheritableThread: in pinned-thread mode its JVM-side thread
+            # is released with it
+            self._refresher = InheritableThread(
+                target=self._refresh_in_background, daemon=True
+            )
+            self._refresher.start()
+            return "started"
+
+    def _refresh_in_background(self) -> None:
+        # its own job group, not the one inherited from the query that
+        # scheduled it: cancelling that query must not cancel the refresh
+        self.table.spark.sparkContext.setJobGroup(
+            f"refresh-{self.name}", f"background refresh of {self.table.root}"
+        )
+        while True:
+            try:
+                self.refresh()
+            except Exception:  # noqa: BLE001 — logged; serve() re-schedules
+                log.warning(
+                    "background refresh of bucketed mirror %s failed; stale "
+                    "segments keep being served merge-on-read and the next "
+                    "serve() schedules it again",
+                    self.table.root,
+                    exc_info=True,
+                )
+            with self._refresher_lock:
+                if not self._rerun:
+                    self._refresher = None
+                    return
+                self._rerun = False
+
+    def join(self) -> None:
+        """Wait until the background refresher, if one runs, has finished
+        (its re-runs included)."""
+        with self._refresher_lock:
+            refresher = self._refresher
+        if refresher is not None:
+            refresher.join()

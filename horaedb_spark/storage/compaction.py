@@ -416,8 +416,9 @@ class Compactor:
             # deleted, so a mirror failure must not make the task report as
             # failed (the except above would unmark ids that no longer
             # exist, and a retry would scan deleted paths). A skipped
-            # refresh self-heals — serve() detects staleness via is_fresh
-            # and refreshes on the next read.
+            # refresh self-heals: serve() reads the stale segments
+            # merge-on-read and hands them to the mirror's background
+            # refresher.
             if mirror is not None:
                 try:
                     if new_sst is not None:
@@ -428,12 +429,13 @@ class Compactor:
                 except Exception:
                     # warning, not stderr print: a driver running many
                     # compaction tasks must be able to surface REPEATED
-                    # refresh failures (each leaves serve()'s auto_refresh
-                    # re-attempting a full refresh on every read) through
-                    # log routing
+                    # refresh failures (each leaves the segments served
+                    # merge-on-read until a background refresh lands)
+                    # through log routing
                     log.warning(
                         "bucketed mirror refresh deferred after compaction of "
-                        "%s; serve() will retry on next read",
+                        "%s; serve() reads the stale segments merge-on-read "
+                        "and schedules a background refresh",
                         self.table.root,
                         exc_info=True,
                     )

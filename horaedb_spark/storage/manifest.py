@@ -314,19 +314,31 @@ class Manifest:
     def _refresh(self) -> None:
         """Re-read the log after losing a conditional-put race: pick up
         concurrent writers' deltas. Runtime-only ``in_compaction`` flags are
-        preserved for files still live."""
-        flags = {fid for fid, s in self._ssts.items() if s.in_compaction}
-        self._ssts, self._folded_through, self._next_delta_id, _ = self._load_log()
-        for fid in flags:
-            if fid in self._ssts:
-                self._ssts[fid] = replace(self._ssts[fid], in_compaction=True)
-        self.max_file_id = max(self.max_file_id, max(self._ssts, default=-1))
-        # Bump AFTER the dict mutations: a concurrent reader (the background
-        # fold thread memoizes digests keyed on this counter) that races the
-        # refresh then memoizes under the OLD counter and this bump
-        # invalidates it; bumping first would let it cache pre-refresh
-        # digests under the post-refresh key — fresh-forever staleness.
-        self.mutations += 1
+        preserved for files still live.
+
+        Holds the update lock: a re-read racing ``update()`` (a mirror
+        refresher re-syncing while a batch commits) would otherwise install
+        a log view from before the batch's delta over the dict the batch
+        just added its SSTs to."""
+        with self._lock:
+            before = self._ssts
+            flags = {fid for fid, s in self._ssts.items() if s.in_compaction}
+            self._ssts, self._folded_through, self._next_delta_id, _ = self._load_log()
+            for fid in flags:
+                if fid in self._ssts:
+                    self._ssts[fid] = replace(self._ssts[fid], in_compaction=True)
+            self.max_file_id = max(self.max_file_id, max(self._ssts, default=-1))
+            # A re-read that finds the live set unchanged is no mutation:
+            # engine versions and response caches key on this counter, and
+            # a mirror refresh re-syncs before every write.
+            # Bump AFTER the dict mutations: a concurrent reader (the
+            # background fold thread memoizes digests keyed on this counter)
+            # that races the refresh then memoizes under the OLD counter and
+            # this bump invalidates it; bumping first would let it cache
+            # pre-refresh digests under the post-refresh key — fresh-forever
+            # staleness.
+            if self._ssts != before:
+                self.mutations += 1
 
     def _apply_delta(self, delta: dict) -> None:
         for d in delta.get("to_adds", []):

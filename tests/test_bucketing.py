@@ -467,6 +467,7 @@ def test_bucketed_mirror_tracks_dml_and_random_ops(spark, tmp_path):
     w([(1, 100, 1.5)], 0)                       # post-compaction overwrite
     t.delete("k = 6")                           # delete a whole segment's rows
 
+    t.refresh_bucketed()  # serve() would read the stale segments merge-on-read
     got = sorted(map(tuple, t.bucketed_scan().select("k", "ts_ms", "v").collect()))
     want = sorted(map(tuple, t.scan().select("k", "ts_ms", "v").collect()))
     assert got == want
@@ -1083,3 +1084,156 @@ def test_mirror_multiwriter_ttl_interleaving_soak(spark, tmp_path):
     sa = sorted((r.k, r.ts_ms, r.v) for r in a.scan().collect())
     sb = sorted((r.k, r.ts_ms, r.v) for r in b.scan().collect())
     assert sa == sb
+
+
+# ------------------------------------- stale segments served merge-on-read
+
+
+def _mirror_plan(df) -> str:
+    df.collect()  # finalize the adaptive plan
+    return df._jdf.queryExecution().executedPlan().toString().split(
+        "== Initial Plan =="
+    )[0]
+
+
+def test_stale_mirror_serves_merge_on_read_without_writing(spark, tmp_path):
+    """Once the mirror exists, serve() never writes: after an overwrite, a
+    DELETE tombstone and a brand-new segment it returns the fresh
+    partitions unioned with a merge-on-read scan of the stale segments,
+    row-equal to scan(), and the background refresher brings the mirror
+    up to date. The dedup Window sits only above the stale segments' SST
+    scan; the fresh partitions come from the mirror's table scan. With
+    every segment stale the merge-on-read scan is served alone."""
+    import re
+
+    from horaedb_spark.core.timeutil import TimeRange
+    from horaedb_spark.storage.table import WriteRequest
+
+    t = _mk_table(spark, tmp_path, "bt_hybrid")
+    t.write(WriteRequest(_rows(spark, [(1, 100, 1.0), (2, 200, 2.0)]), TimeRange(0, 1000)))
+    t.write(WriteRequest(_rows(spark, [(3, 1100, 3.0), (4, 1200, 4.0)]), TimeRange(1000, 2000)))
+    t.bucketed_scan()  # the missing mirror is built inline
+    assert t.bucketed.is_fresh()
+    mirror = t.bucketed.name
+
+    steps = [
+        lambda: t.write(WriteRequest(_rows(spark, [(1, 100, 9.0)]), TimeRange(0, 1000))),
+        lambda: t.delete("k = 3"),
+        lambda: t.write(WriteRequest(_rows(spark, [(5, 2500, 5.0)]), TimeRange(2000, 3000))),
+    ]
+    for step in steps:
+        step()
+        with pytest.raises(RuntimeError, match="stale"):
+            t.bucketed_scan(auto_refresh=False)
+        served = t.bucketed_scan()
+        got = sorted(map(tuple, served.select("k", "ts_ms", "v").collect()))
+        want = sorted(map(tuple, t.scan().select("k", "ts_ms", "v").collect()))
+        assert got == want
+        plan = _mirror_plan(served)
+        assert "Union" in plan, plan[:3000]
+        assert len(re.findall(r"\bWindow \[", plan)) == 1, plan[:3000]
+        # the Window's subtree scans SST paths; the mirror branch reads
+        # the catalog table with the stale segments pruned away
+        window_subtree = plan.split("Window [", 1)[1]
+        assert f"spark_catalog.default.{mirror}" not in window_subtree, plan[:3000]
+        assert re.search(
+            rf"spark_catalog\.default\.{mirror}.*PartitionFilters: \[[^\]]*NOT ",
+            plan,
+        ), plan[:3000]
+        t.bucketed.join()
+        assert t.bucketed.is_fresh()
+        fresh = t.bucketed_scan()
+        assert "Window" not in _mirror_plan(fresh)
+        assert sorted(map(tuple, fresh.select("k", "ts_ms", "v").collect())) == want
+    # every live segment stale: the merge-on-read scan alone
+    for seg in (0, 1000, 2000):
+        t.write(WriteRequest(_rows(spark, [(7, seg + 700, 7.0)]), TimeRange(seg, seg + 1000)))
+    served = t.bucketed_scan()
+    got = sorted(map(tuple, served.select("k", "ts_ms", "v").collect()))
+    assert got == sorted(map(tuple, t.scan().select("k", "ts_ms", "v").collect()))
+    plan = _mirror_plan(served)
+    assert "Union" not in plan and f"spark_catalog.default.{mirror}" not in plan, plan[:3000]
+    t.bucketed.join()
+    _assert_bucketed_self_join_no_exchange(spark, t)
+
+
+def test_stale_mirror_leaves_out_a_segment_that_is_gone(spark, tmp_path):
+    """A segment the mirror stores but the manifest no longer holds (TTL
+    expiry by another handle that keeps no mirror) is left out of the
+    served frame until the refresher drops its partition."""
+    from horaedb_spark.core.timeutil import TimeRange
+    from horaedb_spark.storage.compaction import Compactor, SchedulerConfig
+    from horaedb_spark.storage.table import ColumnarTable, WriteRequest
+
+    t = _mk_table(spark, tmp_path, "bt_gone")
+    t.write(WriteRequest(_rows(spark, [(1, 100, 1.0)]), TimeRange(0, 1000)))
+    t.write(WriteRequest(_rows(spark, [(2, 1500, 2.0)]), TimeRange(1000, 2000)))
+    t.refresh_bucketed()
+    plain = ColumnarTable(spark, t.root, t.schema, 1000)  # no mirror upkeep
+    Compactor(plain, SchedulerConfig(input_sst_min_num=999, ttl_ms=1)).run_once(
+        now_ms=1002
+    )
+    assert {s.time_range.start for s in plain.manifest.all_ssts()} == {1000}
+    t.manifest._refresh()
+    assert "0" in t.bucketed._stored()["segments"]
+    got = sorted(map(tuple, t.bucketed_scan().select("k", "ts_ms", "v").collect()))
+    assert got == [(2, 1500, 2.0)]
+    t.bucketed.join()
+    assert t.bucketed.is_fresh()
+    assert sorted(map(tuple, t.bucketed_scan().select("k", "ts_ms", "v").collect())) == got
+
+
+def test_failed_background_refresh_is_logged_and_rescheduled(spark, tmp_path, caplog):
+    """A background refresh that fails logs a warning with its traceback;
+    the stale rows are still served merge-on-read, and the next serve()
+    schedules the refresh again. Each serve of a stale mirror emits one
+    debug record naming its fresh and stale partitions and the
+    refresher's state."""
+    import logging
+    import threading
+
+    from horaedb_spark.core.timeutil import TimeRange
+    from horaedb_spark.storage.table import WriteRequest
+
+    t = _mk_table(spark, tmp_path, "bt_fail")
+    t.write(WriteRequest(_rows(spark, [(1, 100, 1.0)]), TimeRange(0, 1000)))
+    t.write(WriteRequest(_rows(spark, [(2, 1500, 2.0)]), TimeRange(1000, 2000)))
+    t.refresh_bucketed()
+    t.write(WriteRequest(_rows(spark, [(3, 1600, 3.0)]), TimeRange(1000, 2000)))
+    mirror = t.bucketed
+    real = mirror._refresh_locked
+    release = threading.Event()
+
+    def failing():
+        release.wait(timeout=60)
+        raise OSError("injected refresh failure")
+
+    mirror._refresh_locked = failing
+    want = sorted(map(tuple, t.scan().select("k", "ts_ms", "v").collect()))
+    caplog.clear()
+    with caplog.at_level(logging.DEBUG, logger="horaedb_spark.storage.bucketed"):
+        first = t.bucketed_scan()
+        second = t.bucketed_scan()  # while the refresher is still running
+        release.set()
+        mirror.join()
+    serves = [r.mirror_serve for r in caplog.records if hasattr(r, "mirror_serve")]
+    assert serves == [
+        {"root": t.root, "fresh": 1, "stale": [1000], "refresher": "started"},
+        {"root": t.root, "fresh": 1, "stale": [1000], "refresher": "running"},
+    ]
+    warnings = [r for r in caplog.records if r.levelno == logging.WARNING]
+    # the re-run flag the second serve set runs the refresh once more
+    assert len(warnings) == 2 and all(r.exc_info for r in warnings), warnings
+    assert "injected refresh failure" in caplog.text
+    assert not mirror.is_fresh()
+    for df in (first, second, t.bucketed_scan()):
+        assert sorted(map(tuple, df.select("k", "ts_ms", "v").collect())) == want
+    mirror.join()
+    del mirror._refresh_locked
+    assert mirror._refresh_locked == real
+    t.bucketed_scan()  # re-schedules the refresh
+    mirror.join()
+    assert mirror.is_fresh()
+    got = t.bucketed_scan()
+    assert "Window" not in _mirror_plan(got)
+    assert sorted(map(tuple, got.select("k", "ts_ms", "v").collect())) == want

@@ -1168,3 +1168,219 @@ def test_ingest_keeps_a_caller_persisted_frame_cached(spark, tmp_path):
     assert _cache_is_empty(spark)
     out = store.engine().select_series("cpu", [Matcher("host", "=", "b")])
     assert sorted(r.ts_ms for r in out.collect()) == [1000, 2000]
+
+
+# --------------------------- read-after-write: stale segments, current()
+
+
+def _cpu(spark, hours, seq, value=None):
+    """Two cpu series, one sample per 10 minutes in each of ``hours``."""
+    return _samples(spark, [
+        ("cpu", {"host": h}, hr * HOUR + m * 600_000,
+         float(value if value is not None else hr * 10 + m), seq)
+        for hr in hours for h in ("a", "b") for m in range(6)
+    ])
+
+
+def _rows_of(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_stale_store_engine_equals_merge_on_read(spark, tmp_path):
+    """The first engine() on a store without a mirror builds it inline and
+    serves it with no dedup Window. Later engines serve the segments an
+    ingest made stale merge-on-read: after an overwrite at a higher seq,
+    a DELETE tombstone, a TTL-expired segment and a brand-new segment,
+    the engine's rows equal engine(from_mirror=False)'s. The dedup Window
+    sits only above the stale segments' SST scan; the fresh partitions
+    are read from the mirror's catalog table."""
+    import re
+
+    from horaedb_spark.storage.compaction import Compactor, SchedulerConfig
+
+    with MetricStore(spark, str(tmp_path / "ms"), HOUR, data_buckets=2) as store:
+        store.ingest(_cpu(spark, [0, 1, 2], 1))
+        first = store.engine()
+        assert store.data.bucketed.is_fresh()
+        assert "Window" not in first.data._jdf.queryExecution().executedPlan().toString()
+
+        def expire_hour_0():
+            # another handle, one that keeps no mirror, expires hour 0
+            other = MetricStore(spark, store.root, HOUR)
+            Compactor(other.data, SchedulerConfig(input_sst_min_num=999, ttl_ms=1)
+                      ).run_once(now_ms=HOUR + 2)
+            store.data.manifest._refresh()
+
+        for i, step in enumerate((
+            lambda: store.ingest(_cpu(spark, [1], 2, value=99.0)),      # overwrite
+            lambda: store.data.delete(F.col("ts_ms") == 2 * HOUR),      # tombstone
+            expire_hour_0,                                              # TTL
+            lambda: store.ingest(_cpu(spark, [5], 3)),                  # new segment
+        )):
+            step()
+            assert not store.data.bucketed.is_fresh(), i
+            eng = store.engine()
+            assert _rows_of(eng.data) == _rows_of(store.engine(from_mirror=False).data)
+            plan = eng.data._jdf.queryExecution().executedPlan().toString()
+            plan = plan.split("== Initial Plan ==")[0]
+            windows = len(re.findall(r"\bWindow \[", plan))
+            # the TTL step leaves nothing stale, only a partition to leave out
+            assert windows == (0 if i == 2 else 1), plan[:3000]
+            if windows:
+                assert "spark_catalog" not in plan.split("Window [", 1)[1], plan[:3000]
+            # the fresh partitions are read from the mirror's catalog table
+            assert "FileScan parquet spark_catalog.default.bkt_" in plan, plan[:3000]
+            store.data.bucketed.join()
+            assert store.data.bucketed.is_fresh()
+        assert {r.ts_ms // HOUR for r in eng.data.collect()} == {1, 2, 5}
+
+
+def test_queries_race_ingest_and_background_refresh(spark, tmp_path):
+    """Threads run queries while a writer ingests and the refresher runs.
+    Every answer equals the merge-on-read answer at its engine's version,
+    and no query fails on a missing file. The writer lands each batch in
+    a new segment; each query reads up to the newest sample its engine
+    saw."""
+    import threading
+
+    from horaedb_spark.metric.promql import PromQLCompiler
+
+    step = 600_000
+    with MetricStore(spark, str(tmp_path / "ms"), HOUR, data_buckets=2) as store:
+        store.ingest(_cpu(spark, [0], 1))
+        store.engine()  # builds the mirror
+        state = threading.Lock()  # an engine pair sees one store version
+        done = threading.Event()
+        answers, errors = [], []
+
+        def writer():
+            try:
+                for hr in range(1, 6):
+                    with state:
+                        store.ingest(_cpu(spark, [hr], hr + 1))
+            except Exception as e:  # noqa: BLE001 — asserted below
+                errors.append(e)
+            finally:
+                done.set()
+
+        def reader():
+            try:
+                while not done.is_set() or len(answers) < 6:
+                    with state:
+                        eng = store.engine()
+                        ref = store.engine(from_mirror=False)
+                        at = ref.data.agg(F.max("ts_ms")).first()[0]
+                        frames = [
+                            PromQLCompiler(e, step, step, start_ms=0, end_ms=at)
+                            .compile("sum by (host) (cpu)")
+                            for e in (eng, ref)
+                        ]
+                    got, want = (_rows_of(df) for df in frames)
+                    answers.append((at, got == want))
+            except Exception as e:  # noqa: BLE001 — asserted below
+                errors.append(e)
+
+        threads = [threading.Thread(target=writer)] + [
+            threading.Thread(target=reader) for _ in range(2)
+        ]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=600)
+        assert not any(th.is_alive() for th in threads)
+        assert errors == [], errors
+        assert answers and all(ok for _at, ok in answers), answers
+        assert max(at for at, _ok in answers) == 5 * HOUR + 5 * step
+
+
+def test_long_lived_engine_follows_the_store(spark, tmp_path):
+    """An engine kept across an ingest, a catalog snapshot replacement and
+    a compaction of all four tables still answers through
+    ``PromQLCompiler``: ``current()`` resolves it to the store's engine at
+    the current version (its own frames read SSTs the compaction
+    deleted). An unchanged store resolves to the same engine, and an
+    engine created while segments were stale switches to the mirror once
+    the refresher lands."""
+    from horaedb_spark.metric.promql import PromQLCompiler
+    from horaedb_spark.storage.compaction import Compactor, SchedulerConfig
+
+    with MetricStore(spark, str(tmp_path / "ms"), HOUR, data_buckets=2) as store:
+        store.ingest(_cpu(spark, [0, 1], 1))
+        eng = store.engine()
+        assert eng.current() is eng.current()
+        store.ingest(_samples(spark, [("cpu", {"host": "c"}, HOUR + 3_000_000, 7.0, 2)]))
+        stale = store.engine()  # a new catalog snapshot; hour 1 is stale
+        for t in (store.metrics, store.series, store.index, store.data):
+            Compactor(t, SchedulerConfig(input_sst_min_num=2)).run_all()
+        store.data.bucketed.join()
+
+        def answer(e):
+            at = HOUR + 3_000_000  # the last scrape of hour 1
+            return _rows_of(PromQLCompiler(e, 600_000, HOUR, start_ms=at, end_ms=at)
+                            .compile("sum by (host) (cpu)"))
+
+        want = answer(store.engine(from_mirror=False))
+        assert [k for k, _t, _v in want] == ["host=a", "host=b", "host=c"]
+        assert answer(eng) == want
+        now = eng.current()
+        assert now is not eng and now.current() is now and eng.current() is now
+        assert stale.current() is not stale
+        assert "Window" not in now.data._jdf.queryExecution().executedPlan().toString()
+        assert store.engine(from_mirror=False).current().data.count() == 25
+        # samples-backed engines and materialized() clones are their own
+        from horaedb_spark.metric.engine import MetricEngine
+
+        own = MetricEngine(_cpu(spark, [0], 1))
+        assert own.current() is own
+        clone = now.materialized({"cpu"})
+        assert clone.current() is clone
+
+
+def test_server_engine_follows_the_store(spark, tmp_path):
+    """The server variant: a ControlServer holding an engine across an
+    ingest, a snapshot replacement and a compaction keeps answering."""
+    import json
+    import urllib.parse
+    import urllib.request
+
+    from horaedb_spark.server import ControlServer
+    from horaedb_spark.storage.compaction import Compactor, SchedulerConfig
+
+    with MetricStore(spark, str(tmp_path / "ms"), HOUR, data_buckets=2) as store:
+        store.ingest(_cpu(spark, [0, 1], 1))
+        srv = ControlServer(Compactor(store.data, SchedulerConfig()),
+                            metric_engine=store.engine())
+        srv.start()
+        try:
+            store.ingest(_samples(spark, [("cpu", {"host": "c"}, HOUR + 3_000_000, 7.0, 2)]))
+            store.engine()
+            for t in (store.metrics, store.series, store.index, store.data):
+                Compactor(t, SchedulerConfig(input_sst_min_num=2)).run_all()
+            q = urllib.parse.quote("sum by (host) (cpu)")
+            body = json.loads(urllib.request.urlopen(
+                f"http://127.0.0.1:{srv.port}/api/v1/query?query={q}"
+                f"&time={(HOUR + 3_000_000) / 1000}&step=600", timeout=60,
+            ).read())
+        finally:
+            srv.stop()
+        assert body["status"] == "success", body
+        hosts = sorted(s["metric"]["host"] for s in body["data"]["result"])
+        assert hosts == ["a", "b", "c"]
+
+
+def test_close_joins_the_refresher_and_releases_the_snapshot(spark, tmp_path):
+    """close() waits for the background refresher and unpersists the
+    catalog snapshot; it is idempotent and the handle stays usable."""
+    store = MetricStore(spark, str(tmp_path / "ms"), HOUR, data_buckets=2)
+    store.ingest(_cpu(spark, [0], 1))
+    store.engine()
+    store.ingest(_cpu(spark, [0], 2, value=5.0))
+    store.engine()  # schedules the refresher
+    snap = store._snapshot
+    assert snap.series.is_cached
+    store.close()
+    assert store.data.bucketed._refresher is None and store.data.bucketed.is_fresh()
+    assert store._snapshot is None and not snap.series.is_cached
+    store.close()
+    assert {r.value for r in store.engine().data.collect()} == {5.0}
+    store.close()
